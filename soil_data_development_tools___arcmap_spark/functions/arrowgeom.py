@@ -9,43 +9,49 @@ cell for the even-odd ray-cast fold in the rasterizer. Per guide §4
 boundary, not per-row Python), this module re-expresses exactly those
 refines as ``mapInArrow`` kernels over whole record batches: the data
 crosses the JVM↔Python boundary once per batch as Arrow columns, and
-the arithmetic runs as vectorized numpy int64/float64 array ops.
+the arithmetic runs as vectorized numpy int64/float64 array ops. They
+are the only production path for those refines; the Column forms
+survive only as references inside the parity tests
+(tests/test_round13opt.py).
 
-EXACTNESS CONTRACT — these kernels are drop-in replacements whose
-results are bit-identical to the Column formulations they replace:
+EXACTNESS CONTRACT — the kernels reproduce the Column formulations
+they replaced:
 
-- The ray-cast kernels (``filter_points_in_edges``,
-  ``inventory_cells``) reproduce ``geometry.point_in_edges``'s
-  cross-multiplied crossing test in pure int64 arithmetic — the same
-  comparisons on the same integers, so every containment decision
-  (including a center exactly ON an edge, where the upward-strict /
-  downward-inclusive asymmetry of the Column test decides) is
-  identical. ``inventory_cells`` additionally converts the per-cell
-  test into a per-(scanline, edge) interval bound — the round-13
-  scanline rasterization — via exact integer floor division; the
-  derivation is in ``_SCANLINE_PROOF`` below and pinned by
-  tests/test_round13opt.py against the Column form over adversarial
-  geometry (holes, multipart, on-edge centers).
+- The scanline kernel (``inventory_cells``) reproduces
+  ``geometry.point_in_edges``'s cross-multiplied crossing test in pure
+  int64 arithmetic — the same comparisons on the same integers, so
+  every containment decision (including a center exactly ON an edge,
+  where the upward-strict / downward-inclusive asymmetry of the Column
+  test decides) is identical. It converts the per-cell test into a
+  per-(scanline, edge) interval bound via exact integer floor
+  division; the derivation is in ``_SCANLINE_PROOF`` below and pinned
+  against the Column form over adversarial geometry (holes,
+  multipart, on-edge centers). Coordinates must be ≥ 0:
+  ``raster.polygon_cell_inventory`` raises on a negative vertex
+  before the kernel runs.
 - The clip kernel (``overlay_clip_rect``) replays
   ``geometry._clip_halfplane``'s four half-plane passes with the same
   IEEE-754 double operations in the same order (the interpolation
-  ``t = (b - a)/(p - a)``, ``o = a + (p - a) * t``), accumulates the
+  ``t = (b - a)/(p - a)``, ``o = a + (p - a) * t``) and accumulates the
   shoelace fold in index order exactly like ``F.aggregate`` (padding
   adds +0.0, an exact identity — the accumulator can never be -0.0
-  because it starts at +0.0), and rounds with HALF_UP like Spark's
-  ``round``. For the integer-grid overlay queries every intermediate
-  is an exactly-represented integer, so any residual rounding-mode
-  corner (ties at .5 on non-integral values) is unreachable; the
-  parity tests cover general rings too.
+  because it starts at +0.0). The final round is ``floor(x + 0.5)``,
+  not Spark's decimal HALF_UP: the two differ on doubles whose
+  ``+ 0.5`` rounds across the tie (0.49999999999999994 gives 1 here,
+  0 in Spark). ACCEPTED DEVIATION — unreachable on the integer-grid
+  overlay queries, where every intermediate is an exactly-represented
+  integer; the parity tests cover general rings away from that
+  corner.
 
 POLICY (PLANS.md §"Known costs, accepted" updated r13): these are the
 third sanctioned Python-boundary family after the media codecs and the
 UDTF demo. They ship ONLY the columns the refine needs (guide §4.1 —
-an explicit select precedes every mapInArrow), declare their output
-schema from the input schema, and chunk the ragged expansions so peak
-kernel memory is bounded regardless of batch size. Kill switch:
-``spark.graft.geom.kernel=column`` restores the pure-Column plan
-(default ``arrow``); the parity tests run both paths.
+an explicit select precedes every mapInArrow) and declare their output
+schema from the input schema. ``inventory_cells`` chunks its ragged
+expansions so its peak memory is bounded regardless of batch size;
+``overlay_clip_rect`` is NOT row-chunked — it pads every ring of a
+batch to (rows x longest ring) float64 lanes, so one long ring widens
+the whole batch (fine for the 4-vertex overlay layers it serves).
 
 FAULT TOLERANCE: unchanged — mapInArrow tasks recompute from lineage
 like any narrow transformation.
@@ -83,24 +89,6 @@ identical to folding the per-cell test, for every cell including
 centers exactly on an edge (no "never edge-incident" assumption is
 needed: the strict/non-strict asymmetry is carried by the -1).
 """
-
-
-def kernel_enabled() -> bool:
-    """True when the session selects the Arrow kernels (the default).
-    ``spark.conf.set("spark.graft.geom.kernel", "column")`` restores
-    the pure-Column plans — the A/B switch the parity tests drive and
-    the kill switch for an executor image without numpy."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return True
-    try:
-        return (
-            spark.conf.get("spark.graft.geom.kernel", "arrow") != "column"
-        )
-    except Exception:
-        return True
 
 
 def _seg_arange(counts):
@@ -303,95 +291,7 @@ def _scan_tiles(np, c0, c1, r0, r1, ni, nj, ne, eoff, xa, ya, xb, yb,
 
 
 # ---------------------------------------------------------------------------
-# 2. per-pair ray cast (point-in-polygon joins)
-# ---------------------------------------------------------------------------
-
-
-def filter_points_in_edges(
-    df: DataFrame,
-    edges_col: str,
-    px_col: str,
-    py_col: str,
-    out_cols: list[str],
-) -> DataFrame:
-    """Keep the rows whose (px, py) probe lies inside the row's edge
-    array by the even-odd rule — the mapInArrow twin of
-    ``.where(point_in_edges(edges, px, py) == 1)`` with bit-identical
-    decisions (same int64 comparisons, vectorized over the whole
-    batch; guide §4.2). Emits only ``out_cols``, so the edge arrays
-    die at the boundary instead of riding through the filter."""
-    import pyarrow as pa
-
-    extra = [
-        c for c in (edges_col, px_col, py_col) if c not in out_cols
-    ]
-    sel = df.select(*out_cols, *extra)
-    in_names = [f.name for f in sel.schema.fields]
-    idx = {n: i for i, n in enumerate(in_names)}
-    type_of = {f.name: f.dataType.simpleString() for f in sel.schema.fields}
-    out_schema = ", ".join(f"{c} {type_of[c]}" for c in out_cols)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            px = (batch.column(idx[px_col])
-                  .to_numpy(zero_copy_only=False).astype("int64"))
-            py = (batch.column(idx[py_col])
-                  .to_numpy(zero_copy_only=False).astype("int64"))
-            ne, (xa, ya, xb, yb) = _list_int64_parts(
-                batch.column(idx[edges_col]), "xa", "ya", "xb", "yb"
-            )
-            inside = np.zeros(n, dtype=bool)
-            # chunk the ragged (row x edge) expansion
-            lanes = np.maximum(ne, 1)
-            cum = np.cumsum(lanes)
-            eoff = np.zeros(n, dtype=np.int64)
-            np.cumsum(ne[:-1], out=eoff[1:])
-            lo = 0
-            budget = 4_000_000
-            while lo < n:
-                base = cum[lo - 1] if lo else 0
-                hi = int(np.searchsorted(cum, base + budget, side="left"))
-                hi = max(hi + 1, lo + 1) if hi < n else n
-                m = hi - lo
-                nloc = ne[lo:hi]
-                tot = int(nloc.sum())
-                if tot:
-                    rloc = np.repeat(np.arange(m, dtype=np.int64), nloc)
-                    eg = eoff[lo:hi][rloc] + _seg_arange(nloc)
-                    pcy = py[lo:hi][rloc]
-                    pcx = px[lo:hi][rloc]
-                    exa, eya = xa[eg], ya[eg]
-                    exb, eyb = xb[eg], yb[eg]
-                    dy = eyb - eya
-                    crossing = (eya > pcy) != (eyb > pcy)
-                    counts = (
-                        ((pcx - exa) * dy < (exb - exa) * (pcy - eya))
-                        == (dy > 0)
-                    ) & crossing
-                    acc = np.bincount(
-                        rloc[counts], minlength=m
-                    )
-                    inside[lo:hi] = (acc % 2).astype(bool)
-                lo = hi
-            if not inside.any():
-                continue
-            take = pa.array(np.nonzero(inside)[0])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(idx[c]).take(take) for c in out_cols],
-                out_cols,
-            )
-
-    return sel.mapInArrow(fn, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# 3. Sutherland–Hodgman rect clip (overlay joins)
+# 2. Sutherland–Hodgman rect clip (overlay joins)
 # ---------------------------------------------------------------------------
 
 
@@ -456,9 +356,10 @@ def _clip_pass(np, X, Y, k, bound, axis_is_x, keep_ge):
 
 
 def _shoelace_round(np, X, Y, k):
-    """round(|shoelace fold|) exactly as ring_area2x + F.round: terms
-    in index order (wraparound edge included), left-fold accumulation,
-    <3 vertices → 0, HALF_UP round to int64."""
+    """round(|shoelace fold|) as ring_area2x + F.round: terms in
+    index order (wraparound edge included), left-fold accumulation,
+    <3 vertices → 0, floor(x + 0.5) to int64 (HALF_UP except on the
+    corner the module docstring records)."""
     n, L = X.shape
     lane = np.arange(L, dtype=np.int64)[None, :]
     nxt = lane + 1
@@ -550,7 +451,7 @@ def overlay_clip_rect(
     Sutherland–Hodgman clip of the pre-parsed A ring by B's rect
     window (same four passes, same double ops as
     ``clip_ring_pts_to_rect``), doubled-area shoelace with Spark's
-    fold order and HALF_UP round, keep pairs with ``ov_a2x > 0``.
+    fold order and half-up round, keep pairs with ``ov_a2x > 0``.
     With ``emit_wkt`` additionally serializes the normalized clipped
     ring exactly like ``ring_to_wkt(normalize_ring(c))``. Output:
     ``out_cols`` + [clip_wkt] + ov_a2x."""

@@ -576,6 +576,7 @@ def minhash_lsh_pairs(
     its fault-tolerance consequences)."""
     ex_all = None
     if reuse_shingles:
+        # eager -> lazy on purpose (r13): same results, built by its first job
         ex_all = _materialize(
             _explode_ss(shingle_sets(_spread(df, id_col), id_col, col, k)),
         )

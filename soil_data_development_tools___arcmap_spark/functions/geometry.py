@@ -176,7 +176,7 @@ def clip_ring_to_rect(
 ) -> Column:
     """Polygon ∩ axis-aligned AOI rectangle — the geometric core of the
     reference's clip tool (gSSURGO_Clip.py:160, arcpy.Clip_analysis;
-    point_in_ring covers only the select-by-location half). Classic
+    point_in_geom covers only the select-by-location half). Classic
     Sutherland–Hodgman against the four AOI half-planes, expressed as
     four chained Column array passes over the parsed WKT exterior ring
     (no UDF, stays in codegen): returns the clipped OPEN ring as
@@ -265,67 +265,6 @@ def clip_area2x_rect_pts(
     ).cast("long")
 
 
-def all_rings_coords(wkt: str | Column) -> Column:
-    """ALL rings of a WKT ``POLYGON ((ext...), (hole...), ...)`` as
-    ``array<array<struct<x:double,y:double>>>`` — ring 0 is the
-    exterior, the rest are interior holes; the closing vertex of each
-    ring is DROPPED (open-ring form, what the clip passes consume)."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-    body = F.regexp_replace(
-        F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1), r"^\(|\)$", ""
-    )
-    return F.transform(
-        F.split(body, r"\)\s*,\s*\("),
-        lambda ring: _let(
-            F.transform(
-                F.split(ring, r",\s*"),
-                lambda p: F.struct(
-                    F.split(F.trim(p), r"\s+").getItem(0).cast("double").alias("x"),
-                    F.split(F.trim(p), r"\s+").getItem(1).cast("double").alias("y"),
-                ),
-            ),
-            lambda cc: F.slice(cc, 1, F.size(cc) - 1),
-        ),
-    )
-
-
-def clip_area2x_rect_holes(
-    wkt: str | Column, xmin, ymin, xmax, ymax
-) -> Column:
-    """Doubled polygon∩AOI area for polygons WITH interior rings
-    (lakes — common in real SSURGO mapunit polygons): clip every ring
-    independently against the AOI and subtract the holes' clipped
-    areas from the exterior's. Valid because each hole lies inside the
-    exterior, so its AOI intersection lies inside the exterior's AOI
-    intersection — areas subtract exactly (no partial-overlap terms).
-    Same Sutherland–Hodgman passes per ring, same quantization
-    contract as ``clip_area2x_rect``."""
-
-    def clip_ring(r: Column) -> Column:
-        out = _clip_halfplane(r, "x", xmin, keep_ge=True)
-        out = _clip_halfplane(out, "x", xmax, keep_ge=False)
-        out = _clip_halfplane(out, "y", ymin, keep_ge=True)
-        return _clip_halfplane(out, "y", ymax, keep_ge=False)
-
-    areas = F.transform(
-        all_rings_coords(wkt), lambda r: ring_area2x(clip_ring(r))
-    )
-    return F.round(
-        _let(
-            areas,
-            lambda a: a[0]
-            - F.coalesce(
-                F.aggregate(
-                    F.slice(a, 2, F.greatest(F.size(a) - 1, F.lit(0))),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                F.lit(0.0),
-            ),
-        )
-    ).cast("long")
-
-
 def _ring_pts(ring_str: Column) -> Column:
     """One ring body string ``"x y, x y, ..."`` → OPEN ring
     ``array<struct<x:double,y:double>>`` (closing vertex dropped)."""
@@ -344,13 +283,15 @@ def _ring_pts(ring_str: Column) -> Column:
 def _rings_clip_area2x(rings_body: Column, xmin, ymin, xmax, ymax) -> Column:
     """Clipped doubled area of one polygon given its ring-body strings
     (element 0 = exterior, rest = holes): clip each ring, subtract the
-    holes' clipped areas from the exterior's."""
+    holes' clipped areas from the exterior's. Valid because each hole
+    lies inside the exterior, so its AOI intersection lies inside the
+    exterior's AOI intersection — areas subtract exactly (no
+    partial-overlap terms)."""
 
     def clip_ring(r: Column) -> Column:
-        out = _clip_halfplane(_ring_pts(r), "x", xmin, keep_ge=True)
-        out = _clip_halfplane(out, "x", xmax, keep_ge=False)
-        out = _clip_halfplane(out, "y", ymin, keep_ge=True)
-        return ring_area2x(_clip_halfplane(out, "y", ymax, keep_ge=False))
+        return ring_area2x(
+            clip_ring_pts_to_rect(_ring_pts(r), xmin, ymin, xmax, ymax)
+        )
 
     return _let(
         F.transform(rings_body, clip_ring),
@@ -483,7 +424,7 @@ def _rings_clip_area2x_convex(rings_body: Column, edges) -> Column:
     0 = exterior then holes) against a convex edge-list AOI: clip each
     ring, subtract the holes' clipped areas from the exterior's —
     exact because each hole's AOI intersection nests inside the
-    exterior's (same argument as ``clip_area2x_rect_holes``)."""
+    exterior's (same argument as ``_rings_clip_area2x``)."""
 
     def clip_ring(r: Column) -> Column:
         return ring_area2x(clip_ring_convex(_ring_pts(r), edges))
@@ -503,7 +444,7 @@ def clip_area2x_convex(wkt: str | Column, edges) -> Column:
     """Doubled polygon∩AOI area for an arbitrary CONVEX AOI polygon
     (edge list, CCW) over any ``POLYGON`` WKT with optional interior
     rings — the diagonal-boundary generalization of
-    ``clip_area2x_rect_holes``. One final round quantizes the ulp
+    ``clip_area2x_geom``. One final round quantizes the ulp
     noise general-edge intersections can carry."""
     c = F.col(wkt) if isinstance(wkt, str) else wkt
     rings = _let(
@@ -754,47 +695,6 @@ def bands_to_ring(bands: Column) -> Column:
     return _let(bands, run)
 
 
-def point_in_polygon(wkt: str | Column, px: Column, py: Column) -> Column:
-    """Point-in-polygon over ALL rings (even-odd rule summed across
-    exterior + holes, so a point inside a lake tests OUTSIDE — the
-    semantics ``point_in_ring`` approximates when holes exist; same
-    exact cross-multiplied crossing arithmetic, generalized to the
-    multi-ring parse). Map-only Column expression."""
-
-    def ring_crossings(r: Column) -> Column:
-        def one(c):
-            n = F.size(c)
-            return F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(0), n - 1),
-                    lambda i: F.when(
-                        (c[i]["y"] > py) != (c[(i + 1) % n]["y"] > py),
-                        F.when(
-                            (
-                                (px - c[i]["x"])
-                                * (c[(i + 1) % n]["y"] - c[i]["y"])
-                                < (c[(i + 1) % n]["x"] - c[i]["x"])
-                                * (py - c[i]["y"])
-                            )
-                            == (c[(i + 1) % n]["y"] > c[i]["y"]),
-                            F.lit(1),
-                        ).otherwise(F.lit(0)),
-                    ).otherwise(F.lit(0)),
-                ),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-
-        return _let(r, lambda c: F.when(F.size(c) < 3, F.lit(0)).otherwise(one(c)))
-
-    total = F.aggregate(
-        F.transform(all_rings_coords(wkt), ring_crossings),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return (total % 2 == 1).cast("int")
-
-
 def normalize_ring(ring: Column) -> Column:
     """Canonical form of an OPEN ring: drop consecutive duplicate
     vertices (wraparound included), drop collinear vertices (cross of
@@ -923,7 +823,7 @@ def ring_to_wkt(ring: Column) -> Column:
 def parse_geom_rings(wkt: str | Column) -> Column:
     """ALL rings of ALL parts of a WKT POLYGON / MULTIPOLYGON as
     ``array<array<struct<x:bigint,y:bigint>>>`` (open rings, closing
-    vertex dropped) — the parse half of ``point_in_geom`` split out so
+    vertex dropped) — the parse stage of ``point_in_geom``, public so
     row-multiplying consumers (the cell-inventory explode) parse each
     polygon ONCE and test containment per row against the parsed
     arrays instead of re-running regex/split/cast per cell.
@@ -981,55 +881,12 @@ def parse_geom_rings(wkt: str | Column) -> Column:
     )
 
 
-def point_in_rings(rings: Column, px: Column, py: Column) -> Column:
-    """Even-odd containment against PRE-PARSED rings
-    (``parse_geom_rings`` output) — the same exact cross-multiplied
-    crossing arithmetic as ``point_in_geom`` without the per-call WKT
-    parse. Map-only."""
-
-    def ring_crossings(cc: Column) -> Column:
-        def one(c2):
-            n = F.size(c2)
-            return F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(0), n - 1),
-                    lambda i: F.when(
-                        (c2[i]["y"] > py) != (c2[(i + 1) % n]["y"] > py),
-                        F.when(
-                            (
-                                (px - c2[i]["x"])
-                                * (c2[(i + 1) % n]["y"] - c2[i]["y"])
-                                < (c2[(i + 1) % n]["x"] - c2[i]["x"])
-                                * (py - c2[i]["y"])
-                            )
-                            == (c2[(i + 1) % n]["y"] > c2[i]["y"]),
-                            F.lit(1),
-                        ).otherwise(F.lit(0)),
-                    ).otherwise(F.lit(0)),
-                ),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-
-        return _let(
-            cc, lambda c2: F.when(F.size(c2) < 3, F.lit(0)).otherwise(one(c2))
-        )
-
-    total = F.aggregate(
-        F.transform(rings, ring_crossings),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return (total % 2 == 1).cast("int")
-
-
 def rings_to_edges(rings: Column) -> Column:
     """Flatten PRE-PARSED rings (``parse_geom_rings`` output) into one
     edge array ``array<struct<xa,ya,xb,yb:bigint>>`` (each ring closed
     by its wrap-around edge; degenerate <3-vertex rings contribute no
-    edges, matching ``point_in_rings``' size guard). Even-odd
-    containment is additive across rings, so one flat edge array
-    carries everything the crossing test needs.
+    edges). Even-odd containment is additive across rings, so one flat
+    edge array carries everything the crossing test needs.
 
     Split out (optimization r12) for the rasterizer's per-cell hot
     path: building the edge structs ONCE per polygon — before the
@@ -1067,9 +924,14 @@ def rings_to_edges(rings: Column) -> Column:
 
 def point_in_edges(edges: Column, px: Column, py: Column) -> Column:
     """Even-odd containment over a PRE-BUILT flat edge array
-    (``rings_to_edges``) — the exact cross-multiplied crossing
-    arithmetic of ``point_in_rings``, term for term, folded with one
-    ``aggregate`` pass (no per-cell index arithmetic). Map-only."""
+    (``rings_to_edges``) — the package's one crossing fold. Standard
+    even-odd rule, one +x ray: edge (a, b) crosses when
+    (ya > py) != (yb > py) and the intersection lies right of the
+    probe. The x-comparison is cross-multiplied — (px−xa)·(yb−ya)
+    versus (xb−xa)·(py−ya), orientation-corrected by the sign of
+    yb−ya — so with integral vertices the decision is exact BIGINT
+    arithmetic, no division, reproducible in any engine. One
+    ``aggregate`` pass, no per-cell index arithmetic. Map-only."""
     total = F.aggregate(
         edges,
         F.lit(0),
@@ -1091,60 +953,16 @@ def point_in_edges(edges: Column, px: Column, py: Column) -> Column:
 
 def point_in_geom(wkt: str | Column, px: Column, py: Column) -> Column:
     """Point-in-geometry over the FULL WKT surface — ``POLYGON`` (with
-    holes) or ``MULTIPOLYGON`` (multipart mapunits): the even-odd rule
-    is additive across rings, so summing ray crossings over ALL rings
-    of ALL parts gives containment for disjoint parts with holes in
-    one pass — no per-part dispatch needed. The flat ring parse strips
-    paren runs (``^\\(+|\\)+$``) and splits on ``\\)+, *\\(+`` so part
-    and ring boundaries flatten uniformly; the unanchored POLYGON
-    regex matches inside MULTIPOLYGON too. Same exact cross-multiplied
-    crossing arithmetic as ``point_in_ring`` (integral vertices +
-    non-edge-incident probes ⇒ exact BIGINT decisions). Map-only."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-    rings = F.split(
-        F.regexp_replace(
-            F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1),
-            r"^\(+|\)+$",
-            "",
-        ),
-        r"\)+\s*,\s*\(+",
-    )
-
-    def ring_crossings(ring_str: Column) -> Column:
-        def one(cc):
-            n = F.size(cc)
-            return F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(0), n - 1),
-                    lambda i: F.when(
-                        (cc[i]["y"] > py) != (cc[(i + 1) % n]["y"] > py),
-                        F.when(
-                            (
-                                (px - cc[i]["x"])
-                                * (cc[(i + 1) % n]["y"] - cc[i]["y"])
-                                < (cc[(i + 1) % n]["x"] - cc[i]["x"])
-                                * (py - cc[i]["y"])
-                            )
-                            == (cc[(i + 1) % n]["y"] > cc[i]["y"]),
-                            F.lit(1),
-                        ).otherwise(F.lit(0)),
-                    ).otherwise(F.lit(0)),
-                ),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-
-        return _let(
-            _ring_pts(ring_str),
-            lambda cc: F.when(F.size(cc) < 3, F.lit(0)).otherwise(one(cc)),
-        )
-
-    total = F.aggregate(
-        F.transform(rings, ring_crossings),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return (total % 2 == 1).cast("int")
+    holes) or ``MULTIPOLYGON`` (multipart mapunits) — the package's one
+    WKT-level containment entry point: ``point_in_edges`` over
+    ``rings_to_edges(parse_geom_rings(wkt))``. The even-odd rule is
+    additive across rings, so summing ray crossings over ALL rings of
+    ALL parts gives containment for disjoint parts with holes in one
+    pass — no per-part dispatch needed. Vertices must sit on the
+    integer grid (``parse_geom_rings`` raises otherwise); integral
+    vertices + non-edge-incident probes ⇒ exact BIGINT decisions.
+    Map-only."""
+    return point_in_edges(rings_to_edges(parse_geom_rings(wkt)), px, py)
 
 
 def linestring_stats(wkt: str | Column) -> Column:
@@ -1315,36 +1133,6 @@ def linestring_clip_len_e4(
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-
-
-def point_in_ring(wkt: str | Column, px: Column, py: Column) -> Column:
-    """Ray-casting point-in-polygon over the exterior WKT ring — the
-    select-by-location core of the clip tool (gSSURGO_Clip.py runs the
-    GIS's Clip/Select By Location; the containment TEST is portable).
-    Standard even-odd rule, one +x ray: edge (p1,p2) crosses when
-    (y1 > py) != (y2 > py) and the intersection lies right of the
-    point. The x-comparison is cross-multiplied — (px−x1)·(y2−y1)
-    versus (x2−x1)·(py−y1), orientation-corrected by the sign of
-    y2−y1 — so with integral vertices and a point that avoids edge
-    incidence the decision is exact BIGINT arithmetic, no division,
-    reproducible in any engine."""
-    coords = ring_coords(wkt)
-    crossings = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(coords) - 2, F.lit(0))),
-        lambda i: F.when(
-            (coords[i]["y"] > py) != (coords[i + 1]["y"] > py),
-            F.when(
-                (
-                    (px - coords[i]["x"]) * (coords[i + 1]["y"] - coords[i]["y"])
-                    < (coords[i + 1]["x"] - coords[i]["x"]) * (py - coords[i]["y"])
-                )
-                == (coords[i + 1]["y"] > coords[i]["y"]),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        ).otherwise(F.lit(0)),
-    )
-    total = F.aggregate(crossings, F.lit(0), lambda acc, v: acc + v)
-    return (total % 2 == 1).cast("int")
 
 
 # ---------------------------------------------------------------- round 12 --

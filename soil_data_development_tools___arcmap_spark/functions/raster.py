@@ -68,7 +68,7 @@ def polygon_cell_inventory(
     synthetic per-mukey cell inventory (round ≤10) with containment
     derived from the geometry itself.
 
-    Two-level explode, all Column expressions (no UDF, no shuffle):
+    Two-level explode, no shuffle:
 
     1. bbox → TILE explode: the polygon's vertex bbox (parsed from the
        WKT across all rings of all parts) snaps to a coarse tile grid
@@ -78,17 +78,20 @@ def polygon_cell_inventory(
        that spread across tasks instead of one task exploding an
        unbounded cell range — the same salt/tile discipline as
        ``banded_buckets`` in dedup.
-    2. tile → CELL explode: cells inside tile ∩ bbox (≤ tile_cells²
-       rows per input row, a hard per-row bound), keeping centers with
+    2. tile → CELL: cells inside tile ∩ bbox (≤ tile_cells² per input
+       row, a hard per-row bound) whose centers satisfy
        ``point_in_geom(wkt, cx, cy) = 1`` (even-odd across all rings,
-       so lake cells drop and multipart mapunits work in one pass).
+       so lake cells drop and multipart mapunits work in one pass),
+       computed by the mapInArrow scanline kernel
+       ``arrowgeom.inventory_cells`` rather than a per-cell fold.
 
     Exactness contract: with geometry vertices on the EVEN integer
     grid and an even ``cell_size``, centers land on ODD integers —
     never edge-incident — so every containment decision is exact
     BIGINT arithmetic (the same even-grid/odd-probe discipline as the
     select-by-location queries). Coordinates must be ≥ 0 (integral
-    truncating division = floor). Output: input columns (minus the
+    truncating division = floor): a negative vertex raises at runtime
+    instead of yielding wrong cells. Output: input columns (minus the
     WKT) + (tile_x, tile_y, col, row, cx, cy), one row per cell.
 
     ``redistribute=True`` adds ONE hash exchange on (tile_x, tile_y)
@@ -110,7 +113,7 @@ def polygon_cell_inventory(
     polygon silently serializes the whole rasterization onto one task
     unless the caller remembered the flag; pass an explicit bool to
     override the heuristic either way."""
-    from .geometry import parse_geom_rings, point_in_edges, rings_to_edges
+    from .geometry import parse_geom_rings, rings_to_edges
 
     half = cell_size // 2
     # parse the WKT ONCE per polygon (regex/split/cast) — every cell
@@ -123,13 +126,34 @@ def polygon_cell_inventory(
     pts = F.flatten(F.col("_rings"))
     xs = F.transform(pts, lambda p: p["x"])
     ys = F.transform(pts, lambda p: p["y"])
+
+    def first_index(vs: Column, axis: str) -> Column:
+        # the ≥ 0 contract fails LOUDLY (same raise_error pattern as
+        # parse_geom_rings' integer-grid contract, no extra job): the
+        # truncating divisions here and the scanline kernel's index
+        # math are floor only for non-negative coordinates
+        lo = F.array_min(vs)
+        return F.when(
+            lo < 0,
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "polygon_cell_inventory: negative " + axis
+                        + " coordinate "
+                    ),
+                    lo.cast("string"),
+                    F.lit(" (coordinates must be >= 0)"),
+                )
+            ).cast("long"),
+        ).otherwise(((lo - half + cell_size - 1) / cell_size).cast("long"))
+
     # candidate center indices: center(i) = i·cs + cs/2 ∈ [min, max]
     with_bbox = parsed.withColumn(
-        "_i0", ((F.array_min(xs) - half + cell_size - 1) / cell_size).cast("long")
+        "_i0", first_index(xs, "x")
     ).withColumn(
         "_i1", ((F.array_max(xs) - half) / cell_size).cast("long")
     ).withColumn(
-        "_j0", ((F.array_min(ys) - half + cell_size - 1) / cell_size).cast("long")
+        "_j0", first_index(ys, "y")
     ).withColumn(
         "_j1", ((F.array_max(ys) - half) / cell_size).cast("long")
     )
@@ -209,33 +233,10 @@ def polygon_cell_inventory(
     # scanline kernel — bit-identical cells (proof + parity tests:
     # functions/arrowgeom.py, tests/test_round13opt.py), ~O(scanlines
     # × edges + cells) int64 numpy work instead of one interpreted
-    # Catalyst aggregate per cell. spark.graft.geom.kernel=column
-    # restores the pure-Column plan below.
-    from .arrowgeom import inventory_cells, kernel_enabled
+    # Catalyst aggregate per cell.
+    from .arrowgeom import inventory_cells
 
-    if kernel_enabled():
-        return inventory_cells(tiles, cell_size, tile_cells)
-    cells = tiles.withColumn(
-        "col",
-        F.explode(seq(
-            F.greatest(F.col("_i0"), F.col("tile_x") * t),
-            F.least(F.col("_i1"), F.col("tile_x") * t + t - 1),
-        )),
-    ).withColumn(
-        "row",
-        F.explode(seq(
-            F.greatest(F.col("_j0"), F.col("tile_y") * t),
-            F.least(F.col("_j1"), F.col("tile_y") * t + t - 1),
-        )),
-    ).withColumn(
-        "cx", F.col("col") * cell_size + half
-    ).withColumn(
-        "cy", F.col("row") * cell_size + half
-    )
-    inside = cells.where(
-        point_in_edges(F.col("_edges"), F.col("cx"), F.col("cy")) == 1
-    )
-    return inside.drop("_edges", "_i0", "_i1", "_j0", "_j1")
+    return inventory_cells(tiles, cell_size, tile_cells)
 
 
 # --------------------------------------------------------------------

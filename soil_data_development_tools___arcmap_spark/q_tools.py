@@ -528,7 +528,7 @@ def clip_select_by_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over the parsed WKT ring. The oracle derives truth
     INDEPENDENTLY from the rectangle bounds, certifying the ray-cast
     parse + crossing logic end-to-end. Map-only: zero shuffles."""
-    from .functions.geometry import point_in_ring
+    from .functions.geometry import point_in_geom
 
     k = F.col("c_custkey")
     x0, y0 = (k % 100) * 2, (k % 57) * 2
@@ -550,7 +550,7 @@ def clip_select_by_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("okey"),
         px.alias("px"),
         py.alias("py"),
-        point_in_ring(wkt, px, py).alias("inside"),
+        point_in_geom(wkt, px, py).alias("inside"),
     )
 
 
@@ -624,11 +624,11 @@ def clip_polygon_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def clip_select_with_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Select-by-location with INTERIOR rings: a probe point inside a
     lake must test OUTSIDE (even-odd across all rings —
-    functions/geometry.py:point_in_polygon); clip_select_by_location
+    functions/geometry.py:point_in_geom); clip_select_by_location
     covers only the exterior test. Even-grid rectangle + hole, odd-grid
     probes (never edge-incident); oracle truth derived independently
     from the rectangle bounds: inside ext AND NOT inside hole."""
-    from .functions.geometry import point_in_polygon
+    from .functions.geometry import point_in_geom
 
     k = F.col("c_custkey")
     x0, y0 = (k % 100) * 2, (k % 57) * 2
@@ -662,7 +662,7 @@ def clip_select_with_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("okey"),
         px.alias("px"),
         py.alias("py"),
-        point_in_polygon(wkt, px, py).alias("inside"),
+        point_in_geom(wkt, px, py).alias("inside"),
     )
 
 
@@ -671,14 +671,14 @@ def clip_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     gSSURGO mapunit polygons routinely carry them; Clip_analysis
     handles them natively): every ring is clipped independently and
     the holes' clipped areas subtract from the exterior's
-    (functions/geometry.py:clip_area2x_rect_holes). Synthesis: the
+    (functions/geometry.py:clip_area2x_geom). Synthesis: the
     rectangle subjects of clip_polygon_intersect, with an interior
     hole punched when the exterior is big enough (w, h >= 3) — a
     third of customers get hole-less polygons, exercising the
     single-ring path through the multi-ring parser. The oracle is
     pure closed form: overlap(ext, AOI) − overlap(hole, AOI).
     Map-only, zero shuffles."""
-    from .functions.geometry import clip_area2x_rect_holes
+    from .functions.geometry import clip_area2x_geom
 
     k = F.col("c_custkey")
     x0, y0 = k % 100, k % 57
@@ -720,7 +720,7 @@ def clip_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
         (2 * w * h - hole_a2x).cast("long").alias("poly_a2x"),
-        clip_area2x_rect_holes(wkt, ax0, ay0, ax1, ay1).alias("clip_a2x"),
+        clip_area2x_geom(wkt, ax0, ay0, ax1, ay1).alias("clip_a2x"),
     )
 
 
@@ -1086,7 +1086,7 @@ def clip_acreage_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     float op count is group-count, not row-count). One scan, one
     shuffle, partial aggregation map-side; the oracle sums the same
     closed-form overlaps and converts identically."""
-    from .functions.geometry import acres_e4, clip_area2x_rect_holes
+    from .functions.geometry import acres_e4, clip_area2x_geom
 
     k = F.col("c_custkey")
     x0, y0 = k % 100, k % 57
@@ -1123,7 +1123,7 @@ def clip_acreage_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ay1 = ay0 + (k % 6 + 1).cast("double")
     per_poly = _t(spark, sf_dir, "customer").select(
         (k % 7).cast("int").alias("musym"),
-        clip_area2x_rect_holes(wkt, ax0, ay0, ax1, ay1).alias("a2x"),
+        clip_area2x_geom(wkt, ax0, ay0, ax1, ay1).alias("a2x"),
     )
     return per_poly.groupBy("musym").agg(
         F.count(F.lit(1)).alias("n_polys"),
@@ -2114,14 +2114,14 @@ def featpoint_select_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     gSSURGO_Clip.py's select-by-location applies to them like any
     layer): per-survey point report with AOI containment — POINT WKT
     parsed by Column regex, containment via the SAME generic
-    ray-casting expression the polygon layers use (point_in_ring
+    ray-casting expression the polygon layers use (point_in_geom
     against the constant AOI rectangle — odd-grid points, even-grid
     AOI: never edge-incident, exact BIGINT decisions). Output per
     areasymbol: point count, points inside the AOI, and the Σcx of
     inside points (certifying the coordinate parse, not just the
     flag). Oracle: direct bound comparisons on the synthesis formulas
     — no WKT, no ray cast."""
-    from .functions.geometry import point_in_ring
+    from .functions.geometry import point_in_geom
 
     k = F.col("c_custkey")
     px = (k % 100) * 2 + (k % 23) * 2 - 9
@@ -2142,7 +2142,7 @@ def featpoint_select_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("cy"),
     ).select(
         "areasymbol", "cx", "cy",
-        point_in_ring(F.lit(aoi), F.col("cx"), F.col("cy")).alias("inside"),
+        point_in_geom(F.lit(aoi), F.col("cx"), F.col("cy")).alias("inside"),
     )
     return pts.groupBy("areasymbol").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -2870,7 +2870,7 @@ def tile_survey_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
       (strict interval overlap — exact integer comparisons);
     - n_anchored: surveys whose interior probe point (odd coordinates,
       never tile-edge-incident) falls inside the tile's WKT ring via
-      the GENERAL ray-cast (point_in_ring) — the dedup rule that
+      the GENERAL ray-cast (point_in_edges) — the dedup rule that
       assigns each survey to exactly ONE owning tile so per-tile
       builds don't double-ingest;
     - the anchored areasymbol span the batch driver iterates.
@@ -2878,8 +2878,6 @@ def tile_survey_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact side streams map-only against 25 broadcast tiles
     (BroadcastNestedLoopJoin on the range predicate); tile counts are
     dimension-sized at any SF, surveys never shuffle."""
-    from .functions.geometry import point_in_ring
-
     k = F.col("c_custkey")
     x0, y0 = (k % 100) * 2, (k % 57) * 2
     x1 = x0 + (k % 13 + 1) * 2
@@ -2916,8 +2914,7 @@ def tile_survey_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # parse each tile's ring ONCE in the 25-row broadcast dimension
-    # (rings_to_edges over the parsed WKT — identical crossing edge
-    # set to point_in_ring's closed-ring walk), and evaluate the
+    # (rings_to_edges over the parsed WKT), and evaluate the
     # anchored test ONCE per joined row: the previous form inlined the
     # WKT parse + ray-cast into THREE aggregate expressions, i.e. 3
     # parses per (survey, tile) pair (optimization r12; 5.6 s -> 1.0 s
@@ -3630,7 +3627,7 @@ def spatial_join_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     their bbox touches (<= 3x2 cells at cell_size=16), points map to
     their single cell, one equi-join on the cell struct, then the
     exact refine runs the GENERAL even-odd ray cast over the parsed
-    WKT ring (point_in_rings) — the same code path a concave multipart
+    WKT ring (point_in_edges) — the same code path a concave multipart
     subject would take. A point lives in exactly one cell, so each
     (polygon, point) pair meets exactly once: no dedup shuffle. The
     oracle derives truth independently from the rectangle bounds.
@@ -3676,10 +3673,9 @@ def spatial_join_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("px") >= F.col("x0")) & (F.col("px") <= F.col("x1"))
         & (F.col("py") >= F.col("y0")) & (F.col("py") <= F.col("y1"))
     )
-    # NOT kernelized (measured negative result, optimization r13): the
-    # mapInArrow ray-cast kernel (functions/arrowgeom.py::
-    # filter_points_in_edges, kept with parity tests) LOSES here —
-    # steady 7.3 s -> 8.7 s at sf0.1. Diagnosis: 15.5 M same-cell
+    # NOT kernelized (measured negative result, optimization r13): a
+    # mapInArrow ray-cast kernel LOST here — steady 7.3 s -> 8.7 s at
+    # sf0.1 — and was deleted. Diagnosis: 15.5 M same-cell
     # candidates fall to 2.53 M bbox hits, and on this layer EVERY
     # bbox hit is inside (rectangle features: bbox containment ==
     # containment), so the boundary ships 2.5 M rows x edge arrays to
@@ -3709,12 +3705,13 @@ def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pair in exactly ONE shared cell — duplicate elimination
     with zero extra shuffle (no distinct). The refine computes the
     EXACT intersection area by running the Sutherland–Hodgman clip of
-    A's parsed WKT ring against B's bbox window (clip_area2x_rect) —
-    the general vertex-clip machinery, not a rect shortcut — and keeps
-    pairs with positive area (edge-touching pairs drop). Oracle:
-    closed-form rect∩rect overlap, never a vertex clip, certifying the
-    bucketing + SH pipeline end-to-end."""
-    from .functions.geometry import clip_area2x_rect_pts, open_ring_pts
+    A's parsed WKT ring against B's bbox window
+    (arrowgeom.overlay_clip_rect) — the general vertex-clip machinery,
+    not a rect shortcut — and keeps pairs with positive area
+    (edge-touching pairs drop). Oracle: closed-form rect∩rect overlap,
+    never a vertex clip, certifying the bucketing + SH pipeline
+    end-to-end."""
+    from .functions.geometry import open_ring_pts
     from .functions.spatial import bbox_cells, report_cell_filter
 
     cs = 32
@@ -3759,9 +3756,9 @@ def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cell"),
     )
     # bbox-overlap prefilter (integer comparisons, whole-stage codegen)
-    # before the Sutherland–Hodgman refine: SH runs through interpreted
-    # higher-order array functions, so evaluating it on candidates whose
-    # bboxes cannot overlap with positive measure is pure waste. Strict
+    # before the Sutherland–Hodgman refine: shipping candidates whose
+    # bboxes cannot overlap with positive measure across the Arrow
+    # boundary to the SH kernel is pure waste. Strict
     # inequalities are exact — a positive clip area requires the OPEN
     # bboxes to intersect; edge-touching pairs have area 0 and were
     # dropped by the ov_a2x > 0 refine anyway (guide §2.3/§3.2
@@ -3785,25 +3782,10 @@ def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the same order (bit-identical areas — see
     # functions/arrowgeom.py and the parity tests); the JVM keeps the
     # join, the reporting-cell dedup and the codegen bbox prefilter.
-    # spark.graft.geom.kernel=column restores the Column refine.
-    from .functions.arrowgeom import kernel_enabled, overlay_clip_rect
+    from .functions.arrowgeom import overlay_clip_rect
 
-    if kernel_enabled():
-        return overlay_clip_rect(
-            cand, "aring", "bx0", "by0", "bx1", "by1", ["akey", "bkey"]
-        )
-    return (
-        cand
-        .select(
-            "akey",
-            "bkey",
-            clip_area2x_rect_pts(
-                F.col("aring"),
-                F.col("bx0").cast("double"), F.col("by0").cast("double"),
-                F.col("bx1").cast("double"), F.col("by1").cast("double"),
-            ).alias("ov_a2x"),
-        )
-        .where(F.col("ov_a2x") > 0)
+    return overlay_clip_rect(
+        cand, "aring", "bx0", "by0", "bx1", "by1", ["akey", "bkey"]
     )
 
 
@@ -4014,16 +3996,9 @@ def spatial_join_overlap_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings certify the join, the dedup rule, and the SH+normalize
     vertex set end-to-end. 100 TB posture: identical to the area twin —
     both explodes bounded and map-side, ONE keyed exchange, zero
-    cartesian; the WKT serialization is per-surviving-pair Column work
-    inside codegen."""
-    from .functions.geometry import (
-        _let,
-        clip_ring_pts_to_rect,
-        normalize_ring,
-        open_ring_pts,
-        ring_area2x,
-        ring_to_wkt,
-    )
+    cartesian; the WKT serialization is per-surviving-pair work inside
+    the SH kernel."""
+    from .functions.geometry import open_ring_pts
     from .functions.spatial import bbox_cells, report_cell_filter
 
     cs = 32
@@ -4065,19 +4040,8 @@ def spatial_join_overlap_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("cell"),
     )
-    clipped = _let(
-        clip_ring_pts_to_rect(
-            F.col("aring"),
-            F.col("bx0").cast("double"), F.col("by0").cast("double"),
-            F.col("bx1").cast("double"), F.col("by1").cast("double"),
-        ),
-        lambda c: F.struct(
-            ring_to_wkt(normalize_ring(c)).alias("clip_wkt"),
-            F.round(ring_area2x(c)).cast("long").alias("ov_a2x"),
-        ),
-    )
     # same bbox-overlap prefilter as the area twin (strict = exact for
-    # the positive-area survival rule) before the interpreted SH clip
+    # the positive-area survival rule) before the SH kernel
     bbox_overlap = (
         (F.col("ax0") < F.col("bx1")) & (F.col("bx0") < F.col("ax1"))
         & (F.col("ay0") < F.col("by1")) & (F.col("by0") < F.col("ay1"))
@@ -4095,19 +4059,11 @@ def spatial_join_overlap_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the normalize_ring + ring_to_wkt serialization replayed
     # inside the kernel (same passes, same exact comparisons — see
     # functions/arrowgeom.py; parity tests pin string equality).
-    # spark.graft.geom.kernel=column restores the Column refine.
-    from .functions.arrowgeom import kernel_enabled, overlay_clip_rect
+    from .functions.arrowgeom import overlay_clip_rect
 
-    if kernel_enabled():
-        return overlay_clip_rect(
-            cand, "aring", "bx0", "by0", "bx1", "by1",
-            ["akey", "bkey"], emit_wkt=True,
-        )
-    return (
-        cand
-        .select("akey", "bkey", clipped["clip_wkt"].alias("clip_wkt"),
-                clipped["ov_a2x"].alias("ov_a2x"))
-        .where(F.col("ov_a2x") > 0)
+    return overlay_clip_rect(
+        cand, "aring", "bx0", "by0", "bx1", "by1",
+        ["akey", "bkey"], emit_wkt=True,
     )
 
 

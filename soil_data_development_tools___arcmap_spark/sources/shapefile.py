@@ -14,7 +14,7 @@ parallelizes the FILE LIST, and parses each pair inside
 files for CONUS), so the parse scales with files, pixels never visit
 the driver, and the output is a plain DataFrame (areasymbol attrs +
 exterior-ring WKT) that feeds the existing geometry operators
-(acreage_geom shoelace, point_in_ring, clip, tile partitioning).
+(acreage_geom shoelace, point_in_geom, clip, tile partitioning).
 
 The writer exists to round-trip the reader in tests and to emit
 shapefiles for consumers that still want them — same byte-determinism

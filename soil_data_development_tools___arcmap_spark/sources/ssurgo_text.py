@@ -207,24 +207,6 @@ def read_ssurgo_table(
     return df
 
 
-def load_ssurgo(
-    spark: SparkSession,
-    base_dir: str,
-    tables: list[str] | None = None,
-    file_names: dict[str, str] | None = None,
-) -> dict[str, DataFrame]:
-    """Load a SSURGO export directory: ``base_dir/<table>.txt`` (or the
-    wss tabular names via ``file_names``). Returns {table: DataFrame};
-    missing files are skipped so partial exports load."""
-    out: dict[str, DataFrame] = {}
-    for t in tables or list(SSURGO_SCHEMAS):
-        name = (file_names or {}).get(t, t)
-        path = os.path.join(base_dir, f"{name}.txt")
-        if os.path.exists(path) or "*" in path:
-            out[t] = read_ssurgo_table(spark, path, t)
-    return out
-
-
 def merge_surveys(parts: list[DataFrame], pk: list[str] | None = None) -> DataFrame:
     """SSURGO_MergeDatabases: union per-survey tables, deduping on the
     primary key when given (sdv* tables repeat identically per survey)."""

@@ -1277,12 +1277,13 @@ def geofence_layer(
 ) -> DataFrame:
     """Static geofence polygon layer for the stream-static spatial
     join: the customer even-grid rectangles, pre-exploded onto their
-    bbox grid cells (functions/spatial.py:bbox_cells) with the
-    exterior ring pre-parsed ONCE (parse_geom_rings) — the layer is
-    dimension-sized, so Structured Streaming broadcasts it into every
-    micro-batch and the per-event work is a hash probe + ray cast."""
+    bbox grid cells (functions/spatial.py:bbox_cells) with the ring
+    edges built ONCE (rings_to_edges over parse_geom_rings) — the
+    layer is dimension-sized, so Structured Streaming broadcasts it
+    into every micro-batch and the per-event work is a hash probe +
+    ray cast."""
     from .._qcore import _even_grid_rects, _t
-    from ..functions.geometry import parse_geom_rings
+    from ..functions.geometry import parse_geom_rings, rings_to_edges
     from ..functions.spatial import bbox_cells
 
     rects = _even_grid_rects(_t(spark, sf_dir, "customer"), "c_custkey")
@@ -1293,7 +1294,7 @@ def geofence_layer(
                 F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"), cell_size
             )
         ).alias("cell"),
-        parse_geom_rings("wkt").alias("rings"),
+        rings_to_edges(parse_geom_rings("wkt")).alias("edges"),
     )
 
 
@@ -1308,7 +1309,7 @@ def geofence_pairs(
     invariant), so the streaming twin is hash-checked against the
     batch oracle. Event coordinates derive from event_id on the odd
     grid (never edge-incident on the even-grid fences)."""
-    from ..functions.geometry import point_in_rings
+    from ..functions.geometry import point_in_edges
     from ..functions.spatial import point_cell
 
     j = F.col("event_id")
@@ -1323,7 +1324,7 @@ def geofence_pairs(
     )
     return (
         pts.join(F.broadcast(layer), "cell")
-        .where(point_in_rings(F.col("rings"), F.col("px"), F.col("py")) == 1)
+        .where(point_in_edges(F.col("edges"), F.col("px"), F.col("py")) == 1)
         .select("event_id", "okey", "px", "py")
     )
 

@@ -21,6 +21,16 @@ def test_parse_geom_rings_rejects_non_integral(spark):
     with pytest.raises(Exception) as ei:
         polygon_cell_inventory(df, tile_cells=4).collect()
     assert "non-integral" in str(ei.value)
+    # the WKT-level containment predicate shares the parse contract
+    from pyspark.sql import functions as F
+
+    from soil_data_development_tools___arcmap_spark.functions.geometry import (
+        point_in_geom,
+    )
+
+    with pytest.raises(Exception) as ei:
+        df.select(point_in_geom("wkt", F.lit(1), F.lit(1))).collect()
+    assert "non-integral" in str(ei.value)
 
 
 def test_parse_geom_rings_rejects_garbage(spark):

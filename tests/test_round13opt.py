@@ -7,6 +7,7 @@ multipart, centers exactly on edges/vertices, degenerate <3-vertex
 rings, empty clips)."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ from soil_data_development_tools___arcmap_spark.functions.geometry import (
     clip_area2x_rect_pts,
     clip_ring_pts_to_rect,
     normalize_ring,
+    parse_geom_rings,
     point_in_edges,
     ring_area2x,
     ring_to_wkt,
@@ -34,6 +36,41 @@ def _random_ring(rng, n, span=20, grid=1):
 def _ring_wkt(pts):
     closed = list(pts) + [pts[0]]
     return "POLYGON ((" + ", ".join(f"{x} {y}" for x, y in closed) + "))"
+
+
+def _column_inventory(df, cs, tc):
+    """Column reference for the scanline kernel: explode every cell
+    whose center lies in the polygon's vertex bbox, keep the centers
+    ``point_in_edges`` counts inside, and derive the owning tile from
+    the cell index (coordinates are >= 0 here)."""
+    half = cs // 2
+    rings = parse_geom_rings("wkt")
+    pts = F.flatten(rings)
+
+    def centers(axis):
+        vs = F.transform(pts, lambda p: p[axis])
+        lo = F.ceil((F.array_min(vs) - half) / cs)
+        hi = F.floor((F.array_max(vs) - half) / cs)
+        return F.when(lo <= hi, F.sequence(lo, hi)).otherwise(
+            F.array().cast("array<bigint>")
+        )
+
+    cells = (
+        df.select("k", rings_to_edges(rings).alias("edges"),
+                  centers("x").alias("cols"), centers("y").alias("rows"))
+        .withColumn("col", F.explode("cols"))
+        .withColumn("row", F.explode("rows"))
+        .withColumn("cx", F.col("col") * cs + half)
+        .withColumn("cy", F.col("row") * cs + half)
+    )
+    return cells.where(
+        point_in_edges(F.col("edges"), F.col("cx"), F.col("cy")) == 1
+    ).select(
+        "k",
+        F.floor(F.col("col") / tc).alias("tile_x"),
+        F.floor(F.col("row") / tc).alias("tile_y"),
+        "col", "row", "cx", "cy",
+    )
 
 
 def test_inventory_kernel_matches_column_adversarial(spark):
@@ -66,74 +103,44 @@ def test_inventory_kernel_matches_column_adversarial(spark):
         [(i, w) for i, w in enumerate(wkts)], "k int, wkt string"
     )
 
-    def cells(mode, cs, tc):
-        spark.conf.set("spark.graft.geom.kernel", mode)
-        try:
-            out = polygon_cell_inventory(
-                df, cell_size=cs, tile_cells=tc
-            ).collect()
-        finally:
-            spark.conf.set("spark.graft.geom.kernel", "arrow")
+    def rows(out):
         return sorted(
             (r["k"], r["tile_x"], r["tile_y"], r["col"], r["row"],
              r["cx"], r["cy"])
-            for r in out
+            for r in out.collect()
         )
 
+    n_kernel = 0
     for cs, tc in ((2, 4), (2, 8), (4, 4)):
-        a = cells("arrow", cs, tc)
-        b = cells("column", cs, tc)
+        a = rows(polygon_cell_inventory(df, cell_size=cs, tile_cells=tc))
+        b = rows(_column_inventory(df, cs, tc))
         assert a == b, (cs, tc, len(a), len(b))
-    assert len(cells("arrow", 2, 4)) > 100  # non-vacuous
+        n_kernel = max(n_kernel, len(a))
+    assert n_kernel > 100  # non-vacuous
 
 
-def test_points_kernel_matches_column_adversarial(spark):
-    """filter_points_in_edges vs the Column point_in_edges filter:
-    probes exactly on edges, on vertices, inside holes, outside —
-    identical keep set (the strict/non-strict crossing asymmetry must
-    be reproduced exactly)."""
-    rng = random.Random(31)
-    rows = []
-    wkts = [
-        "POLYGON ((0 0, 8 0, 8 8, 0 8, 0 0), (2 2, 6 2, 6 6, 2 6, 2 2))",
-        "POLYGON ((0 0, 4 4, 4 0, 0 0))",
-        _ring_wkt(_random_ring(rng, 7)),
-        _ring_wkt(_random_ring(rng, 5)),
-    ]
-    pid = 0
-    for wi, w in enumerate(wkts):
-        for _ in range(60):
-            rows.append((wi, pid, rng.randrange(0, 10), rng.randrange(0, 10), w))
-            pid += 1
-        # vertex / edge probes
-        rows.append((wi, pid, 0, 0, w)); pid += 1
-        rows.append((wi, pid, 2, 2, w)); pid += 1
-        rows.append((wi, pid, 4, 4, w)); pid += 1
-    df = spark.createDataFrame(
-        rows, "okey int, pkey int, px long, py long, wkt string"
-    ).select(
-        "okey", "pkey", "px", "py",
-        rings_to_edges(
-            __import__(
-                "soil_data_development_tools___arcmap_spark.functions.geometry",
-                fromlist=["parse_geom_rings"],
-            ).parse_geom_rings("wkt")
-        ).alias("edges"),
+@pytest.mark.parametrize("redistribute", [None, False])
+def test_inventory_rejects_negative_coordinates(spark, redistribute):
+    """The >= 0 coordinate contract fails loudly with a message naming
+    it — never a numpy error out of the scanline kernel, never a
+    silently empty (or wrong) cell set."""
+    from soil_data_development_tools___arcmap_spark.functions.raster import (
+        polygon_cell_inventory,
     )
-    kern = sorted(
-        (r["okey"], r["pkey"], r["px"], r["py"])
-        for r in arrowgeom.filter_points_in_edges(
-            df, "edges", "px", "py", ["okey", "pkey", "px", "py"]
-        ).collect()
-    )
-    col = sorted(
-        (r["okey"], r["pkey"], r["px"], r["py"])
-        for r in df.where(
-            point_in_edges(F.col("edges"), F.col("px"), F.col("py")) == 1
-        ).select("okey", "pkey", "px", "py").collect()
-    )
-    assert kern == col
-    assert 0 < len(kern) < len(rows)  # non-vacuous both ways
+
+    for wkt in (
+        "POLYGON ((-15 1, -13 1, -13 9, -15 9, -15 1))",
+        "POLYGON ((-31 -7, -3 -7, -3 -1, -31 -1, -31 -7))",
+    ):
+        df = spark.createDataFrame([(1, wkt)], "k int, wkt string")
+        with pytest.raises(Exception) as ei:
+            polygon_cell_inventory(
+                df, tile_cells=4, redistribute=redistribute
+            ).collect()
+        msg = str(ei.value)
+        assert "coordinates must be >= 0" in msg, msg[:2000]
+        assert re.search(r"negative [xy] coordinate -\d+", msg), msg[:2000]
+        assert "ValueError" not in msg and "bincount" not in msg
 
 
 def _mk_ring_df(spark, rows):
@@ -281,26 +288,3 @@ def test_checkpoint_policy_knob(spark, tmp_path):
         ), "no checkpoint files written"
     finally:
         spark.conf.unset("spark.graft.checkpoint.dir")
-
-
-def test_kernel_kill_switch_restores_column_plan(spark):
-    """spark.graft.geom.kernel=column must remove every Python node
-    from the inventory plan (the documented fallback)."""
-    from soil_data_development_tools___arcmap_spark.functions.raster import (
-        polygon_cell_inventory,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "POLYGON ((0 0, 8 0, 8 8, 0 8, 0 0))")], "k int, wkt string"
-    )
-    arrow_plan = polygon_cell_inventory(df, tile_cells=4)._jdf\
-        .queryExecution().executedPlan().toString()
-    assert "MapInArrow" in arrow_plan, arrow_plan
-    spark.conf.set("spark.graft.geom.kernel", "column")
-    try:
-        col_plan = polygon_cell_inventory(df, tile_cells=4)._jdf\
-            .queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.graft.geom.kernel", "arrow")
-    for node in ("MapInArrow", "BatchEvalPython", "ArrowEvalPython"):
-        assert node not in col_plan, col_plan

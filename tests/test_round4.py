@@ -235,7 +235,7 @@ def test_point_in_ring_triangle_and_rect(spark):
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        point_in_ring,
+        point_in_geom,
     )
 
     # right triangle (0,0)-(8,0)-(0,8); diagonal x+y=8
@@ -251,7 +251,7 @@ def test_point_in_ring_triangle_and_rect(spark):
     ]
     df = spark.createDataFrame(cases, "wkt string, px long, py long, want int")
     got = df.select(
-        "want", point_in_ring(F.col("wkt"), F.col("px"), F.col("py")).alias("got")
+        "want", point_in_geom(F.col("wkt"), F.col("px"), F.col("py")).alias("got")
     ).collect()
     for r in got:
         assert r["got"] == r["want"]
@@ -348,13 +348,13 @@ def test_point_in_ring_randomized_rect_and_triangle(spark):
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        point_in_ring,
+        point_in_geom,
     )
 
     df = spark.createDataFrame(cases, "wkt string, px long, py long, want int")
     bad = df.select(
         "wkt", "px", "py", "want",
-        point_in_ring(F.col("wkt"), F.col("px"), F.col("py")).alias("got"),
+        point_in_geom(F.col("wkt"), F.col("px"), F.col("py")).alias("got"),
     ).where(F.col("got") != F.col("want")).collect()
     assert not bad, bad[:5]
 

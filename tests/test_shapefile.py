@@ -50,7 +50,7 @@ def test_read_shapefiles_distributed(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        point_in_ring,
+        point_in_geom,
     )
 
     fields = [("AREASYMBOL", 20), ("MUSYM", 6), ("MUKEY", 30)]
@@ -77,8 +77,8 @@ def test_read_shapefiles_distributed(spark, tmp_path):
     # far-away probes are not
     checked = df.select(
         "mukey",
-        point_in_ring(F.col("wkt"), F.lit(5), F.lit(1)).alias("inside_a"),
-        point_in_ring(F.col("wkt"), F.lit(-999), F.lit(-999)).alias("out"),
+        point_in_geom(F.col("wkt"), F.lit(5), F.lit(1)).alias("inside_a"),
+        point_in_geom(F.col("wkt"), F.lit(-999), F.lit(-999)).alias("out"),
     ).collect()
     assert all(r["out"] == 0 for r in checked)
     assert sum(r["inside_a"] for r in checked) == 1  # only IA001's first poly

@@ -36,7 +36,8 @@ from soil_data_development_tools___arcmap_spark import get_spark  # noqa: E402
 from soil_data_development_tools___arcmap_spark.functions.geometry import (  # noqa: E402
     clip_area2x_rect,
     parse_geom_rings,
-    point_in_rings,
+    point_in_edges,
+    rings_to_edges,
 )
 from soil_data_development_tools___arcmap_spark.functions.spatial import (  # noqa: E402
     bbox_cells,
@@ -98,13 +99,13 @@ def containment(spark, n_poly: int, n_pt: int, span: int) -> DataFrame:
         F.explode(
             bbox_cells(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"), cs)
         ).alias("cell"),
-    ).withColumn("rings", parse_geom_rings("wkt"))
+    ).withColumn("edges", rings_to_edges(parse_geom_rings("wkt")))
     pts = _point_layer(spark, n_pt, span, 29).withColumn(
         "cell", point_cell(F.col("px"), F.col("py"), cs)
     )
     return (
         polys.join(pts, "cell")
-        .where(point_in_rings(F.col("rings"), F.col("px"), F.col("py")) == 1)
+        .where(point_in_edges(F.col("edges"), F.col("px"), F.col("py")) == 1)
         .select("k", "pk")
     )
 

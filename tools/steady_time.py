@@ -28,9 +28,6 @@ def main() -> None:
 
     spark = get_spark("steady-time")
     spark.sparkContext.setLogLevel("ERROR")
-    mode = os.environ.get("SPARK_GRAFT_GEOM_KERNEL")
-    if mode:
-        spark.conf.set("spark.graft.geom.kernel", mode)
     qs = E.queries()
     # shared-machinery warm-up (same as bench.py's worker)
     spark.range(1000).selectExpr("sum(id)").collect()
