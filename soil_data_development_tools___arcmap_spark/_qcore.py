@@ -6,9 +6,11 @@ is unchanged)."""
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators import (
     RatingSpec,
@@ -23,14 +25,50 @@ from .operators import (
 )
 from .operators.horizon_agg import _member_sums, clipped_thickness
 
-
+# Session confs that change the schema parquet inference returns for the
+# same file (read_events branches on the inferred ``ts`` type).
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``{sf_dir}/{name}.parquet``, inferring its schema once.
+
+    Inference is a Spark job (footer read plus schema merge) on every
+    plain ``spark.read.parquet``. The inferred ``StructType`` is kept in
+    ``_SCHEMAS`` under ``(path, st_ino, st_mtime_ns, st_size)`` plus the
+    values of ``_INFER_CONFS``, so a file rewritten in place or a session
+    with other inference confs infers afresh, and a hit reads with
+    ``spark.read.schema(s)``, which submits no job. Only the schema is
+    kept, never the DataFrame: every call builds its own plan on the
+    calling session. A path that is not a regular file is inferred every
+    time: a dataset directory (bench.py's Spark-written scale10 replica),
+    whose stat does not change when a part file does, or a missing
+    table, which keeps Spark's own error."""
     # The driver supplies its own session; pin the timestamp semantics
     # the oracle comparison assumes (naive/UTC rendering).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, st.st_ino, st.st_mtime_ns, st.st_size) + tuple(
+        spark.conf.get(k, None) for k in _INFER_CONFS
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def cents(col: str) -> F.Column:
@@ -80,16 +118,12 @@ def li_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.join(orders, "okey")
 
 
-def ssurgo_synth(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """SSURGO-shaped tables synthesized deterministically from the
-    TPC-H tables, so the REAL Valu1 pipeline code paths run under the
-    oracle gate: orders→component (mukey=o_custkey, cokey=o_orderkey),
-    lineitem→chorizon/chtexturegrp/chtexture/chfrags/corestrictions.
-    All numeric soil properties are integer-valued doubles (exact under
-    float summation) except dbthirdbar_r/ph1to1h2o_r, which feed only
-    per-row products and comparisons (IEEE-deterministic)."""
+def synth_component(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthesized SSURGO component table alone (orders→component,
+    mukey=o_custkey, cokey=o_orderkey; see ``ssurgo_synth``), for the
+    queries that need no other table: it reads only orders."""
     ok = F.col("o_orderkey")
-    component = _t(spark, sf_dir, "orders").select(
+    return _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("mukey"),
         ok.alias("cokey"),
         (ok % 97 + 3).alias("comppct_r"),
@@ -114,6 +148,18 @@ def ssurgo_synth(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         .otherwise("Typic Hapludolls")
         .alias("taxsubgrp"),
     )
+
+
+def ssurgo_synth(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """SSURGO-shaped tables synthesized deterministically from the
+    TPC-H tables, so the REAL Valu1 pipeline code paths run under the
+    oracle gate: orders→component (mukey=o_custkey, cokey=o_orderkey),
+    lineitem→chorizon/chtexturegrp/chtexture/chfrags/corestrictions.
+    All numeric soil properties are integer-valued doubles (exact under
+    float summation) except dbthirdbar_r/ph1to1h2o_r, which feed only
+    per-row products and comparisons (IEEE-deterministic)."""
+    ok = F.col("o_orderkey")
+    component = synth_component(spark, sf_dir)
     li = _t(spark, sf_dir, "lineitem")
     lk, ln = F.col("l_orderkey"), F.col("l_linenumber")
     pk, sk = F.col("l_partkey"), F.col("l_suppkey")

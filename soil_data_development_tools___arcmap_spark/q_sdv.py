@@ -20,7 +20,14 @@ from .operators import (
 )
 from .operators.horizon_agg import _member_sums, clipped_thickness
 
-from ._qcore import _t, cents, li_component, li_horizon, ssurgo_synth
+from ._qcore import (
+    _t,
+    cents,
+    li_component,
+    li_horizon,
+    ssurgo_synth,
+    synth_component,
+)
 
 
 # l_returnflag ordinal domain (choicesequence order) for the SDV
@@ -418,9 +425,9 @@ def planner_sdv_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
     CreateSoilMap lifecycle (SURVEY §3.1) on synthesized tables."""
     from .plans.planner import create_soil_map, hydrate
 
-    t = ssurgo_synth(spark, sf_dir)
-    mapunit = t["component"].select("mukey").distinct()
-    tables = {"mapunit": mapunit, "component": t["component"]}
+    co = synth_component(spark, sf_dir)
+    mapunit = co.select("mukey").distinct()
+    tables = {"mapunit": mapunit, "component": co}
     relations = [
         {
             "ltabphyname": "mapunit",
@@ -459,9 +466,9 @@ def planner_sdv_flood_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches if the repair fired."""
     from .plans.planner import create_soil_map, hydrate
 
-    t = ssurgo_synth(spark, sf_dir)
+    co = synth_component(spark, sf_dir)
     ok = F.col("cokey")
-    component = t["component"].withColumn(
+    component = co.withColumn(
         "flodfreqcl",
         F.when(ok % 6 == 0, "None")
         .when(ok % 6 == 1, "Very rare")
@@ -674,9 +681,9 @@ def planner_sdv_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.planner import create_soil_map, hydrate
     from .tools_merge import merge_rating_tables
 
-    t = ssurgo_synth(spark, sf_dir)
-    mapunit = t["component"].select("mukey").distinct()
-    tables = {"mapunit": mapunit, "component": t["component"]}
+    co = synth_component(spark, sf_dir)
+    mapunit = co.select("mukey").distinct()
+    tables = {"mapunit": mapunit, "component": co}
     relations = [
         {
             "ltabphyname": "mapunit",
@@ -738,8 +745,7 @@ def planner_sdv_soilmoist(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing."""
     from .plans.planner import create_soil_map, hydrate
 
-    t = ssurgo_synth(spark, sf_dir)
-    component = t["component"]
+    component = synth_component(spark, sf_dir)
     comonth = component.select(
         "cokey",
         F.explode(F.array(*[F.lit(m) for m in range(1, 13)])).alias("monthseq"),
@@ -889,10 +895,10 @@ def planner_sdv_no_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapunit-component, gSSURGO dAgg 'NONE' dispatch)."""
     from .plans.planner import create_soil_map, hydrate
 
-    t = ssurgo_synth(spark, sf_dir)
+    co = synth_component(spark, sf_dir)
     tables = {
-        "mapunit": t["component"].select("mukey").distinct(),
-        "component": t["component"],
+        "mapunit": co.select("mukey").distinct(),
+        "component": co,
     }
     relations = [
         {
@@ -1031,9 +1037,9 @@ def planner_sdv_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .catalog import embedded_catalog
     from .plans.planner import create_soil_map, hydrate
 
-    t = ssurgo_synth(spark, sf_dir)
+    co = synth_component(spark, sf_dir)
     ok = F.col("cokey")
-    cotaxmoistcl = t["component"].select(
+    cotaxmoistcl = co.select(
         ok.alias("cotaxmckey"),
         "cokey",
         F.when(
@@ -1046,8 +1052,8 @@ def planner_sdv_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("taxmoistcl"),
     )
     tables = {
-        "mapunit": t["component"].select("mukey").distinct(),
-        "component": t["component"],
+        "mapunit": co.select("mukey").distinct(),
+        "component": co,
         "cotaxmoistcl": cotaxmoistcl,
     }
     relations = [

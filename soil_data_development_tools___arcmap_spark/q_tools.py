@@ -30,6 +30,7 @@ from ._qcore import (
     li_horizon,
     read_events,
     ssurgo_synth,
+    synth_component,
 )
 from .q_sdv import sdv_dcp_categorical, sdv_pp_sum, sdv_wta
 
@@ -38,7 +39,7 @@ from .q_sdv import sdv_dcp_categorical, sdv_pp_sum, sdv_wta
 def validate_component_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gSSURGO_ValidateData plausibility report: per-mukey component
     percent sum with anomaly flags (sum <> 100, no major component)."""
-    co = ssurgo_synth(spark, sf_dir)["component"]
+    co = synth_component(spark, sf_dir)
     agg = co.groupBy("mukey").agg(
         F.sum("comppct_r").alias("sum_pct"),
         F.count(F.lit(1)).alias("n_comp"),
@@ -63,7 +64,7 @@ def raster_lookup_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute table carries)."""
     from .functions.raster import attach_cellvalues, mukey_lookup
 
-    co = ssurgo_synth(spark, sf_dir)["component"]
+    co = synth_component(spark, sf_dir)
     lu = mukey_lookup(co)
     return attach_cellvalues(co, lu).groupBy("cellvalue", "mukey").agg(
         F.count(F.lit(1)).alias("n_comp")
@@ -2276,7 +2277,7 @@ def raster_rating_cells_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.geometry import ACRES_PER_SQM
     from .functions.raster import polygon_cell_inventory
 
-    co = ssurgo_synth(spark, sf_dir)["component"]
+    co = synth_component(spark, sf_dir)
     w = Window.partitionBy("mukey").orderBy(
         F.col("comppct_r").desc(), F.col("cokey").asc()
     )
@@ -2397,7 +2398,7 @@ def raster_reclassify_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.legend import equal_interval_breaks
     from .functions.raster import polygon_cell_inventory
 
-    co = ssurgo_synth(spark, sf_dir)["component"]
+    co = synth_component(spark, sf_dir)
     rated = co.groupBy("mukey").agg(F.max("comppct_r").alias("v"))
     breaks = equal_interval_breaks(rated, "v", 5)
     wl = Window.orderBy("class_idx")  # 6 rows: bounded by design
@@ -2759,7 +2760,7 @@ def nightly_gssurgo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nightly",
         content_tag(
             [os.path.join(os.path.abspath(sf_dir), "orders.parquet")],
-            extra=source_salt(ssurgo_synth, _pipe_text_export),
+            extra=source_salt(synth_component, _pipe_text_export),
         ),
         lambda d: _pipe_text_export(t["component"], "component", emb, d),
     )
@@ -3480,7 +3481,9 @@ def gssurgo_lake(spark: SparkSession, sf_dir: str) -> str:
         content_tag(
             srcs,
             extra=f"{_LAKE_SURVEY_MOD}|"
-            + source_salt(gssurgo_lake, ssurgo_synth, _lake_asym),
+            + source_salt(
+                gssurgo_lake, ssurgo_synth, synth_component, _lake_asym
+            ),
         ),
         build,
     )
@@ -4260,7 +4263,7 @@ def raster_block_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     rating dimension (CONUS ≈300k rows next to a cell table) → ONE
     block-keyed partial-aggregated exchange."""
     ded = _mu_raster_dedup_cells(spark, sf_dir)
-    co = ssurgo_synth(spark, sf_dir)["component"]
+    co = synth_component(spark, sf_dir)
     w = Window.partitionBy("mukey").orderBy(
         F.col("comppct_r").desc(), F.col("cokey").asc()
     )
@@ -4434,7 +4437,7 @@ def acreage_graph_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.geometry import ACRES_PER_SQM
     from .functions.raster import polygon_cell_inventory
 
-    co = ssurgo_synth(spark, sf_dir)["component"]
+    co = synth_component(spark, sf_dir)
     w = Window.partitionBy("mukey").orderBy(
         F.col("comppct_r").desc(), F.col("cokey").asc()
     )

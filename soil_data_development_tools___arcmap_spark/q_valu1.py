@@ -27,6 +27,7 @@ from ._qcore import (
     li_horizon,
     read_events,
     ssurgo_synth,
+    synth_component,
 )
 
 
@@ -122,7 +123,7 @@ def valu1_sum_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GetSumPct: per-mukey Σcomppct for the component classes."""
     from .valu1.pipeline import get_sum_pct
 
-    return get_sum_pct(ssurgo_synth(spark, sf_dir)["component"])
+    return get_sum_pct(synth_component(spark, sf_dir))
 
 
 def valu1_rz_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,7 +183,7 @@ def valu1_nccpi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         resolve_nccpi_mainrule,
     )
 
-    t = ssurgo_synth(spark, sf_dir)
+    co = synth_component(spark, sf_dir)
     ok = F.col("o_orderkey")
     v2_rules = [
         (0, "NCCPI - National Commodity Crop Productivity Index (Ver 2.0)"),
@@ -217,14 +218,14 @@ def valu1_nccpi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     main = resolve_nccpi_mainrule([NCCPI_V2_RULE])
     fn = calc_nccpi2 if main == NCCPI_V2_RULE else calc_nccpi
-    return fn(t["component"], cointerp_v2, exact_scale=1000)
+    return fn(co, cointerp_v2, exact_scale=1000)
 
 
 def valu1_pwsl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CalcPWSL: potential wet soil landscape pct with the 999 sentinel."""
     from .valu1.pipeline import calc_pwsl
 
-    return calc_pwsl(ssurgo_synth(spark, sf_dir)["component"])
+    return calc_pwsl(synth_component(spark, sf_dir))
 
 
 def valu1_wide(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,6 +38,14 @@ _DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     # Quieter driver logs in test runs.
     "spark.ui.enabled": "false",
+    # PySpark's DataFrame-debugging wrapper (errors.utils._with_origin)
+    # runs on every Column/functions call: getActiveSession, a conf read,
+    # a PySparkCurrentOrigin lookup, set and clear over py4j plus a
+    # Python stack walk, hundreds of times while one rating plan is
+    # built. Off, error messages lose only the Python file:line block of
+    # their query context; every exception and message, F.raise_error's
+    # included, is unchanged.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

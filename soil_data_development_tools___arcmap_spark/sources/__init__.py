@@ -1,1 +1,1 @@
-from .testdata import TABLES, load_tables, register_views  # noqa: F401
+from .testdata import TABLES  # noqa: F401

@@ -1,15 +1,9 @@
-"""Loaders for the driver-generated synthetic parquet tables.
+"""The driver-generated synthetic parquet tables.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file each under
-``$SPARK_GRAFT_SF_DIR`` style directories.
+``$SPARK_GRAFT_SF_DIR`` style directories, read through ``_qcore._t``.
 """
-
-from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
     "region",
@@ -23,28 +17,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimensions small enough to always broadcast at any SF we target.
-SMALL_DIMS = {"region", "nation", "supplier", "part", "customer"}
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read every table in ``sf_dir`` as a DataFrame.
-
-    Column pruning + predicate pushdown into the parquet scan are left
-    to Catalyst — callers express plain selects/filters.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load + register temp views so spark.sql(...) sees the tables."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
