@@ -30,7 +30,8 @@ they replaced:
   ``raster.polygon_cell_inventory`` raises on a negative vertex
   before the kernel runs.
 - The clip kernel (``overlay_clip_rect``) replays
-  ``geometry._clip_halfplane``'s four half-plane passes with the same
+  ``geometry.clip_ring`` over ``geometry.rect_halfplanes`` — the four
+  axis half-plane passes of ``geometry._halfplane_pass`` — with the same
   IEEE-754 double operations in the same order (the interpolation
   ``t = (b - a)/(p - a)``, ``o = a + (p - a) * t``) and accumulates the
   shoelace fold in index order exactly like ``F.aggregate`` (padding
@@ -298,7 +299,8 @@ def _scan_tiles(np, c0, c1, r0, r1, ni, nj, ne, eoff, xa, ya, xb, yb,
 def _clip_pass(np, X, Y, k, bound, axis_is_x, keep_ge):
     """One vectorized SH half-plane pass over padded (n, L) rings with
     per-row valid count k. Same emission rule and the same double ops
-    as geometry._clip_halfplane. Returns (X', Y', k')."""
+    as geometry._halfplane_pass over an axis half-plane
+    (geometry.rect_halfplanes). Returns (X', Y', k')."""
     n, L = X.shape
     if L == 0:
         return X, Y, k
@@ -449,8 +451,8 @@ def overlay_clip_rect(
 ) -> DataFrame:
     """The overlay joins' per-pair refine as one mapInArrow kernel:
     Sutherland–Hodgman clip of the pre-parsed A ring by B's rect
-    window (same four passes, same double ops as
-    ``clip_ring_pts_to_rect``), doubled-area shoelace with Spark's
+    window (same four passes, same double ops as ``clip_ring`` over
+    ``rect_halfplanes``), doubled-area shoelace with Spark's
     fold order and half-up round, keep pairs with ``ov_a2x > 0``.
     With ``emit_wkt`` additionally serializes the normalized clipped
     ring exactly like ``ring_to_wkt(normalize_ring(c))``. Output:

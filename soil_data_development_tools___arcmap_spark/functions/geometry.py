@@ -1,12 +1,26 @@
-"""Portable polygon-area core for the acreage family.
+"""Portable polygon geometry for the acreage, clip and containment
+families — pure Column expressions over WKT text (split/transform/
+aggregate, no UDFs, stays in codegen).
 
 The reference reads ArcGIS-maintained ``SHAPE_Area`` straight off the
 feature class (gSSURGO_AcreageReport.py:176-210;
-SSURGO_CheckgSSURGO.py muAcres) — the geometry math lives inside the
-GIS. To make the acreage reports self-contained without a GIS
-dependency, this module computes ring area from WKT polygon text with
-pure Column expressions (split/transform/aggregate — no UDFs, stays in
-codegen): the shoelace formula over the exterior ring.
+SSURGO_CheckgSSURGO.py muAcres) and clips with one call,
+``arcpy.Clip_analysis`` (gSSURGO_Clip.py:160), for any AOI and any
+polygon feature. Here every clip runs through one core:
+
+- ``parse_geom_parts`` — the one WKT polygon parser: POLYGON /
+  MULTIPOLYGON (with holes, or EMPTY) to per-part ring arrays on the
+  integer grid; ``parse_geom_rings`` is its flattened form.
+- ``rect_halfplanes`` / ``convex_halfplanes`` / ``edge_halfplane`` —
+  an AOI as a list of half-planes (axis bounds or directed edges);
+  ``clip_ring`` runs one Sutherland–Hodgman pass per half-plane.
+- ``clip_area2x(wkt, pieces)`` — the one clipped-area entry: Σ over
+  disjoint convex AOI pieces of Σ over parts of (exterior − holes).
+- ``clip_wkt(wkt, halfplanes)`` — the one clipped-geometry entry:
+  canonical POLYGON EMPTY / POLYGON / MULTIPOLYGON text plus its area.
+- ``shoelace_area2x`` (unclipped area), ``point_in_geom``
+  (containment), and the concave-output steps ``bands_to_ring``,
+  ``stack_band_rings``, ``split_bridged_ring_y``, ``rings_to_multiwkt``.
 
 Determinism contract: with integral vertex coordinates the doubled
 signed area is an exact integer (sums of integer products), so
@@ -16,6 +30,9 @@ exact reference constant once at the end.
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -23,37 +40,146 @@ from pyspark.sql import functions as F
 #: (gSSURGO_AcreageReport.py:489: convAcres = 0.000247104393)
 ACRES_PER_SQM = 0.000247104393
 
+#: the OPEN double-typed ring every clip pass consumes and emits
+RING_T = "array<struct<x:double,y:double>>"
 
-def ring_coords(wkt: str | Column) -> Column:
-    """Exterior-ring vertices of a WKT ``POLYGON ((x y, x y, ...))`` as
-    ``array<struct<x:bigint, y:bigint>>`` (closing vertex included).
-    Only the exterior ring is read — text before the first ')'."""
+
+def _dbl(v) -> Column:
+    """A plan-build literal as a double literal; a Column unchanged."""
+    return v if isinstance(v, Column) else F.lit(float(v))
+
+
+def _let(value: Column, fn) -> Column:
+    """Bind ``value`` once and hand ``fn`` a cheap reference to it —
+    the single-element transform trick. Chained array passes that
+    reference their input k times would otherwise inline the whole
+    upstream expression k times (multiplicative tree blow-up: four
+    chained Sutherland–Hodgman passes OOMed Catalyst at plan-build
+    before this); a lambda variable is a bound reference, so the tree
+    stays the SUM of the pass sizes."""
+    return F.transform(F.array(value), fn)[0]
+
+
+def parse_geom_parts(wkt: str | Column) -> Column:
+    """Every part of a WKT ``POLYGON`` / ``MULTIPOLYGON`` as
+    ``array<array<array<struct<x:bigint,y:bigint>>>>``: per part, the
+    exterior ring followed by its holes, each ring OPEN (closing vertex
+    dropped). ``POLYGON EMPTY`` and ``MULTIPOLYGON EMPTY`` parse to
+    zero parts; NULL text parses to NULL. No prefix dispatch: parts
+    split on ``)), ((``, which only occurs between MULTIPOLYGON parts.
+
+    Coordinates FAIL LOUDLY when off the integer contract: each token
+    parses as double first and a non-integral (or unparseable) value
+    raises at runtime via ``raise_error`` rather than silently casting
+    to NULL — a ``'1.5 2.5'`` vertex would otherwise make
+    ``polygon_cell_inventory`` drop the polygon with zero cells."""
     c = F.col(wkt) if isinstance(wkt, str) else wkt
-    ring = F.regexp_extract(c, r"POLYGON\s*\(\(([^)]*)\)", 1)
+
+    def to_int(tok: Column, axis: str) -> Column:
+        # try_cast: unparseable -> NULL -> the raise_error branch with
+        # OUR message, identically under ANSI-on (Spark 4 default) and
+        # ANSI-off sessions (a plain cast would throw CAST_INVALID_INPUT
+        # first under ANSI, bypassing the contract message)
+        d = tok.try_cast("double")
+        return F.when(d == F.round(d, 0), d.cast("long")).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "parse_geom_parts: non-integral or unparseable "
+                        + axis + " coordinate '"
+                    ),
+                    F.coalesce(tok, F.lit("<null>")),
+                    F.lit("' (integer-grid contract)"),
+                )
+            ).cast("long")
+        )
+
+    def ring(r: Column) -> Column:
+        return _let(
+            F.transform(
+                F.split(r, r",\s*"),
+                lambda p: F.struct(
+                    to_int(
+                        F.split(F.trim(p), r"\s+").getItem(0), "x"
+                    ).alias("x"),
+                    to_int(
+                        F.split(F.trim(p), r"\s+").getItem(1), "y"
+                    ).alias("y"),
+                ),
+            ),
+            lambda cc: F.slice(cc, 1, F.size(cc) - 1),
+        )
+
+    body = F.regexp_replace(
+        F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1), r"^[\s(]+|[\s)]+$", ""
+    )
+    parts = F.when(
+        c.rlike(r"^\s*(MULTI)?POLYGON\s+EMPTY\s*$"),
+        F.array().cast("array<string>"),
+    ).otherwise(F.split(body, r"\)\s*\)\s*,\s*\(\s*\("))
     return F.transform(
-        F.split(ring, r",\s*"),
-        lambda p: F.struct(
-            F.split(F.trim(p), r"\s+").getItem(0).cast("long").alias("x"),
-            F.split(F.trim(p), r"\s+").getItem(1).cast("long").alias("y"),
+        parts, lambda part: F.transform(F.split(part, r"\)\s*,\s*\("), ring)
+    )
+
+
+def parse_geom_rings(wkt: str | Column) -> Column:
+    """ALL rings of ALL parts, flattened:
+    ``array<array<struct<x:bigint,y:bigint>>>`` — the form the
+    even-odd containment callers need (``rings_to_edges``), public so
+    row-multiplying consumers (the cell-inventory explode, the overlay
+    joins) parse each polygon ONCE, before replication."""
+    return F.flatten(parse_geom_parts(wkt))
+
+
+def _shoelace(r: Column, zero: Column) -> Column:
+    """|Σ x_i·y_{i+1} − x_{i+1}·y_i| over an OPEN ring that is already
+    a cheap reference (wrap-around edge included), 0 below 3 vertices;
+    ``zero`` fixes the accumulator type (exact BIGINT or double)."""
+    n = F.size(r)
+    terms = F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: r[i]["x"] * r[(i + 1) % n]["y"]
+        - r[(i + 1) % n]["x"] * r[i]["y"],
+    )
+    s = F.aggregate(terms, zero, lambda acc, v: acc + v)
+    return F.when(n < 3, zero).otherwise(F.abs(s))
+
+
+def _net_area(parts: Column, area, zero: Column) -> Column:
+    """Σ over parts of (area(exterior) − Σ area(holes)) — holes nest
+    inside their exterior, so their areas (clipped or not) subtract
+    exactly. ``area`` maps one ring to its unsigned doubled area."""
+    return F.aggregate(
+        F.flatten(
+            F.transform(
+                parts,
+                lambda rings: F.transform(
+                    rings,
+                    lambda r, i: area(r)
+                    * F.when(i == 0, F.lit(1)).otherwise(F.lit(-1)),
+                ),
+            )
         ),
+        zero,
+        lambda acc, v: acc + v,
     )
 
 
 def shoelace_area2x(wkt: str | Column) -> Column:
-    """Twice the absolute shoelace area of the exterior ring —
-    |Σ (x_i·y_{i+1} − x_{i+1}·y_i)| over consecutive vertices. Exact
-    BIGINT for integral coordinates; divide by 2 (and the acre
-    constant) only at the final presentation step."""
-    coords = ring_coords(wkt)
-    # index-pair terms then one fold — all exact integer arithmetic
-    terms = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(coords) - 2, F.lit(0))),
-        lambda i: coords[i]["x"] * coords[i + 1]["y"]
-        - coords[i + 1]["x"] * coords[i]["y"],
+    """Twice the polygon area of WKT text: Σ over parts of (exterior −
+    holes), each ring's absolute shoelace — the figure ``SHAPE_Area``
+    holds. Exact BIGINT on the integer grid; divide by 2 (and the acre
+    constant) only at the final presentation step. EMPTY → 0."""
+    zero = F.lit(0).cast("long")
+    return _net_area(
+        parse_geom_parts(wkt), lambda r: _shoelace(r, zero), zero
     )
-    return F.abs(
-        F.aggregate(terms, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    )
+
+
+def ring_area2x(ring: Column) -> Column:
+    """Twice the absolute shoelace area of an OPEN double-typed ring
+    (wrap-around edge included) as double; quantize at the caller."""
+    return _let(ring, lambda r: _shoelace(r, F.lit(0.0)))
 
 
 def acres_e4(area2x: Column) -> Column:
@@ -111,349 +237,236 @@ def rotate_about_e4(
     )
 
 
-def _let(value: Column, fn) -> Column:
-    """Bind ``value`` once and hand ``fn`` a cheap reference to it —
-    the single-element transform trick. Chained array passes that
-    reference their input k times would otherwise inline the whole
-    upstream expression k times (multiplicative tree blow-up: four
-    chained Sutherland–Hodgman passes OOMed Catalyst at plan-build
-    before this); a lambda variable is a bound reference, so the tree
-    stays the SUM of the pass sizes."""
-    return F.transform(F.array(value), fn)[0]
+class HalfPlane(NamedTuple):
+    """One clip half-plane, fixed at plan build: ``inside(p)`` and the
+    boundary crossing ``isect(a, p)`` of edge A→P (A and P strictly on
+    opposite sides). ``general`` marks a directed-edge half-plane,
+    whose intersections may carry ~1 ulp of double rounding."""
+
+    inside: Callable[[Column], Column]
+    isect: Callable[[Column, Column], Column]
+    general: bool
 
 
-def _clip_halfplane(coords: Column, axis: str, bound, keep_ge: bool) -> Column:
-    """One Sutherland–Hodgman half-plane pass: clip an OPEN ring
-    (array<struct<x:double,y:double>>, no closing vertex) against
-    ``axis >= bound`` (keep_ge) or ``axis <= bound``. Per directed
-    edge (A, B) the standard emission: B if both inside; the
-    edge/boundary intersection I if the edge crosses; [I, B] when
-    entering. The intersection ordinate is the exact linear
-    interpolation — one double divide whose operands differ by
-    construction (A and B are strictly on opposite sides). Empty or
-    fully-outside rings clip to an empty array."""
-    b = F.lit(float(bound)) if not isinstance(bound, Column) else bound
+def _axis_halfplane(axis: str, bound, keep_ge: bool) -> HalfPlane:
+    """``axis >= bound`` (keep_ge) or ``axis <= bound``. The crossing is
+    the exact linear interpolation t = (b − a)/(p − a) with the
+    boundary coordinate set to b itself — the arithmetic the
+    arrowgeom overlay kernel replays bit for bit."""
+    b = _dbl(bound)
     other = "y" if axis == "x" else "x"
 
-    def inside(p):
+    def inside(p: Column) -> Column:
         return p[axis] >= b if keep_ge else p[axis] <= b
 
-    def isect(a, p):
+    def isect(a: Column, p: Column) -> Column:
         t = (b - a[axis]) / (p[axis] - a[axis])
         o = a[other] + (p[other] - a[other]) * t
         if axis == "x":
             return F.struct(b.alias("x"), o.alias("y"))
         return F.struct(o.alias("x"), b.alias("y"))
 
-    def pass_(c):
-        n = F.size(c)
-        emitted = F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.when(
-                inside(c[i]) & inside(c[(i + 1) % n]),
-                F.array(c[(i + 1) % n]),
-            )
-            .when(
-                inside(c[i]) & ~inside(c[(i + 1) % n]),
-                F.array(isect(c[i], c[(i + 1) % n])),
-            )
-            .when(
-                ~inside(c[i]) & inside(c[(i + 1) % n]),
-                F.array(isect(c[i], c[(i + 1) % n]), c[(i + 1) % n]),
-            )
-            .otherwise(
-                F.array().cast("array<struct<x:double,y:double>>")
-            ),
-        )
-        # sequence(0, -1) steps BACKWARDS on an empty ring — guard it
-        return F.when(n < 1, c).otherwise(F.flatten(emitted))
-
-    return _let(coords, pass_)
+    return HalfPlane(inside, isect, False)
 
 
-def clip_ring_to_rect(
-    wkt: str | Column, xmin, ymin, xmax, ymax
-) -> Column:
-    """Polygon ∩ axis-aligned AOI rectangle — the geometric core of the
-    reference's clip tool (gSSURGO_Clip.py:160, arcpy.Clip_analysis;
-    point_in_geom covers only the select-by-location half). Classic
-    Sutherland–Hodgman against the four AOI half-planes, expressed as
-    four chained Column array passes over the parsed WKT exterior ring
-    (no UDF, stays in codegen): returns the clipped OPEN ring as
-    array<struct<x:double,y:double>> — empty when disjoint. The clip
-    region is convex, so SH is exact for any simple subject ring
-    (degenerate duplicate vertices it may emit are shoelace-neutral)."""
-    return clip_ring_pts_to_rect(
-        open_ring_pts(wkt), xmin, ymin, xmax, ymax
-    )
+def rect_halfplanes(x0, y0, x1, y1) -> list[HalfPlane]:
+    """The AOI rectangle [x0, x1] × [y0, y1] as four axis half-planes,
+    in the order x ≥ x0, x ≤ x1, y ≥ y0, y ≤ y1. Bounds are literals or
+    double Columns."""
+    return [
+        _axis_halfplane("x", x0, True),
+        _axis_halfplane("x", x1, False),
+        _axis_halfplane("y", y0, True),
+        _axis_halfplane("y", y1, False),
+    ]
 
 
-def open_ring_pts(wkt: str | Column) -> Column:
-    """Exterior WKT ring parsed ONCE to the OPEN double-typed ring
-    ``array<struct<x:double,y:double>>`` the clip passes consume.
-    Split out (optimization r12) so a join can parse each feature's
-    ring once BEFORE replication/pairing instead of re-parsing per
-    candidate pair — the spatial overlay join evaluated the full WKT
-    regex parse per (a, b) candidate, which dominated its runtime."""
-    return _let(
-        ring_coords(wkt),
-        lambda cc: F.transform(
-            F.slice(cc, 1, F.size(cc) - 1),
-            lambda p: F.struct(
-                p["x"].cast("double").alias("x"),
-                p["y"].cast("double").alias("y"),
-            ),
-        ),
-    )
+def edge_halfplane(e, f) -> HalfPlane:
+    """The points on or LEFT of the directed edge E→F
+    (side(P) = cross(F−E, P−E) ≥ 0) — a counter-clockwise convex AOI
+    keeps its interior. The crossing uses the signed-distance ratio
+    t = side(A)/(side(A) − side(P)). Coordinates are literals or
+    double Columns."""
+    ex, ey = _dbl(e[0]), _dbl(e[1])
+    dx, dy = _dbl(f[0]) - ex, _dbl(f[1]) - ey
 
+    def side(p: Column) -> Column:
+        return dx * (p["y"] - ey) - dy * (p["x"] - ex)
 
-def clip_ring_pts_to_rect(
-    open_ring: Column, xmin, ymin, xmax, ymax
-) -> Column:
-    """Sutherland–Hodgman clip of an ALREADY-PARSED open ring (see
-    ``open_ring_pts``) against the AOI rectangle — the pts-level core
-    of ``clip_ring_to_rect``, bit-identical passes."""
-    r = _clip_halfplane(open_ring, "x", xmin, keep_ge=True)
-    r = _clip_halfplane(r, "x", xmax, keep_ge=False)
-    r = _clip_halfplane(r, "y", ymin, keep_ge=True)
-    return _clip_halfplane(r, "y", ymax, keep_ge=False)
-
-
-def ring_area2x(ring: Column) -> Column:
-    """Twice the absolute shoelace area of an OPEN double-typed ring
-    (wrap-around edge included) — the clipped-geometry companion of
-    ``shoelace_area2x``. Returned as double; quantize at the caller
-    (for integral vertices — e.g. a slope-±1/axis-edged subject
-    clipped by an integer AOI, where every SH intersection lands on
-    the integer grid — the double arithmetic is exact well past any
-    survey-scale coordinate)."""
-
-    def area_(r):
-        n = F.size(r)
-        terms = F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: r[i]["x"] * r[(i + 1) % n]["y"]
-            - r[(i + 1) % n]["x"] * r[i]["y"],
-        )
-        s = F.aggregate(terms, F.lit(0.0), lambda acc, v: acc + v)
-        return F.when(n < 3, F.lit(0.0)).otherwise(F.abs(s))
-
-    return _let(ring, area_)
-
-
-def clip_area2x_rect(
-    wkt: str | Column, xmin, ymin, xmax, ymax
-) -> Column:
-    """Doubled intersection area of a WKT polygon with an AOI
-    rectangle, quantized to BIGINT — the clipped-acreage figure the
-    reference reads off the GIS after Clip_analysis
-    (gSSURGO_Clip.py:160 → gSSURGO_AcreageReport SHAPE_Area)."""
-    return F.round(
-        ring_area2x(clip_ring_to_rect(wkt, xmin, ymin, xmax, ymax))
-    ).cast("long")
-
-
-def clip_area2x_rect_pts(
-    ring: Column, xmin, ymin, xmax, ymax
-) -> Column:
-    """``clip_area2x_rect`` over an already-parsed open ring (see
-    ``open_ring_pts``): same clip passes, same shoelace, same
-    round/cast quantization — for joins that evaluate the clip once
-    per candidate PAIR and must not re-parse the WKT each time."""
-    return F.round(
-        ring_area2x(clip_ring_pts_to_rect(ring, xmin, ymin, xmax, ymax))
-    ).cast("long")
-
-
-def _ring_pts(ring_str: Column) -> Column:
-    """One ring body string ``"x y, x y, ..."`` → OPEN ring
-    ``array<struct<x:double,y:double>>`` (closing vertex dropped)."""
-    return _let(
-        F.transform(
-            F.split(ring_str, r",\s*"),
-            lambda p: F.struct(
-                F.split(F.trim(p), r"\s+").getItem(0).cast("double").alias("x"),
-                F.split(F.trim(p), r"\s+").getItem(1).cast("double").alias("y"),
-            ),
-        ),
-        lambda cc: F.slice(cc, 1, F.size(cc) - 1),
-    )
-
-
-def _rings_clip_area2x(rings_body: Column, xmin, ymin, xmax, ymax) -> Column:
-    """Clipped doubled area of one polygon given its ring-body strings
-    (element 0 = exterior, rest = holes): clip each ring, subtract the
-    holes' clipped areas from the exterior's. Valid because each hole
-    lies inside the exterior, so its AOI intersection lies inside the
-    exterior's AOI intersection — areas subtract exactly (no
-    partial-overlap terms)."""
-
-    def clip_ring(r: Column) -> Column:
-        return ring_area2x(
-            clip_ring_pts_to_rect(_ring_pts(r), xmin, ymin, xmax, ymax)
-        )
-
-    return _let(
-        F.transform(rings_body, clip_ring),
-        lambda a: a[0]
-        - F.aggregate(
-            F.slice(a, 2, F.greatest(F.size(a) - 1, F.lit(0))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-
-def clip_area2x_geom(
-    wkt: str | Column, xmin, ymin, xmax, ymax
-) -> Column:
-    """Doubled geometry∩AOI area for ANY WKT polygon text —
-    ``POLYGON`` (with or without interior rings) or ``MULTIPOLYGON``
-    (multipart mapunits are routine in real gSSURGO) — the full input
-    surface of the reference's Clip_analysis (gSSURGO_Clip.py:160).
-    Multipart area = Σ over parts of (exterior − holes), each ring
-    clipped by the same Sutherland–Hodgman passes; dispatch on the
-    WKT prefix stays one Column CASE, map-only."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-    # POLYGON ((ext), (hole)) → ring bodies
-    poly_rings = _let(
-        F.regexp_replace(
-            F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1), r"^\(|\)$", ""
-        ),
-        lambda body: F.split(body, r"\)\s*,\s*\("),
-    )
-    # MULTIPOLYGON (((ext), (hole)), ((ext2))) → per-part ring bodies
-    multi_area = _let(
-        F.regexp_replace(
-            F.regexp_extract(c, r"MULTIPOLYGON\s*\((.*)\)", 1),
-            r"^\(\s*\(|\)\s*\)$",
-            "",
-        ),
-        lambda body: F.aggregate(
-            F.transform(
-                F.split(body, r"\)\s*\)\s*,\s*\(\s*\("),
-                lambda part: _rings_clip_area2x(
-                    _let(part, lambda p: F.split(p, r"\)\s*,\s*\(")),
-                    xmin, ymin, xmax, ymax,
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    return F.round(
-        F.when(c.startswith("MULTIPOLYGON"), multi_area).otherwise(
-            _rings_clip_area2x(poly_rings, xmin, ymin, xmax, ymax)
-        )
-    ).cast("long")
-
-
-def _clip_halfplane_edge(
-    coords: Column, ex, ey, fx, fy
-) -> Column:
-    """One Sutherland–Hodgman pass against an ARBITRARY half-plane —
-    the set of points on or LEFT of the directed edge E→F
-    (``cross(F−E, P−E) >= 0``; a counter-clockwise convex AOI keeps
-    its interior). Generalizes ``_clip_halfplane``'s axis-aligned
-    bounds to the diagonal AOI edges real clip boundaries have
-    (gSSURGO_Clip.py:160 clips against arbitrary AOI featureclasses,
-    not bounding boxes). Same open-ring contract; the edge/boundary
-    intersection uses the exact signed-distance ratio
-    t = side(A)/(side(A) − side(B)) — A and B strictly straddle the
-    line so the denominator is nonzero by construction. Intersection
-    coordinates can carry ~1 ulp of double rounding; area consumers
-    quantize with one final round, which absorbs it for grid-exact
-    syntheses (slope-±1 AOI edges against axis-aligned subjects land
-    on integer coordinates up to that ulp)."""
-    exc = F.lit(float(ex)) if not isinstance(ex, Column) else ex
-    eyc = F.lit(float(ey)) if not isinstance(ey, Column) else ey
-    dxc = (F.lit(float(fx)) if not isinstance(fx, Column) else fx) - exc
-    dyc = (F.lit(float(fy)) if not isinstance(fy, Column) else fy) - eyc
-
-    def side(p):
-        return dxc * (p["y"] - eyc) - dyc * (p["x"] - exc)
-
-    def isect(a, p):
+    def isect(a: Column, p: Column) -> Column:
         t = side(a) / (side(a) - side(p))
         return F.struct(
             (a["x"] + (p["x"] - a["x"]) * t).alias("x"),
             (a["y"] + (p["y"] - a["y"]) * t).alias("y"),
         )
 
-    def pass_(c):
+    return HalfPlane(lambda p: side(p) >= 0, isect, True)
+
+
+def _signed_area2x(pts) -> float:
+    """Twice the signed shoelace area of a literal vertex list (no
+    closing vertex): positive when counter-clockwise."""
+    n = len(pts)
+    return sum(
+        pts[i][0] * pts[(i + 1) % n][1] - pts[(i + 1) % n][0] * pts[i][1]
+        for i in range(n)
+    )
+
+
+def convex_halfplanes(vertices) -> list[HalfPlane]:
+    """A convex AOI polygon (vertex list, no closing vertex) as one
+    directed-edge half-plane per edge. Literal vertex lists are
+    oriented counter-clockwise here and rejected when not convex;
+    Column vertices must already be CCW and convex."""
+    pts = list(vertices)
+    n = len(pts)
+    if all(not isinstance(v, Column) for p in pts for v in p):
+        def cross(i: int) -> float:
+            (ax, ay), (bx, by), (cx, cy) = (
+                pts[i - 1], pts[i], pts[(i + 1) % n]
+            )
+            return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+
+        if _signed_area2x(pts) < 0:
+            pts.reverse()
+        if any(cross(i) < 0 for i in range(n)):
+            raise ValueError(f"convex_halfplanes: not convex: {vertices}")
+    return [edge_halfplane(pts[i], pts[(i + 1) % n]) for i in range(n)]
+
+
+def _halfplane_pass(ring: Column, hp: HalfPlane) -> Column:
+    """One Sutherland–Hodgman pass (Sutherland & Hodgman, CACM 1974)
+    over an OPEN double ring: per directed edge (A, B) emit B if both
+    are inside, the crossing I when leaving, [I, B] when entering.
+    Empty or fully-outside rings clip to an empty array."""
+
+    def run(c: Column) -> Column:
         n = F.size(c)
-        emitted = F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.when(
-                (side(c[i]) >= 0) & (side(c[(i + 1) % n]) >= 0),
-                F.array(c[(i + 1) % n]),
+
+        def emit(i: Column) -> Column:
+            a, b = c[i], c[(i + 1) % n]
+            return (
+                F.when(hp.inside(a) & hp.inside(b), F.array(b))
+                .when(hp.inside(a) & ~hp.inside(b), F.array(hp.isect(a, b)))
+                .when(
+                    ~hp.inside(a) & hp.inside(b),
+                    F.array(hp.isect(a, b), b),
+                )
+                .otherwise(F.array().cast(RING_T))
             )
-            .when(
-                (side(c[i]) >= 0) & ~(side(c[(i + 1) % n]) >= 0),
-                F.array(isect(c[i], c[(i + 1) % n])),
-            )
-            .when(
-                ~(side(c[i]) >= 0) & (side(c[(i + 1) % n]) >= 0),
-                F.array(isect(c[i], c[(i + 1) % n]), c[(i + 1) % n]),
-            )
-            .otherwise(
-                F.array().cast("array<struct<x:double,y:double>>")
-            ),
+
+        # sequence(0, -1) steps BACKWARDS on an empty ring — guard it
+        return F.when(n < 1, c).otherwise(
+            F.flatten(F.transform(F.sequence(F.lit(0), n - 1), emit))
         )
-        return F.when(n < 1, c).otherwise(F.flatten(emitted))
 
-    return _let(coords, pass_)
-
-
-def clip_ring_convex(ring: Column, edges) -> Column:
-    """Clip an OPEN double-typed ring against a convex AOI given as a
-    list of directed half-plane edges ``[((ex, ey), (fx, fy)), ...]``
-    (counter-clockwise boundary: interior on the left of every edge).
-    One chained ``_clip_halfplane_edge`` pass per edge — the AOI's
-    edge list is query-plan metadata (one AOI clips the whole layer),
-    so the plan stays map-only with |edges| array passes and zero
-    shuffles regardless of layer size."""
-    out = ring
-    for (ex, ey), (fx, fy) in edges:
-        out = _clip_halfplane_edge(out, ex, ey, fx, fy)
-    return out
+    return _let(ring, run)
 
 
-def _rings_clip_area2x_convex(rings_body: Column, edges) -> Column:
-    """Clipped doubled area of one polygon (ring-body strings, element
-    0 = exterior then holes) against a convex edge-list AOI: clip each
-    ring, subtract the holes' clipped areas from the exterior's —
-    exact because each hole's AOI intersection nests inside the
-    exterior's (same argument as ``_rings_clip_area2x``)."""
+def clip_ring(ring: Column, halfplanes: list[HalfPlane]) -> Column:
+    """Clip an OPEN double ring (``RING_T``) against the intersection
+    of ``halfplanes``: one chained pass each, every pass binding its
+    input once (``_let``), so the plan grows with the SUM of the pass
+    sizes. The region is convex, so the result is exact for any simple
+    subject ring (degenerate duplicate vertices it may emit are
+    shoelace-neutral; ``normalize_ring`` drops them)."""
+    return reduce(_halfplane_pass, halfplanes, ring)
 
-    def clip_ring(r: Column) -> Column:
-        return ring_area2x(clip_ring_convex(_ring_pts(r), edges))
 
-    return _let(
-        F.transform(rings_body, clip_ring),
-        lambda a: a[0]
-        - F.aggregate(
-            F.slice(a, 2, F.greatest(F.size(a) - 1, F.lit(0))),
-            F.lit(0.0),
+def clip_area2x(wkt: str | Column, pieces: list[list[HalfPlane]]) -> Column:
+    """Doubled area of WKT polygon ∩ AOI, quantized to BIGINT — the
+    clipped acreage the reference reads off ``SHAPE_Area`` after
+    Clip_analysis. The AOI is a list of interior-DISJOINT convex
+    pieces, each a half-plane list (one ``rect_halfplanes`` for a
+    rectangle; a ``rectilinear_decompose`` or
+    ``triangulate_simple_polygon`` decomposition for a concave AOI), so
+    areas add with no overlap terms: round(Σ pieces Σ parts
+    (exterior − holes)). The WKT parses once; any POLYGON /
+    MULTIPOLYGON with holes, EMPTY → 0. Map-only."""
+    if not pieces:
+        return F.lit(0).cast("long")
+
+    def total(parts: Column) -> Column:
+        return reduce(
             lambda acc, v: acc + v,
-        ),
-    )
+            [
+                _net_area(
+                    parts,
+                    lambda r, hp=hp: ring_area2x(clip_ring(r.cast(RING_T), hp)),
+                    F.lit(0.0),
+                )
+                for hp in pieces
+            ],
+        )
+
+    return F.round(_let(parse_geom_parts(wkt), total)).cast("long")
 
 
-def clip_area2x_convex(wkt: str | Column, edges) -> Column:
-    """Doubled polygon∩AOI area for an arbitrary CONVEX AOI polygon
-    (edge list, CCW) over any ``POLYGON`` WKT with optional interior
-    rings — the diagonal-boundary generalization of
-    ``clip_area2x_geom``. One final round quantizes the ulp
-    noise general-edge intersections can carry."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-    rings = _let(
-        F.regexp_replace(
-            F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1), r"^\(|\)$", ""
+def clip_wkt(wkt: str | Column, halfplanes: list[HalfPlane]) -> Column:
+    """Clipped GEOMETRY of WKT polygon ∩ convex AOI as
+    ``struct<clip_wkt:string, clip_a2x:bigint>`` — the feature output
+    of Clip_analysis. Every ring of every part clips, snaps back to the
+    integer grid when a half-plane is a general edge (axis passes are
+    exact), and canonicalizes (``normalize_ring``). A part drops when
+    its exterior dies or its surviving holes fill it (hole ⊆ exterior,
+    so equal area is equal region); dead holes drop. The survivors
+    serialize in input order as ``POLYGON EMPTY``, ``POLYGON`` or
+    ``MULTIPOLYGON``; ``clip_a2x`` is round(Σ survivors (exterior −
+    holes)). Integer-grid output contract as ``ring_to_wkt``."""
+    snap = any(hp.general for hp in halfplanes)
+
+    def clip_norm(r: Column) -> Column:
+        c = clip_ring(r.cast(RING_T), halfplanes)
+        return normalize_ring(snap_ring_ints(c) if snap else c)
+
+    def part(rs: Column) -> Column:
+        ext = rs[0]
+        holes = F.filter(
+            F.slice(rs, 2, F.size(rs) - 1), lambda h: F.size(h) >= 3
+        )
+        ha = F.aggregate(
+            F.transform(holes, ring_area2x), F.lit(0.0), lambda a, v: a + v
+        )
+        a2x = ring_area2x(ext) - ha
+        return F.struct(
+            ((F.size(ext) >= 3) & ((F.size(holes) == 0) | (a2x != 0)))
+            .alias("live"),
+            F.concat(F.array(ext), holes).alias("rings"),
+            a2x.alias("a2x"),
+        )
+
+    def body(s: Column) -> Column:
+        return F.concat(
+            F.lit("("),
+            F.array_join(F.transform(s["rings"], _ring_body), ", "),
+            F.lit(")"),
+        )
+
+    live = F.filter(
+        F.transform(
+            F.transform(
+                parse_geom_parts(wkt),
+                lambda rings: F.transform(rings, clip_norm),
+            ),
+            part,
         ),
-        lambda body: F.split(body, r"\)\s*,\s*\("),
+        lambda s: s["live"],
     )
-    return F.round(_rings_clip_area2x_convex(rings, edges)).cast("long")
+    return _let(
+        live,
+        lambda ps: F.struct(
+            _parts_to_wkt(F.transform(ps, body)).alias("clip_wkt"),
+            F.round(
+                F.aggregate(
+                    F.transform(ps, lambda s: s["a2x"]),
+                    F.lit(0.0),
+                    lambda a, v: a + v,
+                )
+            )
+            .cast("long")
+            .alias("clip_a2x"),
+        ),
+    )
 
 
 def rectilinear_decompose(
@@ -507,7 +520,7 @@ def triangulate_simple_polygon(
     orientation, closing vertex optional) into CCW triangles —
     driver-side pure Python, completing the AOI story: ANY simple
     concave AOI decomposes into convex (triangle) pieces for
-    ``clip_ring_convex``, clipped areas summing exactly because the
+    ``convex_halfplanes``, clipped areas summing exactly because the
     triangles are interior-disjoint. O(n²) is irrelevant here: the
     AOI is one small polygon (broadcast-scale metadata), never data.
 
@@ -525,11 +538,7 @@ def triangulate_simple_polygon(
         return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
 
     # normalize to CCW (positive signed area)
-    signed2x = sum(
-        pts[i][0] * pts[(i + 1) % n][1] - pts[(i + 1) % n][0] * pts[i][1]
-        for i in range(n)
-    )
-    poly = list(pts) if signed2x > 0 else list(reversed(pts))
+    poly = list(pts) if _signed_area2x(pts) > 0 else list(reversed(pts))
 
     def point_in_tri(p, a, b, c):
         # INCLUSIVE containment (>= 0): a vertex ON the ear's edge
@@ -576,71 +585,6 @@ def triangulate_simple_polygon(
     return tris
 
 
-def convex_piece_edges(
-    piece: list[tuple[float, float]]
-) -> list[tuple[tuple[float, float], tuple[float, float]]]:
-    """CCW directed-edge list of one convex piece — the
-    ``clip_ring_convex`` input form."""
-    n = len(piece)
-    return [(piece[i], piece[(i + 1) % n]) for i in range(n)]
-
-
-def clip_area2x_pieces(wkt: str | Column, pieces) -> Column:
-    """Doubled polygon∩AOI area for an AOI given as DISJOINT convex
-    pieces (vertex lists, CCW or any orientation per
-    ``triangulate_simple_polygon`` output): Σ over pieces of the
-    holes-aware convex clip — the fully-general concave-AOI form
-    (rectilinear AOIs should prefer ``clip_area2x_rectilinear``'s
-    fewer, axis-aligned pieces). Map-only; plan ∝ Σ piece edges."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-    rings = _let(
-        F.regexp_replace(
-            F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1), r"^\(|\)$", ""
-        ),
-        lambda body: F.split(body, r"\)\s*,\s*\("),
-    )
-    if not pieces:
-        return F.lit(0).cast("long")
-
-    def total(rb: Column) -> Column:
-        s = None
-        for piece in pieces:
-            term = _rings_clip_area2x_convex(rb, convex_piece_edges(piece))
-            s = term if s is None else s + term
-        return s
-
-    return F.round(_let(rings, total)).cast("long")
-
-
-def clip_area2x_rectilinear(
-    wkt: str | Column, pieces: list[tuple[float, float, float, float]]
-) -> Column:
-    """Doubled polygon∩AOI area for a CONCAVE rectilinear AOI given as
-    its disjoint rectangle decomposition (``rectilinear_decompose``):
-    Σ over pieces of the holes-aware rectangle clip. Disjoint pieces
-    ⇒ the per-piece clipped regions are disjoint ⇒ areas sum exactly.
-    Map-only; plan size grows with |pieces| × rings, never with data."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-    rings = _let(
-        F.regexp_replace(
-            F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1), r"^\(|\)$", ""
-        ),
-        lambda body: F.split(body, r"\)\s*,\s*\("),
-    )
-
-    if not pieces:
-        return F.lit(0).cast("long")
-
-    def total(rb: Column) -> Column:
-        s = None
-        for x0, y0, x1, y1 in pieces:
-            term = _rings_clip_area2x(rb, x0, y0, x1, y1)
-            s = term if s is None else s + term
-        return s
-
-    # bind the parsed rings ONCE; each piece's clip references the
-    # binding instead of re-inlining the WKT parse |pieces| times
-    return F.round(_let(rings, total)).cast("long")
 
 
 def bands_to_ring(bands: Column) -> Column:
@@ -774,7 +718,7 @@ def normalize_ring(ring: Column) -> Column:
 def snap_ring_ints(ring: Column) -> Column:
     """Round every ring coordinate to the nearest integer (kept as
     double). General-edge Sutherland–Hodgman intersections
-    (``_clip_halfplane_edge``) compute t = side/(side−side) and
+    (``edge_halfplane``) compute t = side/(side−side) and
     interpolate — up to ~1 ulp of double rounding even when the TRUE
     intersection is integral (axis/45° AOI edges against integer
     subjects guarantee that here). Area consumers absorb the ulp with
@@ -791,6 +735,43 @@ def snap_ring_ints(ring: Column) -> Column:
     )
 
 
+def _ring_body(r: Column) -> Column:
+    """``(x y, ..., x y)`` text of an OPEN integer-valued ring with the
+    closing vertex re-appended; coordinates print as BIGINT."""
+
+    def fmt(p: Column) -> Column:
+        return F.concat(
+            p["x"].cast("long").cast("string"),
+            F.lit(" "),
+            p["y"].cast("long").cast("string"),
+        )
+
+    return F.concat(
+        F.lit("("),
+        F.array_join(F.transform(r, fmt), ", "),
+        F.lit(", "),
+        fmt(r[0]),
+        F.lit(")"),
+    )
+
+
+def _parts_to_wkt(bodies: Column) -> Column:
+    """Part bodies ``((ext), (hole), ...)`` → canonical WKT by part
+    count: 0 → ``POLYGON EMPTY``, 1 → ``POLYGON``, n → ``MULTIPOLYGON``
+    — the multi-feature collapse arcpy.Clip_analysis output implies
+    (gSSURGO_Clip.py:160)."""
+    return _let(
+        bodies,
+        lambda b: F.when(F.size(b) == 0, F.lit("POLYGON EMPTY"))
+        .when(F.size(b) == 1, F.concat(F.lit("POLYGON "), b[0]))
+        .otherwise(
+            F.concat(
+                F.lit("MULTIPOLYGON ("), F.array_join(b, ", "), F.lit(")")
+            )
+        ),
+    )
+
+
 def ring_to_wkt(ring: Column) -> Column:
     """OPEN integer-valued ring → WKT ``POLYGON ((x y, ..., x y))``
     text with the closing vertex re-appended, or ``POLYGON EMPTY``
@@ -798,85 +779,10 @@ def ring_to_wkt(ring: Column) -> Column:
     clip (Clip_analysis returns clipped features, not areas;
     gSSURGO_Clip.py:160). Coordinates print as BIGINT (the integer
     clip syntheses guarantee exact integer vertices)."""
-
-    def fmt(p):
-        return F.concat(
-            p["x"].cast("long").cast("string"),
-            F.lit(" "),
-            p["y"].cast("long").cast("string"),
-        )
-
     return _let(
         ring,
         lambda r: F.when(F.size(r) < 3, F.lit("POLYGON EMPTY")).otherwise(
-            F.concat(
-                F.lit("POLYGON (("),
-                F.array_join(F.transform(r, fmt), ", "),
-                F.lit(", "),
-                fmt(r[0]),
-                F.lit("))"),
-            )
-        ),
-    )
-
-
-def parse_geom_rings(wkt: str | Column) -> Column:
-    """ALL rings of ALL parts of a WKT POLYGON / MULTIPOLYGON as
-    ``array<array<struct<x:bigint,y:bigint>>>`` (open rings, closing
-    vertex dropped) — the parse stage of ``point_in_geom``, public so
-    row-multiplying consumers (the cell-inventory explode) parse each
-    polygon ONCE and test containment per row against the parsed
-    arrays instead of re-running regex/split/cast per cell.
-
-    Coordinates FAIL LOUDLY when off the integer contract: each token
-    parses as double first and a non-integral (or unparseable) value
-    raises at runtime via ``raise_error`` rather than silently casting
-    to NULL — a ``'1.5 2.5'`` vertex would otherwise make
-    ``polygon_cell_inventory`` drop the polygon with zero cells."""
-    c = F.col(wkt) if isinstance(wkt, str) else wkt
-
-    def to_int(tok: Column, axis: str) -> Column:
-        # try_cast: unparseable -> NULL -> the raise_error branch with
-        # OUR message, identically under ANSI-on (Spark 4 default) and
-        # ANSI-off sessions (a plain cast would throw CAST_INVALID_INPUT
-        # first under ANSI, bypassing the contract message)
-        d = tok.try_cast("double")
-        return F.when(d == F.round(d, 0), d.cast("long")).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "parse_geom_rings: non-integral or unparseable "
-                        + axis + " coordinate '"
-                    ),
-                    F.coalesce(tok, F.lit("<null>")),
-                    F.lit("' (integer-grid contract)"),
-                )
-            ).cast("long")
-        )
-
-    rings = F.split(
-        F.regexp_replace(
-            F.regexp_extract(c, r"POLYGON\s*\((.*)\)", 1),
-            r"^\(+|\)+$",
-            "",
-        ),
-        r"\)+\s*,\s*\(+",
-    )
-    return F.transform(
-        rings,
-        lambda r: _let(
-            F.transform(
-                F.split(r, r",\s*"),
-                lambda p: F.struct(
-                    to_int(
-                        F.split(F.trim(p), r"\s+").getItem(0), "x"
-                    ).alias("x"),
-                    to_int(
-                        F.split(F.trim(p), r"\s+").getItem(1), "y"
-                    ).alias("y"),
-                ),
-            ),
-            lambda cc: F.slice(cc, 1, F.size(cc) - 1),
+            F.concat(F.lit("POLYGON ("), _ring_body(r), F.lit(")"))
         ),
     )
 
@@ -1301,23 +1207,6 @@ def rings_to_multiwkt(parts: Column) -> Column:
     output arcpy.Clip_analysis produces when the AOI disconnects a
     subject (gSSURGO_Clip.py:160). Integer coordinates (print as
     BIGINT) — same contract as ``ring_to_wkt``."""
-
-    def fmt(p):
-        return F.concat(
-            p["x"].cast("long").cast("string"),
-            F.lit(" "),
-            p["y"].cast("long").cast("string"),
-        )
-
-    def body(r: Column) -> Column:
-        return F.concat(
-            F.lit("(("),
-            F.array_join(F.transform(r, fmt), ", "),
-            F.lit(", "),
-            fmt(r[0]),
-            F.lit("))"),
-        )
-
     kept = _let(
         F.transform(parts, normalize_ring),
         lambda ps: F.filter(
@@ -1332,15 +1221,8 @@ def rings_to_multiwkt(parts: Column) -> Column:
         .when(a[0]["y"] > b[0]["y"], F.lit(1))
         .otherwise(F.lit(0)),
     )
-    return _let(
-        ordered,
-        lambda ps: F.when(F.size(ps) == 0, F.lit("POLYGON EMPTY"))
-        .when(F.size(ps) == 1, ring_to_wkt(ps[0]))
-        .otherwise(
-            F.concat(
-                F.lit("MULTIPOLYGON ("),
-                F.array_join(F.transform(ps, body), ", "),
-                F.lit(")"),
-            )
-        ),
+    return _parts_to_wkt(
+        F.transform(
+            ordered, lambda r: F.concat(F.lit("("), _ring_body(r), F.lit(")"))
+        )
     )

@@ -33,6 +33,30 @@ from ._qcore import (
     synth_component,
 )
 from .q_sdv import sdv_dcp_categorical, sdv_pp_sum, sdv_wta
+from .functions.geometry import (
+    RING_T,
+    _let,
+    _signed_area2x,
+    acres_e4,
+    bands_to_ring,
+    clip_area2x,
+    clip_ring,
+    clip_wkt,
+    convex_halfplanes,
+    edge_halfplane,
+    normalize_ring,
+    point_in_geom,
+    rect_halfplanes,
+    rectilinear_decompose,
+    ring_area2x,
+    ring_to_wkt,
+    rings_to_multiwkt,
+    shoelace_area2x,
+    snap_ring_ints,
+    split_bridged_ring_y,
+    stack_band_rings,
+    triangulate_simple_polygon,
+)
 
 
 
@@ -520,6 +544,123 @@ def state_survey_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# clip family (gSSURGO_Clip.py:160, arcpy.Clip_analysis): every query is a
+# thin caller of functions/geometry.py's one clip core
+# ---------------------------------------------------------------------------
+
+
+def _rect(x0, y0, x1, y1) -> list:
+    """CCW vertex list of the rectangle [x0, x1] × [y0, y1]."""
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+
+
+def _ring_text(pts) -> Column:
+    """WKT ring text ``(x y, ..., x y)`` of a vertex list, closed."""
+    return F.concat(
+        F.lit("("),
+        F.concat_ws(", ", *[
+            F.concat(x.cast("string"), F.lit(" "), y.cast("string"))
+            for x, y in [*pts, pts[0]]
+        ]),
+        F.lit(")"),
+    )
+
+
+def _ring_array(pts) -> Column:
+    """The OPEN double ring (``RING_T``) of a vertex list, for the
+    concave queries that clip one ring without a WKT round trip."""
+    return F.array(*[
+        F.struct(x.cast("double").alias("x"), y.cast("double").alias("y"))
+        for x, y in pts
+    ])
+
+
+def _holes_subject(
+    k: Column, hole: bool = True, east: bool = False
+) -> tuple[Column, Column]:
+    """The clip family's subject polygon per key: the rectangle at
+    (k%100, k%57) sized (k%13+1) × (k%7+1); with ``hole``, an interior
+    hole (k%3+1 or less) × (k%2+1 or less) at +1,+1 when the exterior
+    is at least 3 × 3; with ``east``, a second rectangle 20 m east
+    sized (k%4+1) × (k%3+1) as a MULTIPOLYGON part, except every third
+    key, which stays a plain POLYGON. Returns (wkt, poly_a2x), the
+    second being the first part's closed-form doubled area."""
+    x0, y0 = k % 100, k % 57
+    w, h = k % 13 + 1, k % 7 + 1
+    rings, hole_a2x = [_ring_text(_rect(x0, y0, x0 + w, y0 + h))], F.lit(0)
+    if hole:
+        hw, hh = F.least(w - 2, k % 3 + 1), F.least(h - 2, k % 2 + 1)
+        has_hole = (w >= 3) & (h >= 3)
+        hole_ring = _ring_text(_rect(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh))
+        rings.append(
+            F.when(has_hole, F.concat(F.lit(", "), hole_ring)).otherwise("")
+        )
+        hole_a2x = F.when(has_hole, 2 * hw * hh).otherwise(F.lit(0))
+    part1 = F.concat(*rings)
+    wkt = F.concat(F.lit("POLYGON ("), part1, F.lit(")"))
+    if east:
+        part2 = _ring_text(
+            _rect(x0 + 20, y0, x0 + 20 + k % 4 + 1, y0 + k % 3 + 1)
+        )
+        wkt = F.when(k % 3 == 0, wkt).otherwise(
+            F.concat(
+                F.lit("MULTIPOLYGON (("), part1, F.lit("), ("), part2,
+                F.lit("))"),
+            )
+        )
+    return wkt, (2 * w * h - hole_a2x).cast("long")
+
+
+def _aoi_window(k: Column, wide: bool = False) -> list[Column]:
+    """The per-key AOI rectangle (x0, y0, x1, y1) as doubles: offset
+    (k%5−2, k%4−1) from the subject corner, (k%11+1) wide — (k%29+1)
+    when ``wide``, reaching the east part — and (k%6+1) tall. Lands
+    anywhere from disjoint to fully covering."""
+    ax0 = (k % 100 + k % 5 - 2).cast("double")
+    ay0 = (k % 57 + k % 4 - 1).cast("double")
+    ax1 = ax0 + ((k % 29 if wide else k % 11) + 1).cast("double")
+    return [ax0, ay0, ax1, ay0 + (k % 6 + 1).cast("double")]
+
+
+def _pentagon(k: Column, fn) -> Column:
+    """``fn`` applied to the convex pentagon AOI of the convex queries:
+    the AOI window with its upper-right corner cut by the 45°
+    half-plane x + y <= c, c = x1 + y1 − k%4 (k%4 = 0 is the tangent
+    line through the corner, which cuts nothing). The per-row bounds
+    bind once (``_let``): every pass reads them per vertex."""
+    ax0, ay0, ax1, ay1 = _aoi_window(k)
+    bounds = F.struct(
+        ax0.alias("x0"), ay0.alias("y0"), ax1.alias("x1"), ay1.alias("y1"),
+        (ax1 + ay1 - (k % 4).cast("double")).alias("c"),
+    )
+    return _let(bounds, lambda b: fn(
+        rect_halfplanes(b["x0"], b["y0"], b["x1"], b["y1"])
+        + [edge_halfplane((b["c"], 0.0), (b["c"] - 1, 1.0))]
+    ))
+
+
+def _clip_out(spark: SparkSession, sf_dir: str, out: Column) -> DataFrame:
+    """(okey, clip_wkt, clip_a2x) per customer from a ``clip_wkt``-shaped
+    struct."""
+    return _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("okey"),
+        out["clip_wkt"].alias("clip_wkt"),
+        out["clip_a2x"].alias("clip_a2x"),
+    )
+
+
+def _probes(spark: SparkSession, sf_dir: str, wkt, px, py) -> DataFrame:
+    """(okey, px, py, inside) per customer: ``point_in_geom`` of the
+    probe against ``wkt``."""
+    return _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("okey"),
+        px.alias("px"),
+        py.alias("py"),
+        point_in_geom(wkt, px, py).alias("inside"),
+    )
+
+
 def clip_select_by_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip / Select-By-Location core (gSSURGO_Clip.py drives the
     GIS's clip; the containment test is the portable half): synthetic
@@ -529,30 +670,16 @@ def clip_select_by_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over the parsed WKT ring. The oracle derives truth
     INDEPENDENTLY from the rectangle bounds, certifying the ray-cast
     parse + crossing logic end-to-end. Map-only: zero shuffles."""
-    from .functions.geometry import point_in_geom
-
     k = F.col("c_custkey")
     x0, y0 = (k % 100) * 2, (k % 57) * 2
     x1 = x0 + (k % 13 + 1) * 2
     y1 = y0 + (k % 7 + 1) * 2
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
     wkt = F.concat(
-        F.lit("POLYGON (("),
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep, pt(x0, y1),
-        sep, pt(x0, y0),
-        F.lit("))"),
+        F.lit("POLYGON ("), _ring_text(_rect(x0, y0, x1, y1)), F.lit(")")
     )
     px = x0 + (k % 23) * 2 - 9  # odd: misses every even-grid edge
     py = y0 + (k % 19) * 2 - 7
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        px.alias("px"),
-        py.alias("py"),
-        point_in_geom(wkt, px, py).alias("inside"),
-    )
+    return _probes(spark, sf_dir, wkt, px, py)
 
 
 def clip_polygon_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,7 +689,7 @@ def clip_polygon_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     acreage reads the CLIPPED geometry's area. Here the clip itself is
     portable: Sutherland–Hodgman against the AOI rectangle's four
     half-planes, pure Column array passes over the parsed WKT ring
-    (functions/geometry.py:clip_ring_to_rect — no UDF, map-only, zero
+    (functions/geometry.py:clip_area2x — no UDF, map-only, zero
     shuffles; at 100 TB this is embarrassingly parallel per polygon).
 
     Per customer: a synthetic subject polygon on the integer grid —
@@ -578,47 +705,28 @@ def clip_polygon_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end. tests/test_round10.py adds the hypothesis property
     layer (clip ≤ min(poly, AOI); half-plane split partitions the
     area; agreement with an independent pure-Python SH)."""
-    from .functions.geometry import clip_area2x_rect, shoelace_area2x
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    s = k % 13 + 1          # rect width / triangle leg
-    h = k % 7 + 1           # rect height
-    tri = k % 3 == 0
-    x1 = x0 + s
-    y1 = F.when(tri, y0 + s).otherwise(y0 + h)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    rect_wkt = F.concat(
-        F.lit("POLYGON (("),
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep, pt(x0, y1),
-        sep, pt(x0, y0), F.lit("))"),
-    )
+    x0, y0, s = k % 100, k % 57, k % 13 + 1
     tri_wkt = F.concat(
-        F.lit("POLYGON (("),
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x0, y1), sep, pt(x0, y0),
-        F.lit("))"),
+        F.lit("POLYGON ("),
+        _ring_text([(x0, y0), (x0 + s, y0), (x0, y0 + s)]),
+        F.lit(")"),
     )
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
+    ax0, ay0, ax1, ay1 = _aoi_window(k)
     base = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        F.when(tri, tri_wkt).otherwise(rect_wkt).alias("wkt"),
+        F.when(k % 3 == 0, tri_wkt)
+        .otherwise(_holes_subject(k, hole=False)[0]).alias("wkt"),
         ax0.alias("ax0"), ay0.alias("ay0"),
         ax1.alias("ax1"), ay1.alias("ay1"),
     )
+    aoi = [F.col(c) for c in ("ax0", "ay0", "ax1", "ay1")]
     return base.select(
         "okey",
         shoelace_area2x("wkt").alias("poly_a2x"),
         (2 * (F.col("ax1") - F.col("ax0")) * (F.col("ay1") - F.col("ay0")))
         .cast("long").alias("aoi_a2x"),
-        clip_area2x_rect(
-            "wkt", F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
-        ).alias("clip_a2x"),
+        clip_area2x("wkt", [rect_halfplanes(*aoi)]).alias("clip_a2x"),
     )
 
 
@@ -629,42 +737,20 @@ def clip_select_with_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers only the exterior test. Even-grid rectangle + hole, odd-grid
     probes (never edge-incident); oracle truth derived independently
     from the rectangle bounds: inside ext AND NOT inside hole."""
-    from .functions.geometry import point_in_geom
-
     k = F.col("c_custkey")
     x0, y0 = (k % 100) * 2, (k % 57) * 2
-    w = (k % 13 + 2) * 2            # >= 4: room for an interior hole
-    h = (k % 7 + 2) * 2
-    x1, y1 = x0 + w, y0 + h
-    hx0, hy0 = x0 + 2, y0 + 2
+    x1, y1 = x0 + (k % 13 + 2) * 2, y0 + (k % 7 + 2) * 2  # room for a hole
     # hole clamped INSIDE the exterior (touching an edge is fine —
     # parity of coincident-edge crossings stays correct for the
     # never-edge-incident odd-grid probes; poking out would not be)
-    hx1 = F.least(hx0 + (k % 3 + 1) * 2, x1)
-    hy1 = hy0 + 2
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(a, b, c, d):
-        return F.concat(
-            F.lit("("), pt(a, b), sep, pt(c, b), sep, pt(c, d), sep,
-            pt(a, d), sep, pt(a, b), F.lit(")"),
-        )
-
+    hole = _rect(x0 + 2, y0 + 2, F.least(x0 + 2 + (k % 3 + 1) * 2, x1), y0 + 4)
     wkt = F.concat(
-        F.lit("POLYGON ("), ring(x0, y0, x1, y1), F.lit(", "),
-        ring(hx0, hy0, hx1, hy1), F.lit(")"),
+        F.lit("POLYGON ("), _ring_text(_rect(x0, y0, x1, y1)), F.lit(", "),
+        _ring_text(hole), F.lit(")"),
     )
     px = x0 + (k % 23) * 2 - 9  # odd: misses every even-grid edge
     py = y0 + (k % 19) * 2 - 7
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        px.alias("px"),
-        py.alias("py"),
-        point_in_geom(wkt, px, py).alias("inside"),
-    )
+    return _probes(spark, sf_dir, wkt, px, py)
 
 
 def clip_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,56 +758,19 @@ def clip_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     gSSURGO mapunit polygons routinely carry them; Clip_analysis
     handles them natively): every ring is clipped independently and
     the holes' clipped areas subtract from the exterior's
-    (functions/geometry.py:clip_area2x_geom). Synthesis: the
+    (functions/geometry.py:clip_area2x). Synthesis: the
     rectangle subjects of clip_polygon_intersect, with an interior
     hole punched when the exterior is big enough (w, h >= 3) — a
     third of customers get hole-less polygons, exercising the
     single-ring path through the multi-ring parser. The oracle is
     pure closed form: overlap(ext, AOI) − overlap(hole, AOI).
     Map-only, zero shuffles."""
-    from .functions.geometry import clip_area2x_geom
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    x1, y1 = x0 + w, y0 + h
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            F.lit("("),
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-            F.lit(")"),
-        )
-
-    wkt = F.concat(
-        F.lit("POLYGON ("),
-        ring(x0, y0, x1, y1),
-        F.when(
-            has_hole,
-            F.concat(
-                F.lit(", "),
-                ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit(")"),
-    )
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-    hole_a2x = F.when(has_hole, 2 * hw * hh).otherwise(F.lit(0))
+    wkt, poly_a2x = _holes_subject(k)
     return _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        (2 * w * h - hole_a2x).cast("long").alias("poly_a2x"),
-        clip_area2x_geom(wkt, ax0, ay0, ax1, ay1).alias("clip_a2x"),
+        poly_a2x.alias("poly_a2x"),
+        clip_area2x(wkt, [rect_halfplanes(*_aoi_window(k))]).alias("clip_a2x"),
     )
 
 
@@ -729,58 +778,17 @@ def clip_multipolygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intersection clip over the FULL WKT input surface of
     Clip_analysis — MULTIPOLYGON parts (multipart mapunits are routine
     in real gSSURGO) with interior rings, plus plain POLYGON rows
-    through the same dispatch (functions/geometry.py:clip_area2x_geom).
+    through the same parse (functions/geometry.py:clip_area2x).
     Synthesis: two-part multipolygons (part 1 = the holes-query
     subject, part 2 a second rectangle 20 m east, reachable by the
     widened AOI for some customers) with every third customer a plain
     POLYGON. Oracle: pure closed-form overlap sums. Map-only."""
-    from .functions.geometry import clip_area2x_geom
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pw, ph = k % 4 + 1, k % 3 + 1
-    plain = k % 3 == 0
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            F.lit("("),
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-            F.lit(")"),
-        )
-
-    part1 = F.concat(
-        ring(x0, y0, x0 + w, y0 + h),
-        F.when(
-            has_hole,
-            F.concat(F.lit(", "),
-                     ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-        ).otherwise(F.lit("")),
-    )
-    part2 = ring(x0 + 20, y0, x0 + 20 + pw, y0 + ph)
-    wkt = F.when(
-        plain, F.concat(F.lit("POLYGON ("), part1, F.lit(")"))
-    ).otherwise(
-        F.concat(
-            F.lit("MULTIPOLYGON (("), part1, F.lit("), ("), part2,
-            F.lit("))"),
-        )
-    )
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 29 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
+    wkt, _ = _holes_subject(k, east=True)
+    aoi = rect_halfplanes(*_aoi_window(k, wide=True))
     return _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        clip_area2x_geom(wkt, ax0, ay0, ax1, ay1).alias("clip_a2x"),
+        clip_area2x(wkt, [aoi]).alias("clip_a2x"),
     )
 
 
@@ -789,56 +797,20 @@ def clip_polygon_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     FEATURES, not areas (gSSURGO_Clip.py:160); the area queries cover
     the acreage half only. Per customer: rect subject ∩ rect AOI,
     clipped by the same Sutherland–Hodgman passes, then CANONICALIZED
-    (functions/geometry.py:normalize_ring — consecutive-duplicate and
+    (functions/geometry.py:clip_wkt — consecutive-duplicate and
     collinear vertices SH emits on boundary-aligned edges dropped,
     ring rotated to the lexicographic-min vertex) and serialized back
-    to WKT with integer coordinates (ring_to_wkt; 'POLYGON EMPTY' when
-    the intersection is empty or degenerate). The oracle CONSTRUCTS
-    the overlap rectangle's canonical WKT directly from the closed
-    form — matching strings certify the clipped vertex set itself,
-    not just its area. Orientation note: subjects are CCW and SH
-    preserves orientation, so the canonical ring runs (a p, b p, b q,
-    a q). Map-only, zero shuffles."""
-    from .functions.geometry import (
-        clip_ring_to_rect,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
-    )
-
+    to WKT with integer coordinates ('POLYGON EMPTY' when the
+    intersection is empty or degenerate). The oracle CONSTRUCTS the
+    overlap rectangle's canonical WKT directly from the closed form —
+    matching strings certify the clipped vertex set itself, not just
+    its area. Orientation note: subjects are CCW and SH preserves
+    orientation, so the canonical ring runs (a p, b p, b q, a q).
+    Map-only, zero shuffles."""
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    x1, y1 = x0 + w, y0 + h
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep, pt(x0, y1),
-        sep, pt(x0, y0), F.lit("))"),
-    )
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-    from .functions.geometry import _let
-
-    # bind the 4-pass SH subtree ONCE (_let); WKT and area both read
-    # the binding — same expression-blowup discipline as the holes /
-    # multipolygon variants
-    out = _let(
-        clip_ring_to_rect(wkt, ax0, ay0, ax1, ay1),
-        lambda clipped: F.struct(
-            ring_to_wkt(normalize_ring(clipped)).alias("clip_wkt"),
-            F.round(ring_area2x(clipped)).cast("long").alias("clip_a2x"),
-        ),
-    )
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
+    wkt, _ = _holes_subject(k, hole=False)
+    return _clip_out(
+        spark, sf_dir, clip_wkt(wkt, rect_halfplanes(*_aoi_window(k)))
     )
 
 
@@ -853,91 +825,10 @@ def clip_polygon_wkt_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     exterior). Both rings canonicalized (normalize_ring) so the
     oracle can CONSTRUCT the exact string from overlap closed forms.
     Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _ring_pts,
-        _clip_halfplane,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
-    )
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-        )
-
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-
-    def clip(ring_body):
-        out = _clip_halfplane(_ring_pts(ring_body), "x", ax0, keep_ge=True)
-        out = _clip_halfplane(out, "x", ax1, keep_ge=False)
-        out = _clip_halfplane(out, "y", ay0, keep_ge=True)
-        return normalize_ring(
-            _clip_halfplane(out, "y", ay1, keep_ge=False)
-        )
-
-    from .functions.geometry import _let
-
-    # bind each clipped ring ONCE (_let): ext/hole feed the WKT, the
-    # area, and the CASE conditions — naive reuse re-inlines the whole
-    # SH+normalize subtree per reference and the multiplied expression
-    # falls out of practical codegen (measured 8× slower before this)
-    def assemble(ext: Column, hole: Column) -> Column:
-        ext_wkt, hole_wkt = ring_to_wkt(ext), ring_to_wkt(hole)
-        ea, ha = ring_area2x(ext), ring_area2x(hole)
-        out_wkt = (
-            F.when(ext_wkt == "POLYGON EMPTY", F.lit("POLYGON EMPTY"))
-            .when(
-                (hole_wkt != "POLYGON EMPTY") & (ea == ha),
-                F.lit("POLYGON EMPTY"),  # AOI entirely inside the lake
-            )
-            .when(hole_wkt == "POLYGON EMPTY", ext_wkt)
-            .otherwise(
-                F.concat(
-                    F.regexp_replace(ext_wkt, r"\)\)$", ")"),
-                    F.lit(", "),
-                    F.regexp_replace(hole_wkt, r"^POLYGON \(", ""),
-                )
-            )
-        )
-        a2x = F.round(
-            F.when(ea == ha, F.lit(0.0)).otherwise(ea - ha)
-        ).cast("long")
-        return F.struct(
-            out_wkt.alias("clip_wkt"), a2x.alias("clip_a2x")
-        )
-
-    out = _let(
-        clip(ring(x0, y0, x0 + w, y0 + h)),
-        lambda ext: _let(
-            F.when(
-                has_hole,
-                clip(ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-            ).otherwise(
-                F.array().cast("array<struct<x:double,y:double>>")
-            ),
-            lambda hole: assemble(ext, hole),
-        ),
-    )
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
+    wkt, _ = _holes_subject(k)
+    return _clip_out(
+        spark, sf_dir, clip_wkt(wkt, rect_halfplanes(*_aoi_window(k)))
     )
 
 
@@ -952,129 +843,10 @@ def clip_multipolygon_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. Rings normalized as in clip_polygon_wkt_holes; the oracle
     constructs every surviving part from overlap closed forms and
     applies the same collapse. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _ring_pts,
-        _clip_halfplane,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
-    )
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pw, ph = k % 4 + 1, k % 3 + 1
-    plain = k % 3 == 0
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-        )
-
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 29 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-
-    def clip(ring_body):
-        out = _clip_halfplane(_ring_pts(ring_body), "x", ax0, keep_ge=True)
-        out = _clip_halfplane(out, "x", ax1, keep_ge=False)
-        out = _clip_halfplane(out, "y", ay0, keep_ge=True)
-        return normalize_ring(
-            _clip_halfplane(out, "y", ay1, keep_ge=False)
-        )
-
-    def ring_body_or_null(r):
-        # "(x y, ...)" or NULL when the ring died
-        return F.when(
-            F.size(r) >= 3,
-            F.regexp_replace(ring_to_wkt(r), r"^POLYGON \(|\)$", ""),
-        )
-
-    from .functions.geometry import _let
-
-    # every clipped ring AND each assembled part is _let-bound once:
-    # the naive form re-inlined the SH+normalize subtrees per reference
-    # (parts referenced 3× in the collapse CASE), multiplying the
-    # expression ~20× and dropping throughput ~50× (measured) — the
-    # same Catalyst-tree discipline _let exists for in geometry.py
-    def assemble(ext: Column, hole: Column, p2: Column) -> Column:
-        ea, ha, pa = ring_area2x(ext), ring_area2x(hole), ring_area2x(p2)
-
-        def collapse(part1: Column, part2: Column) -> Column:
-            n_parts = (
-                part1.isNotNull().cast("int")
-                + part2.isNotNull().cast("int")
-            )
-            out_wkt = (
-                F.when(n_parts == 0, F.lit("POLYGON EMPTY"))
-                .when(
-                    n_parts == 1,
-                    F.concat(F.lit("POLYGON "), F.coalesce(part1, part2)),
-                )
-                .otherwise(
-                    F.concat(
-                        F.lit("MULTIPOLYGON ("), part1, F.lit(", "),
-                        part2, F.lit(")"),
-                    )
-                )
-            )
-            a1 = F.when(part1.isNotNull(), ea - ha).otherwise(F.lit(0.0))
-            a2 = F.when(part2.isNotNull(), pa).otherwise(F.lit(0.0))
-            return F.struct(
-                out_wkt.alias("clip_wkt"),
-                F.round(a1 + a2).cast("long").alias("clip_a2x"),
-            )
-
-        eb, hb, pb = (
-            ring_body_or_null(ext), ring_body_or_null(hole),
-            ring_body_or_null(p2),
-        )
-        # part 1 dies when its exterior does OR the hole's clip fills it
-        part1 = F.when(
-            eb.isNotNull() & ~(hb.isNotNull() & (ea == ha)),
-            F.concat(
-                F.lit("("), eb,
-                F.when(hb.isNotNull(), F.concat(F.lit(", "), hb))
-                .otherwise(F.lit("")),
-                F.lit(")"),
-            ),
-        )
-        part2 = F.when(
-            pb.isNotNull(), F.concat(F.lit("("), pb, F.lit(")"))
-        )
-        return _let(
-            F.struct(part1.alias("p1"), part2.alias("p2")),
-            lambda s: collapse(s["p1"], s["p2"]),
-        )
-
-    empty = F.array().cast("array<struct<x:double,y:double>>")
-    # one struct binding for all three rings (nesting _let 5 deep hits
-    # the analyzer's lambda-resolution iteration cap)
-    rings3 = F.struct(
-        clip(ring(x0, y0, x0 + w, y0 + h)).alias("e"),
-        F.when(
-            has_hole,
-            clip(ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-        ).otherwise(empty).alias("h"),
-        F.when(
-            ~plain, clip(ring(x0 + 20, y0, x0 + 20 + pw, y0 + ph))
-        ).otherwise(empty).alias("p"),
-    )
-    out = _let(rings3, lambda s: assemble(s["e"], s["h"], s["p"]))
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
-    )
+    wkt, _ = _holes_subject(k, east=True)
+    aoi = rect_halfplanes(*_aoi_window(k, wide=True))
+    return _clip_out(spark, sf_dir, clip_wkt(wkt, aoi))
 
 
 def clip_acreage_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,44 +859,11 @@ def clip_acreage_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     float op count is group-count, not row-count). One scan, one
     shuffle, partial aggregation map-side; the oracle sums the same
     closed-form overlaps and converts identically."""
-    from .functions.geometry import acres_e4, clip_area2x_geom
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            F.lit("("),
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-            F.lit(")"),
-        )
-
-    wkt = F.concat(
-        F.lit("POLYGON ("),
-        ring(x0, y0, x0 + w, y0 + h),
-        F.when(
-            has_hole,
-            F.concat(F.lit(", "),
-                     ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-        ).otherwise(F.lit("")),
-        F.lit(")"),
-    )
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
+    wkt, _ = _holes_subject(k)
     per_poly = _t(spark, sf_dir, "customer").select(
         (k % 7).cast("int").alias("musym"),
-        clip_area2x_geom(wkt, ax0, ay0, ax1, ay1).alias("a2x"),
+        clip_area2x(wkt, [rect_halfplanes(*_aoi_window(k))]).alias("a2x"),
     )
     return per_poly.groupBy("musym").agg(
         F.count(F.lit(1)).alias("n_polys"),
@@ -1146,51 +885,29 @@ def clip_select_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never edge-incident) — exact integer crossing decisions; oracle
     truth from rectangle bounds: (in ext AND NOT in hole) OR in
     part 2. Map-only, zero shuffles."""
-    from .functions.geometry import point_in_geom
-
     k = F.col("c_custkey")
     x0, y0 = (k % 100) * 2, (k % 57) * 2
-    w = (k % 13 + 2) * 2
-    h = (k % 7 + 2) * 2
-    x1, y1 = x0 + w, y0 + h
-    hx0, hy0 = x0 + 2, y0 + 2
-    hx1 = F.least(hx0 + (k % 3 + 1) * 2, x1)
-    hy1 = hy0 + 2
-    px0, py0 = x0 + 40, y0            # part 2: rectangle 40 m east
-    px1 = px0 + (k % 4 + 1) * 2
-    py1 = py0 + (k % 3 + 1) * 2
-    plain = k % 3 == 0
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(a, b, c, d):
-        return F.concat(
-            F.lit("("), pt(a, b), sep, pt(c, b), sep, pt(c, d), sep,
-            pt(a, d), sep, pt(a, b), F.lit(")"),
-        )
-
+    x1, y1 = x0 + (k % 13 + 2) * 2, y0 + (k % 7 + 2) * 2
+    hole = _rect(x0 + 2, y0 + 2, F.least(x0 + 2 + (k % 3 + 1) * 2, x1), y0 + 4)
     part1 = F.concat(
-        ring(x0, y0, x1, y1), F.lit(", "), ring(hx0, hy0, hx1, hy1)
+        _ring_text(_rect(x0, y0, x1, y1)), F.lit(", "), _ring_text(hole)
+    )
+    # part 2: rectangle 40 m east
+    part2 = _ring_text(
+        _rect(x0 + 40, y0, x0 + 40 + (k % 4 + 1) * 2, y0 + (k % 3 + 1) * 2)
     )
     wkt = F.when(
-        plain, F.concat(F.lit("POLYGON ("), part1, F.lit(")"))
+        k % 3 == 0, F.concat(F.lit("POLYGON ("), part1, F.lit(")"))
     ).otherwise(
         F.concat(
-            F.lit("MULTIPOLYGON (("), part1, F.lit("), ("),
-            ring(px0, py0, px1, py1), F.lit("))"),
+            F.lit("MULTIPOLYGON (("), part1, F.lit("), ("), part2,
+            F.lit("))"),
         )
     )
     # probe roams far enough right to land in part 2 for some customers
     px = x0 + (k % 29) * 2 - 9  # odd: misses every even-grid edge
     py = y0 + (k % 19) * 2 - 7
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        px.alias("px"),
-        py.alias("py"),
-        point_in_geom(wkt, px, py).alias("inside"),
-    )
+    return _probes(spark, sf_dir, wkt, px, py)
 
 
 def clip_convex_aoi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,81 +916,24 @@ def clip_convex_aoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gSSURGO_Clip.py:160 clips against arbitrary AOI featureclasses;
     the rect queries cover only bounding boxes). AOI per customer: a
     pentagon — the AOI rectangle with its upper-right corner cut by
-    the 45° half-plane x+y <= cc — expressed as a CCW directed-edge
-    list and clipped by chained general half-plane passes
-    (functions/geometry.py:_clip_halfplane_edge / clip_area2x_convex),
-    holes subtracting per ring. Subjects are the holes-family
-    rectangles, so every Sutherland–Hodgman intersection lands on the
-    integer grid (axis-aligned subject edges × slope-±1 or axis AOI
-    edges) and one final round makes the doubled area an exact BIGINT.
-    The oracle never clips a vertex: rect-overlap product minus the
-    corner inclusion–exclusion identity
+    the 45° half-plane x+y <= cc — expressed as four axis half-planes
+    plus one directed edge (functions/geometry.py:rect_halfplanes /
+    edge_halfplane / clip_area2x), holes subtracting per ring.
+    Subjects are the holes-family rectangles, so every
+    Sutherland–Hodgman intersection lands on the integer grid
+    (axis-aligned subject edges × slope-±1 or axis AOI edges) and one
+    final round makes the doubled area an exact BIGINT. The oracle
+    never clips a vertex: rect-overlap product minus the corner
+    inclusion–exclusion identity
     area2x{x+y>=c in [a,b]x[p,q]} = f(b+q−c) − f(a+q−c) − f(b+p−c)
     + f(a+p−c), f(u)=max(0,u)², applied to exterior and hole
     independently. Map-only, zero shuffles."""
-    from .functions.geometry import clip_area2x_convex
-
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            F.lit("("),
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-            F.lit(")"),
-        )
-
-    wkt = F.concat(
-        F.lit("POLYGON ("),
-        ring(x0, y0, x0 + w, y0 + h),
-        F.when(
-            has_hole,
-            F.concat(F.lit(", "),
-                     ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-        ).otherwise(F.lit("")),
-        F.lit(")"),
-    )
-    from .functions.geometry import _let
-
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-    # 45° corner cut: keep x+y <= cc; cc = corner sum − (k%4) cuts a
-    # leg-(k%4) triangle (0 = line through the corner, cuts nothing —
-    # the tangent edge case goes through the same pass)
-    cc = ax1 + ay1 - (k % 4).cast("double")
-
-    # bind the per-row AOI bounds ONCE (_let): each of the five SH
-    # passes re-evaluates every referenced bound per vertex otherwise
-    def clip_bound(b: Column) -> Column:
-        edges = [
-            ((b["x0"], b["y0"]), (b["x1"], b["y0"])),   # y >= ay0
-            ((b["x1"], b["y0"]), (b["x1"], b["y1"])),   # x <= ax1
-            ((b["c"], F.lit(0.0)), (b["c"] - 1, F.lit(1.0))),  # x+y <= cc
-            ((b["x1"], b["y1"]), (b["x0"], b["y1"])),   # y <= ay1
-            ((b["x0"], b["y1"]), (b["x0"], b["y0"])),   # x >= ax0
-        ]
-        return clip_area2x_convex(wkt, edges)
-
-    bounds = F.struct(
-        ax0.alias("x0"), ay0.alias("y0"), ax1.alias("x1"),
-        ay1.alias("y1"), cc.alias("c"),
-    )
-    hole_a2x = F.when(has_hole, 2 * hw * hh).otherwise(F.lit(0))
+    wkt, poly_a2x = _holes_subject(k)
     return _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        (2 * w * h - hole_a2x).cast("long").alias("poly_a2x"),
-        _let(bounds, clip_bound).alias("clip_a2x"),
+        poly_a2x.alias("poly_a2x"),
+        _pentagon(k, lambda aoi: clip_area2x(wkt, [aoi])).alias("clip_a2x"),
     )
 
 
@@ -1282,74 +942,20 @@ def clip_convex_aoi_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature half of arcpy.Clip_analysis for non-rectangular AOIs
     (gSSURGO_Clip.py:160 returns clipped features; clip_convex_aoi
     covers only their area). Rect subjects clip against the AOI
-    rectangle + 45° corner cut via the general half-plane passes
-    (clip_ring_convex), coordinates SNAP back to the exact integer
-    grid (snap_ring_ints — axis/45° edges on integer subjects
-    guarantee integral intersections; the snap removes the ~1 ulp the
-    general-edge interpolation can carry), then canonicalize
-    (normalize_ring) and serialize (ring_to_wkt). The oracle
-    CONSTRUCTS the clipped polygon's canonical vertex list from the
-    closed-form case analysis of rect ∩ rect ∩ {x+y ≤ cc} — triangle
-    / quad / pentagon / rectangle / empty — and never clips a vertex:
-    matching strings certify the general-edge SH pipeline's exact
-    vertex output. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _let,
-        _ring_pts,
-        clip_ring_convex,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
-        snap_ring_ints,
-    )
-
+    rectangle + 45° corner cut (functions/geometry.py:clip_wkt);
+    the general edge makes clip_wkt SNAP coordinates back to the exact
+    integer grid (axis/45° edges on integer subjects guarantee
+    integral intersections; the snap removes the ~1 ulp the
+    general-edge interpolation can carry) before it canonicalizes and
+    serializes. The oracle CONSTRUCTS the clipped polygon's canonical
+    vertex list from the closed-form case analysis of
+    rect ∩ rect ∩ {x+y ≤ cc} — triangle / quad / pentagon / rectangle
+    / empty — and never clips a vertex: matching strings certify the
+    general-edge SH pipeline's exact vertex output. Map-only, zero
+    shuffles."""
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    x1, y1 = x0 + w, y0 + h
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    ring_body = F.concat(
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep, pt(x0, y1),
-        sep, pt(x0, y0),
-    )
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-    cc = ax1 + ay1 - (k % 4).cast("double")
-
-    def clip_bound(b: Column) -> Column:
-        edges = [
-            ((b["x0"], b["y0"]), (b["x1"], b["y0"])),          # y >= ay0
-            ((b["x1"], b["y0"]), (b["x1"], b["y1"])),          # x <= ax1
-            ((b["c"], F.lit(0.0)), (b["c"] - 1, F.lit(1.0))),  # x+y <= cc
-            ((b["x1"], b["y1"]), (b["x0"], b["y1"])),          # y <= ay1
-            ((b["x0"], b["y1"]), (b["x0"], b["y0"])),          # x >= ax0
-        ]
-        clipped = snap_ring_ints(
-            clip_ring_convex(_ring_pts(ring_body), edges)
-        )
-        return _let(
-            clipped,
-            lambda cr: F.struct(
-                ring_to_wkt(normalize_ring(cr)).alias("clip_wkt"),
-                F.round(ring_area2x(cr)).cast("long").alias("clip_a2x"),
-            ),
-        )
-
-    bounds = F.struct(
-        ax0.alias("x0"), ay0.alias("y0"), ax1.alias("x1"),
-        ay1.alias("y1"), cc.alias("c"),
-    )
-    out = _let(bounds, clip_bound)
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
-    )
+    wkt, _ = _holes_subject(k, hole=False)
+    return _clip_out(spark, sf_dir, _pentagon(k, lambda aoi: clip_wkt(wkt, aoi)))
 
 
 def clip_convex_aoi_wkt_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,109 +963,17 @@ def clip_convex_aoi_wkt_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     AOI — the last cell of the feature-output matrix (rect×ext,
     rect×holes, rect×multipart, convex×ext, concave-rectilinear now
     all WKT-certified): exterior and hole each clip through the five
-    general half-plane passes, snap to the integer grid, and
-    canonicalize; the polygon keeps the hole ring only when its clip
-    survives, collapses to the exterior alone when it misses, and is
-    EMPTY outright when the hole's clip fills the exterior's (area
-    equality ⇔ region equality under hole ⊆ exterior — AOI-shape
-    independent). Oracle: the pentagon-case canonical ring CONSTRUCTED
-    per ring from the closed-form case analysis, assembled by the same
-    three-way collapse. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _let,
-        _ring_pts,
-        clip_ring_convex,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
-        snap_ring_ints,
-    )
-
+    half-plane passes, snap to the integer grid, and canonicalize;
+    the polygon keeps the hole ring only when its clip survives,
+    collapses to the exterior alone when it misses, and is EMPTY
+    outright when the hole's clip fills the exterior's (area equality
+    ⇔ region equality under hole ⊆ exterior — AOI-shape independent).
+    Oracle: the pentagon-case canonical ring CONSTRUCTED per ring from
+    the closed-form case analysis, assembled by the same three-way
+    collapse. Map-only, zero shuffles."""
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-        )
-
-    ax0 = (x0 + k % 5 - 2).cast("double")
-    ay0 = (y0 + k % 4 - 1).cast("double")
-    ax1 = ax0 + (k % 11 + 1).cast("double")
-    ay1 = ay0 + (k % 6 + 1).cast("double")
-    cc = ax1 + ay1 - (k % 4).cast("double")
-
-    empty = F.array().cast("array<struct<x:double,y:double>>")
-
-    def assemble(ext: Column, hole: Column) -> Column:
-        ext_wkt, hole_wkt = ring_to_wkt(ext), ring_to_wkt(hole)
-        ea, ha = ring_area2x(ext), ring_area2x(hole)
-        out_wkt = (
-            F.when(ext_wkt == "POLYGON EMPTY", F.lit("POLYGON EMPTY"))
-            .when(
-                (hole_wkt != "POLYGON EMPTY") & (ea == ha),
-                F.lit("POLYGON EMPTY"),
-            )
-            .when(hole_wkt == "POLYGON EMPTY", ext_wkt)
-            .otherwise(
-                F.concat(
-                    F.regexp_replace(ext_wkt, r"\)\)$", ")"),
-                    F.lit(", "),
-                    F.regexp_replace(hole_wkt, r"^POLYGON \(", ""),
-                )
-            )
-        )
-        a2x = F.round(
-            F.when(ea == ha, F.lit(0.0)).otherwise(ea - ha)
-        ).cast("long")
-        return F.struct(
-            out_wkt.alias("clip_wkt"), a2x.alias("clip_a2x")
-        )
-
-    def out_of(b: Column) -> Column:
-        edges = [
-            ((b["x0"], b["y0"]), (b["x1"], b["y0"])),
-            ((b["x1"], b["y0"]), (b["x1"], b["y1"])),
-            ((b["c"], F.lit(0.0)), (b["c"] - 1, F.lit(1.0))),
-            ((b["x1"], b["y1"]), (b["x0"], b["y1"])),
-            ((b["x0"], b["y1"]), (b["x0"], b["y0"])),
-        ]
-
-        def clip(ring_body: Column) -> Column:
-            return normalize_ring(
-                snap_ring_ints(
-                    clip_ring_convex(_ring_pts(ring_body), edges)
-                )
-            )
-
-        rings2 = F.struct(
-            clip(ring(x0, y0, x0 + w, y0 + h)).alias("e"),
-            F.when(
-                has_hole,
-                clip(ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-            ).otherwise(empty).alias("h"),
-        )
-        return _let(rings2, lambda s: assemble(s["e"], s["h"]))
-
-    bounds = F.struct(
-        ax0.alias("x0"), ay0.alias("y0"), ax1.alias("x1"),
-        ay1.alias("y1"), cc.alias("c"),
-    )
-    out = _let(bounds, out_of)
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
-    )
+    wkt, _ = _holes_subject(k)
+    return _clip_out(spark, sf_dir, _pentagon(k, lambda aoi: clip_wkt(wkt, aoi)))
 
 
 #: concave AOI with a DIAGONAL boundary for clip_concave_diagonal_aoi:
@@ -1478,69 +992,27 @@ def clip_concave_diagonal_aoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     The AOI is EAR-CLIPPED into disjoint convex triangles driver-side
     (functions/geometry.py:triangulate_simple_polygon — AOI is
     broadcast-scale metadata) and the clipped area is Σ over triangles
-    of the general-edge convex clip (clip_area2x_pieces): disjoint
-    pieces ⇒ areas add; triangle-internal diagonals introduce only
-    ulp-level double noise on piece areas whose SUM is the exact
-    integer the final round recovers (boundary edges are axis/45°, so
-    the union's true area is integer). The oracle never decomposes:
-    it computes the clip on the union's closed form — bottom-rect
-    overlap + (top-box overlap − x+y≥75 corner inclusion–exclusion
-    cut). A build-time assertion pins Σ triangle areas == AOI
-    shoelace area. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        clip_area2x_pieces,
-        triangulate_simple_polygon,
-    )
-
+    of the general-edge convex clip (clip_area2x with one
+    convex_halfplanes piece per triangle): disjoint pieces ⇒ areas
+    add; triangle-internal diagonals introduce only ulp-level double
+    noise on piece areas whose SUM is the exact integer the final
+    round recovers (boundary edges are axis/45°, so the union's true
+    area is integer). The oracle never decomposes: it computes the
+    clip on the union's closed form — bottom-rect overlap + (top-box
+    overlap − x+y≥75 corner inclusion–exclusion cut). A build-time
+    assertion pins Σ triangle areas == AOI shoelace area. Map-only,
+    zero shuffles."""
     tris = triangulate_simple_polygon(_LDIAG_AOI)
-    n = len(_LDIAG_AOI)
-    aoi_a2x = abs(sum(
-        _LDIAG_AOI[i][0] * _LDIAG_AOI[(i + 1) % n][1]
-        - _LDIAG_AOI[(i + 1) % n][0] * _LDIAG_AOI[i][1]
-        for i in range(n)
-    ))
-    tri_a2x = sum(
-        abs(
-            (t[1][0] - t[0][0]) * (t[2][1] - t[0][1])
-            - (t[2][0] - t[0][0]) * (t[1][1] - t[0][1])
-        )
-        for t in tris
-    )
-    assert tri_a2x == aoi_a2x and len(tris) == n - 2, (tris, aoi_a2x)
+    assert len(tris) == len(_LDIAG_AOI) - 2 and sum(
+        _signed_area2x(t) for t in tris
+    ) == _signed_area2x(_LDIAG_AOI), tris
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            F.lit("("),
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-            F.lit(")"),
-        )
-
-    wkt = F.concat(
-        F.lit("POLYGON ("),
-        ring(x0, y0, x0 + w, y0 + h),
-        F.when(
-            has_hole,
-            F.concat(F.lit(", "),
-                     ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-        ).otherwise(F.lit("")),
-        F.lit(")"),
-    )
-    hole_a2x = F.when(has_hole, 2 * hw * hh).otherwise(F.lit(0))
+    wkt, poly_a2x = _holes_subject(k)
     return _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        (2 * w * h - hole_a2x).cast("long").alias("poly_a2x"),
-        clip_area2x_pieces(wkt, tris).alias("clip_a2x"),
+        poly_a2x.alias("poly_a2x"),
+        clip_area2x(wkt, [convex_halfplanes(t) for t in tris])
+        .alias("clip_a2x"),
     )
 
 
@@ -1563,52 +1035,21 @@ def clip_concave_aoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/geometry.py:rectilinear_decompose — AOI is broadcast-
     scale metadata, the data never touches Python), and the clipped
     area is the SUM over pieces of the holes-aware rectangle clip
-    (clip_area2x_rectilinear): pieces are interior-disjoint so areas
-    add exactly, Sutherland–Hodgman per piece stays all-integer. The
-    oracle mirrors the three pieces as closed-form overlap products
-    (exterior − hole per piece) and never decomposes or clips.
-    Map-only, zero shuffles, plan size ∝ |pieces|, not data."""
-    from .functions.geometry import (
-        clip_area2x_rectilinear,
-        rectilinear_decompose,
-    )
-
+    (clip_area2x with one rect_halfplanes piece per rectangle):
+    pieces are interior-disjoint so areas add exactly,
+    Sutherland–Hodgman per piece stays all-integer. The oracle mirrors
+    the three pieces as closed-form overlap products (exterior − hole
+    per piece) and never decomposes or clips. Map-only, zero
+    shuffles, plan size ∝ |pieces|, not data."""
     pieces = rectilinear_decompose(_STAIR_AOI)
     assert len(pieces) == 3, pieces  # staircase bands: documented shape
     k = F.col("c_custkey")
-    x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    hw = F.least(w - 2, k % 3 + 1)
-    hh = F.least(h - 2, k % 2 + 1)
-    has_hole = (w >= 3) & (h >= 3)
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-
-    def ring(ax0, ay0, ax1, ay1):
-        return F.concat(
-            F.lit("("),
-            pt(ax0, ay0), sep, pt(ax1, ay0), sep, pt(ax1, ay1), sep,
-            pt(ax0, ay1), sep, pt(ax0, ay0),
-            F.lit(")"),
-        )
-
-    wkt = F.concat(
-        F.lit("POLYGON ("),
-        ring(x0, y0, x0 + w, y0 + h),
-        F.when(
-            has_hole,
-            F.concat(F.lit(", "),
-                     ring(x0 + 1, y0 + 1, x0 + 1 + hw, y0 + 1 + hh)),
-        ).otherwise(F.lit("")),
-        F.lit(")"),
-    )
-    hole_a2x = F.when(has_hole, 2 * hw * hh).otherwise(F.lit(0))
+    wkt, poly_a2x = _holes_subject(k)
     return _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        (2 * w * h - hole_a2x).cast("long").alias("poly_a2x"),
-        clip_area2x_rectilinear(wkt, pieces).alias("clip_a2x"),
+        poly_a2x.alias("poly_a2x"),
+        clip_area2x(wkt, [rect_halfplanes(*p) for p in pieces])
+        .alias("clip_a2x"),
     )
 
 
@@ -1627,92 +1068,43 @@ def clip_concave_aoi_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructs the staircase vertex chain from band overlap closed
     forms (first/last survivor CASEs + per-boundary step pieces) and
     never clips or dissolves. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _clip_halfplane,
-        _let,
-        _ring_pts,
-        bands_to_ring,
-        normalize_ring,
-        rectilinear_decompose,
-        ring_area2x,
-        ring_to_wkt,
-    )
-
     pieces = rectilinear_decompose(_STAIR_AOI)
-    # the FULL bands_to_ring precondition (geometry.py:673-687), not
-    # just left alignment: y-ascending vertically-ADJACENT bands
-    # (band i's hi == band i+1's lo) with monotonically DECREASING
-    # rights, all sharing one left edge — a future change to
-    # _STAIR_AOI or the decomposition order would otherwise silently
-    # dissolve into a self-intersecting ring.
+    # the FULL bands_to_ring precondition, not just left alignment:
+    # y-ascending vertically-ADJACENT bands (band i's hi == band i+1's
+    # lo) with strictly DECREASING rights, all sharing one left edge —
+    # a future change to _STAIR_AOI or the decomposition order would
+    # otherwise silently dissolve into a self-intersecting ring.
     assert len(pieces) == 3 and all(
         p[0] == pieces[0][0] for p in pieces
+    ) and all(
+        a[3] == b[1] and a[2] > b[2] for a, b in zip(pieces, pieces[1:])
     ), pieces
-    assert all(
-        pieces[i][3] == pieces[i + 1][1] for i in range(len(pieces) - 1)
-    ), pieces  # y-ascending, vertically adjacent
-    assert all(
-        pieces[i][2] > pieces[i + 1][2] for i in range(len(pieces) - 1)
-    ), pieces  # strictly decreasing rights with height
     k = F.col("c_custkey")
     x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    x1, y1 = x0 + w, y0 + h
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    ring_body = F.concat(
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep, pt(x0, y1),
-        sep, pt(x0, y0),
-    )
+    subject = _ring_array(_rect(x0, y0, x0 + k % 13 + 1, y0 + k % 7 + 1))
 
     def band_of(piece) -> Column:
-        px0, py0, px1, py1 = piece
-        out = _clip_halfplane(_ring_pts(ring_body), "x", px0, keep_ge=True)
-        out = _clip_halfplane(out, "x", px1, keep_ge=False)
-        out = _clip_halfplane(out, "y", py0, keep_ge=True)
-        out = _clip_halfplane(out, "y", py1, keep_ge=False)
-        return _let(
-            out,
-            lambda cr: F.when(
-                F.size(cr) >= 3,
-                F.struct(
-                    F.array_min(
-                        F.transform(cr, lambda p: p["x"])
-                    ).alias("lx"),
-                    F.array_min(
-                        F.transform(cr, lambda p: p["y"])
-                    ).alias("lo"),
-                    F.array_max(
-                        F.transform(cr, lambda p: p["x"])
-                    ).alias("rx"),
-                    F.array_max(
-                        F.transform(cr, lambda p: p["y"])
-                    ).alias("hi"),
-                ),
-            ),
-        )
+        def bbox(cr: Column) -> Column:
+            xs = F.transform(cr, lambda p: p["x"])
+            ys = F.transform(cr, lambda p: p["y"])
+            return F.when(F.size(cr) >= 3, F.struct(
+                F.array_min(xs).alias("lx"), F.array_min(ys).alias("lo"),
+                F.array_max(xs).alias("rx"), F.array_max(ys).alias("hi"),
+            ))
+
+        return _let(clip_ring(subject, rect_halfplanes(*piece)), bbox)
 
     bands = F.filter(
         F.array(*[band_of(p) for p in pieces]),
-        lambda b: b.isNotNull()
-        & (b["rx"] > b["lx"])
-        & (b["hi"] > b["lo"]),
+        lambda b: b.isNotNull() & (b["rx"] > b["lx"]) & (b["hi"] > b["lo"]),
     )
-    ring = bands_to_ring(bands)
-    out = _let(
-        ring,
+    return _clip_out(spark, sf_dir, _let(
+        bands_to_ring(bands),
         lambda r: F.struct(
             ring_to_wkt(normalize_ring(r)).alias("clip_wkt"),
             F.round(ring_area2x(r)).cast("long").alias("clip_a2x"),
         ),
-    )
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
-    )
+    ))
 
 
 def clip_concave_diagonal_aoi_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1737,92 +1129,61 @@ def clip_concave_diagonal_aoi_wkt(spark: SparkSession, sf_dir: str) -> DataFrame
     rect ∩ ({y ≤ 25} ∪ {x+y ≤ 75}) within the AOI bbox — rectangle /
     apex-notch / diagonal-cut / pentagon / empty — and never clips or
     dissolves a vertex. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _clip_halfplane,
-        _let,
-        _ring_pts,
-        clip_ring_convex,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
-        snap_ring_ints,
-        stack_band_rings,
-    )
-
     # convex horizontal-band decomposition of _LDIAG_AOI, split at the
     # reflex vertex's y: areas must tile the AOI exactly
-    n = len(_LDIAG_AOI)
-    aoi_a2x = abs(sum(
-        _LDIAG_AOI[i][0] * _LDIAG_AOI[(i + 1) % n][1]
-        - _LDIAG_AOI[(i + 1) % n][0] * _LDIAG_AOI[i][1]
-        for i in range(n)
-    ))
     band_rect = (10, 5, 90, 25)  # x0, y0, x1, y1
-    trap = [(10.0, 25.0), (50.0, 25.0), (30.0, 45.0), (10.0, 45.0)]
-    trap_a2x = abs(sum(
-        trap[i][0] * trap[(i + 1) % 4][1]
-        - trap[(i + 1) % 4][0] * trap[i][1]
-        for i in range(4)
-    ))
-    rect_a2x = 2 * (band_rect[2] - band_rect[0]) * (
-        band_rect[3] - band_rect[1]
-    )
-    assert rect_a2x + trap_a2x == aoi_a2x, (rect_a2x, trap_a2x, aoi_a2x)
-    trap_edges = [
-        (trap[i], trap[(i + 1) % 4]) for i in range(4)
-    ]
-
+    trap = [(10, 25), (50, 25), (30, 45), (10, 45)]
+    assert _signed_area2x(_rect(*band_rect)) + _signed_area2x(
+        trap
+    ) == _signed_area2x(_LDIAG_AOI), (band_rect, trap)
     k = F.col("c_custkey")
     x0, y0 = k % 100, k % 57
-    w, h = k % 13 + 1, k % 7 + 1
-    x1, y1 = x0 + w, y0 + h
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    ring_body = F.concat(
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep, pt(x0, y1),
-        sep, pt(x0, y0),
-    )
+    subject = _ring_array(_rect(x0, y0, x0 + k % 13 + 1, y0 + k % 7 + 1))
+    lower = clip_ring(subject, rect_halfplanes(*band_rect))
+    upper = snap_ring_ints(clip_ring(subject, convex_halfplanes(trap)))
 
-    def run(pts: Column) -> Column:
-        lo = _clip_halfplane(pts, "x", float(band_rect[0]), keep_ge=True)
-        lo = _clip_halfplane(lo, "x", float(band_rect[2]), keep_ge=False)
-        lo = _clip_halfplane(lo, "y", float(band_rect[1]), keep_ge=True)
-        lo = snap_ring_ints(
-            _clip_halfplane(lo, "y", float(band_rect[3]), keep_ge=False)
+    def merge(lo: Column, up: Column) -> Column:
+        la = F.round(ring_area2x(lo)).cast("long")
+        ua = F.round(ring_area2x(up)).cast("long")
+        ring = (
+            F.when((la > 0) & (ua > 0), stack_band_rings(lo, up, 25.0))
+            .when(la > 0, lo)
+            .when(ua > 0, up)
+            .otherwise(F.array().cast(RING_T))
         )
-        up = snap_ring_ints(clip_ring_convex(pts, trap_edges))
-        empty = F.array().cast("array<struct<x:double,y:double>>")
+        return F.struct(
+            ring_to_wkt(normalize_ring(ring)).alias("clip_wkt"),
+            (la + ua).alias("clip_a2x"),
+        )
 
-        def merge(lo_b: Column) -> Column:
-            def inner(up_b: Column) -> Column:
-                la = F.round(ring_area2x(lo_b)).cast("long")
-                ua = F.round(ring_area2x(up_b)).cast("long")
-                ring = (
-                    F.when(
-                        (la > 0) & (ua > 0),
-                        stack_band_rings(lo_b, up_b, 25.0),
-                    )
-                    .when(la > 0, lo_b)
-                    .when(ua > 0, up_b)
-                    .otherwise(empty)
-                )
-                return F.struct(
-                    ring_to_wkt(normalize_ring(ring)).alias("clip_wkt"),
-                    (la + ua).alias("clip_a2x"),
-                )
+    return _clip_out(spark, sf_dir, _let(
+        lower, lambda lo: _let(upper, lambda up: merge(lo, up))
+    ))
 
-            return _let(up, inner)
 
-        return _let(lo, merge)
+def _u_subject(k: Column) -> tuple[list, Column, Column, Column]:
+    """The concave (U-shaped) subject of the concave-subject WKT
+    queries: the rectangle at (k%50, k%31) sized (k%12+5) × (k%7+4)
+    with a notch (k%2+1 wide, 2 in from the left) cut down from the
+    top edge to k%3+1 above the bottom. Returns (CCW vertex list —
+    bottom, right side, top-right, down into the notch, across, up,
+    top-left, left side — x0, y0, x1)."""
+    x0, y0 = k % 50, k % 31
+    w, h = k % 12 + 5, k % 7 + 4
+    x1, y1 = x0 + w, y0 + h
+    nx0, ny0 = x0 + 2, y0 + F.least(k % 3 + 1, h - 1)
+    nx1 = nx0 + F.least(k % 2 + 1, w - 4)
+    pts = [(x0, y0), (x1, y0), (x1, y1), (nx1, y1), (nx1, ny0),
+           (nx0, ny0), (nx0, y1), (x0, y1)]
+    return pts, x0, y0, x1
 
-    out = _let(_ring_pts(ring_body), run)
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
-    )
+
+def _window_y_first(wx0, wy0, wx1, wy1) -> list:
+    """The concave-subject window as half-planes, y bounds first — the
+    pass order the split contract of ``split_bridged_ring_y`` was
+    certified with."""
+    hp = rect_halfplanes(wx0, wy0, wx1, wy1)
+    return hp[2:] + hp[:2]
 
 
 def clip_concave_subject_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1843,48 +1204,24 @@ def clip_concave_subject_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one- or two-part canonical string from the closed-form case
     tree (empty / split arms / rectangle / notch-bite U) and never
     clips, splits, or dissolves. Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _clip_halfplane,
-        _let,
-        _ring_pts,
-        ring_area2x,
-        rings_to_multiwkt,
-        snap_ring_ints,
-        split_bridged_ring_y,
-    )
-
     k = F.col("c_custkey")
-    x0, y0 = k % 50, k % 31
-    w, h = k % 12 + 5, k % 7 + 4
-    x1, y1 = x0 + w, y0 + h
-    nw = F.least(k % 2 + 1, w - 4)
-    nx0, ny0 = x0 + 2, y0 + F.least(k % 3 + 1, h - 1)
-    nx1 = nx0 + nw
-    wx0, wx1 = x0 + k % 2, x1 - k % 2
+    pts, x0, y0, x1 = _u_subject(k)
     wy0 = y0 - 1 + k % 6
-    wy1 = wy0 + 2 + k % 5
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    # CCW U-ring: bottom, right side, top-right, down-into-notch,
-    # across, up, top-left, left side
-    ring_body = F.concat(
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep,
-        pt(nx1, y1), sep, pt(nx1, ny0), sep, pt(nx0, ny0), sep,
-        pt(nx0, y1), sep, pt(x0, y1), sep, pt(x0, y0),
+    bounds = F.struct(
+        (x0 + k % 2).cast("double").alias("wx0"),
+        (x1 - k % 2).cast("double").alias("wx1"),
+        wy0.cast("double").alias("wy0"),
+        (wy0 + 2 + k % 5).cast("double").alias("wy1"),
     )
 
     def run(b: Column) -> Column:
-        c = _clip_halfplane(_ring_pts(ring_body), "y", b["wy0"], keep_ge=True)
-        c = _clip_halfplane(c, "y", b["wy1"], keep_ge=False)
-        c = _clip_halfplane(c, "x", b["wx0"], keep_ge=True)
-        c = _clip_halfplane(c, "x", b["wx1"], keep_ge=False)
         # bind the snapped SH output ONCE — the WKT chain and the area
         # would otherwise each re-inline the whole 4-pass clip subtree
         # (the _let lesson, SCALING.md round 10: 2x tree, 2x CPU)
         return _let(
-            snap_ring_ints(c),
+            snap_ring_ints(clip_ring(_ring_array(pts), _window_y_first(
+                b["wx0"], b["wy0"], b["wx1"], b["wy1"]
+            ))),
             lambda snapped: F.struct(
                 rings_to_multiwkt(
                     split_bridged_ring_y(snapped, b["wy0"])
@@ -1893,16 +1230,7 @@ def clip_concave_subject_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    bounds = F.struct(
-        wx0.cast("double").alias("wx0"), wx1.cast("double").alias("wx1"),
-        wy0.cast("double").alias("wy0"), wy1.cast("double").alias("wy1"),
-    )
-    out = _let(bounds, run)
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("okey"),
-        out["clip_wkt"].alias("clip_wkt"),
-        out["clip_a2x"].alias("clip_a2x"),
-    )
+    return _clip_out(spark, sf_dir, _let(bounds, run))
 
 
 def clip_concave_multipart_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1922,45 +1250,13 @@ def clip_concave_multipart_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     bite; rectangle: overlap box) and assembles the same canonical
     POLYGON / MULTIPOLYGON / EMPTY text with DuckDB list functions.
     Map-only, zero shuffles."""
-    from .functions.geometry import (
-        _clip_halfplane,
-        _let,
-        _ring_pts,
-        ring_area2x,
-        rings_to_multiwkt,
-        snap_ring_ints,
-        split_bridged_ring_y,
-    )
-
     k = F.col("c_custkey")
-    x0, y0 = k % 50, k % 31
-    w, h = k % 12 + 5, k % 7 + 4
-    x1, y1 = x0 + w, y0 + h
-    nw = F.least(k % 2 + 1, w - 4)
-    nx0, ny0 = x0 + 2, y0 + F.least(k % 3 + 1, h - 1)
-    nx1 = nx0 + nw
-    p2x0 = x1 + 2
-    p2x1 = p2x0 + k % 4 + 1
-    p2y1 = y0 + k % 4 + 2  # taller than the notch bottom for some keys,
-    # so a disconnected U can coexist with a surviving part 2 (3 parts)
-    wx0 = x0 + k % 2
-    wx1 = p2x1 - F.when(k % 5 == 0, 1).otherwise(0)
+    pts, x0, y0, x1 = _u_subject(k)
+    p2x1 = x1 + 2 + k % 4 + 1
+    # part 2 is taller than the notch bottom for some keys, so a
+    # disconnected U can coexist with a surviving part 2 (3 parts)
+    p2 = _rect(x1 + 2, y0, p2x1, y0 + k % 4 + 2)
     wy0 = y0 - 1 + k % 6
-    wy1 = wy0 + 2 + k % 5
-    pt = lambda x, y: F.concat(  # noqa: E731
-        x.cast("string"), F.lit(" "), y.cast("string")
-    )
-    sep = F.lit(", ")
-    ring_u = F.concat(
-        pt(x0, y0), sep, pt(x1, y0), sep, pt(x1, y1), sep,
-        pt(nx1, y1), sep, pt(nx1, ny0), sep, pt(nx0, ny0), sep,
-        pt(nx0, y1), sep, pt(x0, y1), sep, pt(x0, y0),
-    )
-    ring_p2 = F.concat(
-        pt(p2x0, y0), sep, pt(p2x1, y0), sep, pt(p2x1, p2y1), sep,
-        pt(p2x0, p2y1), sep, pt(p2x0, y0),
-    )
-
     # flatten across PROJECTION stages instead of nesting _lets: each
     # select materializes named columns the next stage references as
     # plain attributes — the analyzer resolves lambda variables per
@@ -1968,22 +1264,17 @@ def clip_concave_multipart_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the fully-nested form tripped "Max iterations (100) reached")
     base = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("okey"),
-        wx0.cast("double").alias("wx0"), wx1.cast("double").alias("wx1"),
-        wy0.cast("double").alias("wy0"), wy1.cast("double").alias("wy1"),
-        ring_u.alias("ring_u"), ring_p2.alias("ring_p2"),
+        (x0 + k % 2).cast("double").alias("wx0"),
+        (p2x1 - F.when(k % 5 == 0, 1).otherwise(0)).cast("double").alias("wx1"),
+        wy0.cast("double").alias("wy0"),
+        (wy0 + 2 + k % 5).cast("double").alias("wy1"),
+        _ring_array(pts).alias("ring_u"), _ring_array(p2).alias("ring_p2"),
     )
-
-    def clip4(body: Column) -> Column:
-        c = _clip_halfplane(_ring_pts(body), "y", F.col("wy0"), keep_ge=True)
-        c = _clip_halfplane(c, "y", F.col("wy1"), keep_ge=False)
-        c = _clip_halfplane(c, "x", F.col("wx0"), keep_ge=True)
-        c = _clip_halfplane(c, "x", F.col("wx1"), keep_ge=False)
-        return snap_ring_ints(c)
-
+    window = _window_y_first(*map(F.col, ("wx0", "wy0", "wx1", "wy1")))
     clipped = base.select(
         "okey", "wy0",
-        clip4(F.col("ring_u")).alias("s1"),
-        clip4(F.col("ring_p2")).alias("s2"),
+        *[snap_ring_ints(clip_ring(F.col(r), window)).alias(s)
+          for r, s in (("ring_u", "s1"), ("ring_p2", "s2"))],
     )
     return clipped.select(
         "okey",
@@ -3714,7 +3005,7 @@ def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (edge-touching pairs drop). Oracle: closed-form rect∩rect overlap,
     never a vertex clip, certifying the bucketing + SH pipeline
     end-to-end."""
-    from .functions.geometry import open_ring_pts
+    from .functions.geometry import parse_geom_rings
     from .functions.spatial import bbox_cells, report_cell_filter
 
     cs = 32
@@ -3727,7 +3018,7 @@ def spatial_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("okey").alias("akey"),
         F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
         F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
-        open_ring_pts(F.col("wkt")).alias("aring"),
+        parse_geom_rings(F.col("wkt"))[0].cast(RING_T).alias("aring"),
     )
     a = a.select(
         "*",
@@ -3916,7 +3207,6 @@ def spatial_lake_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .functions.geometry import clip_area2x_rect
     from .functions.spatial import cell_index
 
     pcell = 64
@@ -3963,10 +3253,8 @@ def spatial_lake_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "okey",
-            clip_area2x_rect(
-                "wkt",
-                F.lit(float(ax0)), F.lit(float(ay0)),
-                F.lit(float(ax1)), F.lit(float(ay1)),
+            clip_area2x(
+                "wkt", [rect_halfplanes(ax0, ay0, ax1, ay1)]
             ).alias("ov_a2x"),
         )
     )
@@ -4001,7 +3289,7 @@ def spatial_join_overlap_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     both explodes bounded and map-side, ONE keyed exchange, zero
     cartesian; the WKT serialization is per-surviving-pair work inside
     the SH kernel."""
-    from .functions.geometry import open_ring_pts
+    from .functions.geometry import parse_geom_rings
     from .functions.spatial import bbox_cells, report_cell_filter
 
     cs = 32
@@ -4012,7 +3300,7 @@ def spatial_join_overlap_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("okey").alias("akey"),
         F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
         F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
-        open_ring_pts(F.col("wkt")).alias("aring"),
+        parse_geom_rings(F.col("wkt"))[0].cast(RING_T).alias("aring"),
     )
     a = a.select(
         "*",

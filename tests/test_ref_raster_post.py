@@ -194,11 +194,8 @@ def test_overlap_wkt_matches_pure_python_reference(spark):
     geometry text on inputs the registry synthesis never produces
     (odd coordinates, heavy overlap)."""
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        _let,
-        clip_ring_to_rect,
-        normalize_ring,
-        ring_area2x,
-        ring_to_wkt,
+        clip_wkt,
+        rect_halfplanes,
     )
     from soil_data_development_tools___arcmap_spark.functions.spatial import (
         bbox_cells,
@@ -260,17 +257,10 @@ def test_overlap_wkt_matches_pure_python_reference(spark):
             )
         ).alias("cell"),
     )
-    clipped = _let(
-        clip_ring_to_rect(
-            "wkt",
-            F.col("bx0").cast("double"), F.col("by0").cast("double"),
-            F.col("bx1").cast("double"), F.col("by1").cast("double"),
-        ),
-        lambda c: F.struct(
-            ring_to_wkt(normalize_ring(c)).alias("w"),
-            F.round(ring_area2x(c)).cast("long").alias("a"),
-        ),
-    )
+    clipped = clip_wkt("wkt", rect_halfplanes(
+        F.col("bx0").cast("double"), F.col("by0").cast("double"),
+        F.col("bx1").cast("double"), F.col("by1").cast("double"),
+    ))
     got = {
         (r.akey, r.bkey): (r.w, r.a)
         for r in adf.join(bdf, "cell")
@@ -282,8 +272,8 @@ def test_overlap_wkt_matches_pure_python_reference(spark):
                 cs,
             )
         )
-        .select("akey", "bkey", clipped["w"].alias("w"),
-                clipped["a"].alias("a"))
+        .select("akey", "bkey", clipped["clip_wkt"].alias("w"),
+                clipped["clip_a2x"].alias("a"))
         .where(F.col("a") > 0)
         .collect()
     }

@@ -292,7 +292,10 @@ def test_clip_properties_vs_python_sh(spark):
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_ring_to_rect,
+        RING_T,
+        clip_ring,
+        parse_geom_rings,
+        rect_halfplanes,
         ring_area2x,
         shoelace_area2x,
     )
@@ -324,18 +327,19 @@ def test_clip_properties_vs_python_sh(spark):
         " aoi double",
     )
     big = F.lit(1e6)
+    ext = parse_geom_rings("wkt")[0].cast(RING_T)
     got = df.select(
         "id", "py_clip", "py_poly", "aoi",
-        ring_area2x(clip_ring_to_rect(
-            "wkt", F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
-        )).alias("clip"),
+        ring_area2x(clip_ring(ext, rect_halfplanes(
+            F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
+        ))).alias("clip"),
         shoelace_area2x("wkt").cast("double").alias("poly"),
-        ring_area2x(clip_ring_to_rect(
-            "wkt", -big, -big, F.col("xsplit"), big
-        )).alias("left"),
-        ring_area2x(clip_ring_to_rect(
-            "wkt", F.col("xsplit"), -big, big, big
-        )).alias("right"),
+        ring_area2x(clip_ring(ext, rect_halfplanes(
+            -big, -big, F.col("xsplit"), big
+        ))).alias("left"),
+        ring_area2x(clip_ring(ext, rect_halfplanes(
+            F.col("xsplit"), -big, big, big
+        ))).alias("right"),
     ).collect()
     assert len(got) == 300
     n_partial = 0
@@ -511,7 +515,8 @@ def test_clip_holes_properties(spark):
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_area2x_geom,
+        clip_area2x,
+        rect_halfplanes,
     )
 
     rng = random.Random(77)
@@ -550,9 +555,9 @@ def test_clip_holes_properties(spark):
     )
     got = df.select(
         "want",
-        clip_area2x_geom(
-            "wkt", F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
-        ).alias("got"),
+        clip_area2x("wkt", [rect_halfplanes(
+            F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
+        )]).alias("got"),
     ).collect()
     assert len(got) == 200
     for r in got:
@@ -591,16 +596,17 @@ def test_audio_rank_gate_grow_across_batches(spark, tmp_path):
 
 
 def test_clip_geom_dispatch_properties(spark):
-    """clip_area2x_geom on seeded-random MULTIPOLYGONs (2-3 disjoint
+    """clip_area2x on seeded-random MULTIPOLYGONs (2-3 disjoint
     rect parts, optional hole in part 1) and plain POLYGONs through
-    the same dispatch, vs independent overlap arithmetic; multipart
+    the same parse, vs independent overlap arithmetic; multipart
     area == sum of single-part clips."""
     import random
 
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_area2x_geom,
+        clip_area2x,
+        rect_halfplanes,
     )
 
     rng = random.Random(200)
@@ -645,9 +651,9 @@ def test_clip_geom_dispatch_properties(spark):
     )
     got = df.select(
         "want",
-        clip_area2x_geom(
-            "wkt", F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
-        ).alias("got"),
+        clip_area2x("wkt", [rect_halfplanes(
+            F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
+        )]).alias("got"),
     ).collect()
     assert len(got) == 150
     for r in got:
@@ -660,7 +666,7 @@ def test_clip_geom_dispatch_properties(spark):
 def _py_clip_edges(pts, edges):
     """Independent pure-Python Sutherland–Hodgman against arbitrary
     directed half-plane edges (keep left of E->F) — the reference for
-    _clip_halfplane_edge / clip_ring_convex."""
+    edge_halfplane / clip_ring."""
     for (ex, ey), (fx, fy) in edges:
         dx, dy = fx - ex, fy - ey
 
@@ -747,16 +753,19 @@ def test_rectilinear_decompose_properties():
 
 
 def test_clip_convex_edges_vs_python_sh(spark):
-    """clip_area2x_convex on random convex-hull AOIs (true diagonal
-    edges) against random convex subjects must match the independent
-    pure-Python general-edge SH, and obey clip <= min(poly, AOI)."""
+    """clip_ring over convex_halfplanes of random convex-hull AOIs
+    (true diagonal edges) against random convex subjects must match the
+    independent pure-Python general-edge SH, and obey
+    clip <= min(poly, AOI)."""
     import random
 
     from pyspark.sql import functions as F
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_ring_convex,
-        open_ring_pts,
+        RING_T,
+        clip_ring,
+        convex_halfplanes,
+        parse_geom_rings,
         ring_area2x,
         shoelace_area2x,
     )
@@ -792,9 +801,10 @@ def test_clip_convex_edges_vs_python_sh(spark):
             r["id"]: (r["clip"], r["poly"])
             for r in df.select(
                 "id",
-                ring_area2x(
-                    clip_ring_convex(open_ring_pts("wkt"), edges)
-                ).alias("clip"),
+                ring_area2x(clip_ring(
+                    parse_geom_rings("wkt")[0].cast(RING_T),
+                    convex_halfplanes(aoi),
+                )).alias("clip"),
                 shoelace_area2x("wkt").cast("double").alias("poly"),
             ).collect()
         }
@@ -812,12 +822,13 @@ def test_clip_convex_edges_vs_python_sh(spark):
 
 
 def test_clip_rectilinear_vs_piecewise_python(spark):
-    """clip_area2x_rectilinear over the staircase AOI equals the sum
+    """clip_area2x over the staircase AOI's rectangles equals the sum
     of per-piece pure-Python rect clips, holes subtracting."""
     import random
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_area2x_rectilinear,
+        clip_area2x,
+        rect_halfplanes,
         rectilinear_decompose,
     )
     from soil_data_development_tools___arcmap_spark.q_tools import _STAIR_AOI
@@ -846,7 +857,8 @@ def test_clip_rectilinear_vs_piecewise_python(spark):
         rows.append((i, "POLYGON (" + ", ".join(rings) + ")", int(want)))
     df = spark.createDataFrame(rows, "id int, wkt string, want long")
     got = df.select(
-        "want", clip_area2x_rectilinear("wkt", pieces).alias("got")
+        "want",
+        clip_area2x("wkt", [rect_halfplanes(*p) for p in pieces]).alias("got"),
     ).collect()
     assert len(got) == 120
     assert sum(1 for r in got if r["got"] > 0) >= 20
@@ -986,14 +998,15 @@ def test_triangulate_simple_polygon_properties():
 
 
 def test_clip_pieces_vs_python_sh(spark):
-    """clip_area2x_pieces over ear-clipped concave AOIs (arbitrary
+    """clip_area2x over ear-clipped concave AOIs (arbitrary
     internal diagonals) must match the Σ of pure-Python general-edge
     SH clips per triangle, rounded — on integer-rect subjects whose
     true union-clip areas are integers."""
     import random
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_area2x_pieces,
+        clip_area2x,
+        convex_halfplanes,
         triangulate_simple_polygon,
     )
     from soil_data_development_tools___arcmap_spark.q_tools import _LDIAG_AOI
@@ -1021,7 +1034,10 @@ def test_clip_pieces_vs_python_sh(spark):
             rows.append((i, wkt, int(round(want))))
         df = spark.createDataFrame(rows, "id int, wkt string, want long")
         got = df.select(
-            "want", clip_area2x_pieces("wkt", tris).alias("got")
+            "want",
+            clip_area2x(
+                "wkt", [convex_halfplanes(t) for t in tris]
+            ).alias("got"),
         ).collect()
         assert len(got) == 80
         assert sum(1 for r in got if r["got"] > 0) >= 15
@@ -1030,17 +1046,16 @@ def test_clip_pieces_vs_python_sh(spark):
 
 
 def test_clip_wkt_normalization_vs_python(spark):
-    """Clipped-GEOMETRY output: normalize_ring(SH output) serialized
-    to WKT must equal the canonical form of an independent pure-Python
+    """Clipped-GEOMETRY output: clip_wkt (SH output, normalized,
+    serialized to WKT) must equal the canonical form of an independent pure-Python
     SH + normalization — with the fixture biased so subject edges
     frequently lie EXACTLY ON AOI bounds (the duplicate/collinear
     emission cases normalization exists for)."""
     import random
 
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_ring_to_rect,
-        normalize_ring,
-        ring_to_wkt,
+        clip_wkt,
+        rect_halfplanes,
     )
 
     def py_normalize(pts):
@@ -1093,9 +1108,9 @@ def test_clip_wkt_normalization_vs_python(spark):
     )
     got = df.select(
         "want",
-        ring_to_wkt(normalize_ring(clip_ring_to_rect(
-            "wkt", F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
-        ))).alias("got"),
+        clip_wkt("wkt", rect_halfplanes(
+            F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
+        ))["clip_wkt"].alias("got"),
     ).collect()
     assert len(got) == 300
     n_empty = sum(1 for r in got if r["got"] == "POLYGON EMPTY")
@@ -1245,8 +1260,9 @@ def test_wkt_parse_whitespace_tolerance(spark):
     POLYGON, no spaces after commas, multiple spaces between
     coordinates — must parse to identical areas and containment."""
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        clip_area2x_geom,
+        clip_area2x,
         point_in_geom,
+        rect_halfplanes,
         shoelace_area2x,
     )
 
@@ -1260,7 +1276,7 @@ def test_wkt_parse_whitespace_tolerance(spark):
     )
     got = df.select(
         shoelace_area2x("wkt").alias("a2x"),
-        clip_area2x_geom("wkt", 2.0, 2.0, 50.0, 50.0).alias("clip"),
+        clip_area2x("wkt", [rect_halfplanes(2, 2, 50, 50)]).alias("clip"),
         point_in_geom("wkt", F.lit(5), F.lit(5)).alias("inside"),
         point_in_geom("wkt", F.lit(11), F.lit(5)).alias("outside"),
     ).collect()

@@ -153,15 +153,16 @@ def test_split_bridged_ring_three_components(spark):
     splits into THREE parts, serialized canonically."""
     from pyspark.sql import functions as F
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        _clip_halfplane, _ring_pts, rings_to_multiwkt, snap_ring_ints,
-        split_bridged_ring_y,
+        RING_T, clip_ring, parse_geom_rings, rect_halfplanes,
+        rings_to_multiwkt, snap_ring_ints, split_bridged_ring_y,
     )
 
     body = ("0 0, 14 0, 14 8, 10 8, 10 3, 8 3, 8 8, 4 8, 4 3, 2 3, "
             "2 8, 0 8, 0 0")
-    df = spark.range(1).select(F.lit(body).alias("rb"))
-    c = _clip_halfplane(_ring_pts(F.col("rb")), "y", 5.0, keep_ge=True)
-    c = _clip_halfplane(c, "y", 7.0, keep_ge=False)
+    df = spark.range(1).select(F.lit(f"POLYGON (({body}))").alias("wkt"))
+    ring = parse_geom_rings(F.col("wkt"))[0].cast(RING_T)
+    # the y >= 5 and y <= 7 half-planes only
+    c = clip_ring(ring, rect_halfplanes(0, 5.0, 0, 7.0)[2:])
     parts = split_bridged_ring_y(snap_ring_ints(c), 5.0)
     out = df.select(rings_to_multiwkt(parts).alias("w")).collect()[0]["w"]
     assert out == (
@@ -176,21 +177,20 @@ def test_stack_band_rings_degenerate_spans(spark):
     step) and where the subject stops exactly at the split line."""
     from pyspark.sql import functions as F
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        _clip_halfplane, _ring_pts, clip_ring_convex, normalize_ring,
-        ring_to_wkt, snap_ring_ints, stack_band_rings,
+        RING_T, clip_ring, edge_halfplane, normalize_ring, parse_geom_rings,
+        rect_halfplanes, ring_to_wkt, snap_ring_ints, stack_band_rings,
     )
 
     TRAP = [((10.0, 25.0), (50.0, 25.0)), ((50.0, 25.0), (30.0, 45.0)),
             ((30.0, 45.0), (10.0, 45.0)), ((10.0, 45.0), (10.0, 25.0))]
 
     def run_case(body, expected):
-        df = spark.range(1).select(F.lit(body).alias("rb"))
-        pts = _ring_pts(F.col("rb"))
-        lo = _clip_halfplane(pts, "x", 10.0, True)
-        lo = _clip_halfplane(lo, "x", 90.0, False)
-        lo = _clip_halfplane(lo, "y", 5.0, True)
-        lo = snap_ring_ints(_clip_halfplane(lo, "y", 25.0, False))
-        up = snap_ring_ints(clip_ring_convex(pts, TRAP))
+        df = spark.range(1).select(F.lit(f"POLYGON (({body}))").alias("wkt"))
+        pts = parse_geom_rings(F.col("wkt"))[0].cast(RING_T)
+        lo = snap_ring_ints(clip_ring(pts, rect_halfplanes(10, 5, 90, 25)))
+        up = snap_ring_ints(
+            clip_ring(pts, [edge_halfplane(e, f) for e, f in TRAP])
+        )
         merged = stack_band_rings(lo, up, 25.0)
         out = df.select(
             ring_to_wkt(normalize_ring(merged)).alias("w")
@@ -325,8 +325,8 @@ def test_concave_subject_clip_random_property(spark):
 
     from pyspark.sql import functions as F
     from soil_data_development_tools___arcmap_spark.functions.geometry import (
-        _clip_halfplane, _ring_pts, rings_to_multiwkt, snap_ring_ints,
-        split_bridged_ring_y,
+        RING_T, clip_ring, parse_geom_rings, rect_halfplanes,
+        rings_to_multiwkt, snap_ring_ints, split_bridged_ring_y,
     )
 
     rng = random.Random(1207)
@@ -367,10 +367,11 @@ def test_concave_subject_clip_random_property(spark):
          for i, ring, wx0, wx1, wy0, wy1 in cases],
         "i int, rb string, wx0 double, wx1 double, wy0 double, wy1 double",
     )
-    c = _clip_halfplane(_ring_pts(F.col("rb")), "y", F.col("wy0"), True)
-    c = _clip_halfplane(c, "y", F.col("wy1"), False)
-    c = _clip_halfplane(c, "x", F.col("wx0"), True)
-    c = _clip_halfplane(c, "x", F.col("wx1"), False)
+    ring = parse_geom_rings(
+        F.concat(F.lit("POLYGON (("), F.col("rb"), F.lit("))"))
+    )[0].cast(RING_T)
+    hp = rect_halfplanes(F.col("wx0"), F.col("wy0"), F.col("wx1"), F.col("wy1"))
+    c = clip_ring(ring, hp[2:] + hp[:2])  # y bounds first, then x
     got = {
         r["i"]: r["w"]
         for r in df.select(

@@ -14,11 +14,11 @@ from pyspark.sql import functions as F
 
 from soil_data_development_tools___arcmap_spark.functions import arrowgeom
 from soil_data_development_tools___arcmap_spark.functions.geometry import (
-    clip_area2x_rect_pts,
-    clip_ring_pts_to_rect,
+    clip_ring,
     normalize_ring,
     parse_geom_rings,
     point_in_edges,
+    rect_halfplanes,
     ring_area2x,
     ring_to_wkt,
     rings_to_edges,
@@ -199,11 +199,10 @@ def test_overlay_kernel_area_matches_column(spark):
         r["id"]: r["ov_a2x"]
         for r in df.select(
             "id",
-            clip_area2x_rect_pts(
-                F.col("aring"),
+            F.round(ring_area2x(clip_ring(F.col("aring"), rect_halfplanes(
                 F.col("bx0").cast("double"), F.col("by0").cast("double"),
                 F.col("bx1").cast("double"), F.col("by1").cast("double"),
-            ).alias("ov_a2x"),
+            )))).cast("long").alias("ov_a2x"),
         ).where(F.col("ov_a2x") > 0).collect()
     }
     assert kern == col
@@ -220,11 +219,10 @@ def test_overlay_kernel_wkt_matches_column(spark):
         ).collect()
     }
     clipped = _let(
-        clip_ring_pts_to_rect(
-            F.col("aring"),
+        clip_ring(F.col("aring"), rect_halfplanes(
             F.col("bx0").cast("double"), F.col("by0").cast("double"),
             F.col("bx1").cast("double"), F.col("by1").cast("double"),
-        ),
+        )),
         lambda c: F.struct(
             ring_to_wkt(normalize_ring(c)).alias("clip_wkt"),
             F.round(ring_area2x(c)).cast("long").alias("ov_a2x"),

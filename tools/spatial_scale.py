@@ -34,9 +34,10 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from soil_data_development_tools___arcmap_spark import get_spark  # noqa: E402
 from soil_data_development_tools___arcmap_spark.functions.geometry import (  # noqa: E402
-    clip_area2x_rect,
+    clip_area2x,
     parse_geom_rings,
     point_in_edges,
+    rect_halfplanes,
     rings_to_edges,
 )
 from soil_data_development_tools___arcmap_spark.functions.spatial import (  # noqa: E402
@@ -144,11 +145,10 @@ def overlap(spark, n_a: int, n_b: int, span: int) -> DataFrame:
         )
         .select(
             "ak", "bk",
-            clip_area2x_rect(
-                "wkt",
+            clip_area2x("wkt", [rect_halfplanes(
                 F.col("bx0").cast("double"), F.col("by0").cast("double"),
                 F.col("bx1").cast("double"), F.col("by1").cast("double"),
-            ).alias("ov"),
+            )]).alias("ov"),
         )
         .where(F.col("ov") > 0)
     )
