@@ -1,10 +1,10 @@
 """Content-keyed local cache directories (single-sourced invalidation).
 
-Three places grew the same build-once-per-source-fingerprint idiom
+Several places grew the same build-once-per-source-fingerprint idiom
 with slightly different protocols (nightly_gssurgo's text export, the
-streaming-scale replicas, bench's scale10 replica). This module is the
-one implementation the package-side users share, fixing two defects
-the copies had:
+streaming-scale replicas, bench's scale10 replica, the streaming
+readers' symlink dirs). This module is the one implementation they
+share, fixing the defects the copies had:
 
 - **code identity in the key**: a cache keyed on input fingerprints
   alone keeps serving the output of OLD code after the builder is
@@ -14,7 +14,11 @@ the copies had:
   ``/tmp/sddt_*_<tag>`` paths could be pre-created by any local user
   and their content would be trusted; ``cached_dir`` roots everything
   in a per-uid 0700 base whose ownership and mode are verified before
-  use (the same threat events.py's mkdtemp comment guards against).
+  use;
+- **no per-process temp dirs**: a private ``mkdtemp`` per process
+  also avoids the hijack, but leaves one never-removed dir behind per
+  process; a cache entry is built once per source fingerprint and
+  shared by every later process.
 
 Completion protocol: build into a staging dir inside the same base,
 then one atomic ``os.rename`` — a cache dir EXISTS iff it is

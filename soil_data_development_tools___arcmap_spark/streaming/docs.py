@@ -28,18 +28,23 @@ while the index is small; a 100 TB corpus's index goes through a
 shuffled join instead of OOMing the driver). ``broadcast=True`` pins
 the hint for deployments that KNOW the index fits (certified
 value-identical in tests either way).
+
+Every stream here reads through ``events.file_stream`` (the cached
+symlink-dir file source) and runs through ``events.drain`` (one
+availableNow query, its memory-sink view dropped once the result is
+read); update-mode sketch sinks resolve to their final rows with
+``events.final_rows``.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dedup import rowwise_minhash, rowwise_shingles
+from .events import drain, file_stream, final_rows
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -50,46 +55,10 @@ NUM_HASHES = 16
 BANDS = 4
 
 
-_STREAM_DIRS: dict = {}
-
-
-def _parquet_file_stream(
-    spark: SparkSession, src: str, schema: str, prefix: str
-) -> DataFrame:
-    """A parquet table as a file-source stream via a symlink dir. A
-    single-file table gets one symlink; a directory table (multi-part
-    parquet, e.g. the scale replicas) gets one symlink PER PART FILE —
-    the file stream source lists plain files and does not descend into
-    a symlinked subdirectory, so linking the directory itself would
-    stream zero rows. The cache key includes the source mtime: a
-    rewritten directory table gets NEW part-file names, so reusing the
-    old per-part symlinks would dangle (a rewritten single FILE
-    re-resolves through its symlink, but the key covers it uniformly).
-    Shared by the documents and embeddings stream readers so the
-    subtle symlink/mtime logic lives in exactly one place."""
-    src = os.path.abspath(src)
-    key = (src, os.stat(src).st_mtime_ns)
-    stream_dir = _STREAM_DIRS.get(key)
-    if stream_dir is None or not os.path.isdir(stream_dir):
-        stream_dir = tempfile.mkdtemp(prefix=prefix)
-        if os.path.isdir(src):
-            for f in sorted(os.listdir(src)):
-                if f.endswith(".parquet"):
-                    os.symlink(
-                        os.path.join(src, f), os.path.join(stream_dir, f)
-                    )
-        else:
-            os.symlink(src, os.path.join(stream_dir, os.path.basename(src)))
-        _STREAM_DIRS[key] = stream_dir
-    return spark.readStream.schema(schema).parquet(stream_dir)
-
-
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a file-source stream (symlink dir, like
-    read_events_stream); see ``_parquet_file_stream``."""
-    return _parquet_file_stream(
-        spark, f"{sf_dir}/documents.parquet", DOCS_SCHEMA, "sddt_docs_stream_"
-    )
+    """documents.parquet as a file-source stream (see
+    ``events.file_stream``)."""
+    return file_stream(spark, f"{sf_dir}/documents.parquet", DOCS_SCHEMA)
 
 
 def _with_bands(df: DataFrame) -> DataFrame:
@@ -182,17 +151,8 @@ def run_neardup_stream(
         .select("new_did", "corpus_did", jac.alias("jac_e4"))
         .where(F.col("jac_e4") >= threshold_e4)
     )
-    name = "docs_neardup_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # multi-band collisions emit one row per shared band — batch dedup
-    return spark.table(name).distinct()
+    return drain(out)[0].distinct()
 
 
 def kmv_vocab_stateful(
@@ -305,24 +265,11 @@ def run_kmv_vocab_stream(
     (n_sketch, est_distinct) row — under multi-batch replay the sink
     holds one row per source per batch; the monotone upd_seq picks
     the last."""
-    from pyspark.sql import Window
-
-    name = "docs_kmv_" + uuid.uuid4().hex[:8]
-    q = (
-        kmv_vocab_stateful(spark, sf_dir, k=k, source=source)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    sink, _ = drain(
+        kmv_vocab_stateful(spark, sf_dir, k=k, source=source), "update"
     )
-    q.awaitTermination()
-    w = Window.partitionBy("source").orderBy(F.col("upd_seq").desc())
-    return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("source", "n_sketch", "est_distinct")
+    return final_rows(sink, "source").select(
+        "source", "n_sketch", "est_distinct"
     )
 
 
@@ -427,25 +374,14 @@ def run_cms_grid_stream(
     nonzero cells (r, c, cnt) — the exact shape ``cms_sketch``
     produces in batch, so the two are interchangeable downstream
     (``cms_lookup`` probes either)."""
-    from pyspark.sql import Window
-
-    name = "docs_cms_" + uuid.uuid4().hex[:8]
-    q = (
+    sink, _ = drain(
         cms_grid_stateful(
             spark, sf_dir, depth=depth, width=width, seed=seed, source=source
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "update",
     )
-    q.awaitTermination()
-    w = Window.partitionBy("r").orderBy(F.col("upd_seq").desc())
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        final_rows(sink, "r")
         .select("r", F.posexplode("cnts").alias("c", "cnt"))
         .where(F.col("cnt") > 0)
         .select("r", F.col("c").cast("long").alias("c"), "cnt")
@@ -579,25 +515,14 @@ def run_priority_sample_stream(
     and values to the batch ``docs_priority_sample``."""
     from pyspark.sql import Window
 
-    name = "docs_psamp_" + uuid.uuid4().hex[:8]
-    q = (
+    sink, _ = drain(
         priority_sample_stateful(
             spark, sf_dir, n=n, seed=seed, salts=salts, source=source
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "update",
     )
-    q.awaitTermination()
-    w_salt = Window.partitionBy("salt").orderBy(F.col("upd_seq").desc())
-    final = (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w_salt))
-        .where(F.col("rn") == 1)
-        .localCheckpoint()  # salts rows — settled once for two consumers
-    )
+    # salts rows — settled once for two consumers
+    final = final_rows(sink, "salt").localCheckpoint()
     rows = final.select(
         F.explode(F.arrays_zip("skeys", "doc_ids", "sources", "n_chars_arr")).alias(
             "z"
@@ -643,11 +568,9 @@ EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings.parquet as a file-source stream; see
-    ``_parquet_file_stream`` for the symlink-per-part-file rule."""
-    return _parquet_file_stream(
-        spark, f"{sf_dir}/embeddings.parquet", EMB_SCHEMA, "sddt_emb_stream_"
-    )
+    """embeddings.parquet as a file-source stream (see
+    ``events.file_stream``)."""
+    return file_stream(spark, f"{sf_dir}/embeddings.parquet", EMB_SCHEMA)
 
 
 def emb_drift_stateful(
@@ -765,32 +688,17 @@ def run_emb_drift_stream(
     final rows."""
     from pyspark.sql import Window
 
-    name = "emb_drift_" + uuid.uuid4().hex[:8]
-    q = (
-        emb_drift_stateful(spark, sf_dir, source=source)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("dim").orderBy(F.col("upd_seq").desc())
-    final = (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "dim",
-            "n_old",
-            "n_new",
-            "sum_old_e6",
-            "sum_new_e6",
-            (
-                F.col("sum_new_e6") * F.col("n_old")
-                - F.col("sum_old_e6") * F.col("n_new")
-            ).alias("delta_xn"),
-        )
+    sink, _ = drain(emb_drift_stateful(spark, sf_dir, source=source), "update")
+    final = final_rows(sink, "dim").select(
+        "dim",
+        "n_old",
+        "n_new",
+        "sum_old_e6",
+        "sum_new_e6",
+        (
+            F.col("sum_new_e6") * F.col("n_old")
+            - F.col("sum_old_e6") * F.col("n_new")
+        ).alias("delta_xn"),
     )
     wr = Window.orderBy(F.abs(F.col("delta_xn")).desc(), "dim")
     return final.withColumn(
@@ -829,7 +737,6 @@ def _run_media_gate(
     join_keys: list[str],
     source: DataFrame | None,
     broadcast: bool,
-    prefix: str,
 ) -> DataFrame:
     """Shared stateless media-ingest gate runner: even doc_ids are the
     indexed corpus, odd doc_ids arrive as the stream; ``fp_fn`` maps a
@@ -866,16 +773,7 @@ def _run_media_gate(
     out = new.join(_hint(index), join_keys).select(
         "new_did", "corpus_did", *join_keys
     )
-    name = prefix + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out)[0]
 
 
 def run_media_phash_stream(
@@ -897,7 +795,6 @@ def run_media_phash_stream(
         ["ahash_hi", "ahash_lo"],
         source,
         broadcast,
-        "media_phash_",
     )
 
 
@@ -930,7 +827,7 @@ def run_media_audio_stream(
     design: ``_run_media_gate``."""
     return _run_media_gate(
         spark, sf_dir, _audio_fp_media, ["fp", "n_windows"], source,
-        broadcast, "media_audio_",
+        broadcast,
     )
 
 
@@ -960,7 +857,6 @@ def _run_media_gate_grow(
     fp_fn,
     join_keys: list[str],
     source: DataFrame | None,
-    prefix: str,
     with_query: bool = False,
     land_dir: str | None = None,
     checkpoint: str | None = None,
@@ -1049,30 +945,8 @@ def _run_media_gate_grow(
         gate, out_schema, "admitted long", "append",
         GroupStateTimeout.NoTimeout,
     )
-    if land_dir is not None:
-        q = (
-            res.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", land_dir)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.read.parquet(land_dir)
-        return (out, q) if with_query else out
-    name = prefix + uuid.uuid4().hex[:8]
-    q = (
-        res.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if with_query:
-        return spark.table(name), q
-    return spark.table(name)
+    out, q = drain(res, path=land_dir, checkpoint=checkpoint)
+    return (out, q) if with_query else out
 
 
 def _phash_media_mix(df: DataFrame, scale: int = 1) -> DataFrame:
@@ -1127,8 +1001,7 @@ def run_media_phash_gate_grow(
     ``_run_media_gate_grow``."""
     return _run_media_gate_grow(
         spark, sf_dir, lambda df: _phash_media_mix(df, scale),
-        ["ahash_hi", "ahash_lo"], source, "media_phash_grow_",
-        with_query, land_dir, checkpoint,
+        ["ahash_hi", "ahash_lo"], source, with_query, land_dir, checkpoint,
     )
 
 
@@ -1146,8 +1019,7 @@ def run_media_audio_gate_grow(
     ``_run_media_gate_grow``."""
     return _run_media_gate_grow(
         spark, sf_dir, lambda df: _audio_fp_media_mix(df, scale, window),
-        ["fp", "n_windows"], source, "media_audio_grow_",
-        with_query,
+        ["fp", "n_windows"], source, with_query,
     )
 
 
@@ -1179,8 +1051,7 @@ def run_media_audio_spectral_gate_grow(
     different acoustic feature. See ``_run_media_gate_grow``."""
     return _run_media_gate_grow(
         spark, sf_dir, lambda df: _audio_spectral_media_mix(df, scale),
-        ["fp", "n_windows"], source, "media_audio_spec_grow_",
-        with_query,
+        ["fp", "n_windows"], source, with_query,
     )
 
 
@@ -1213,8 +1084,7 @@ def run_media_audio_rank_gate_grow(
     See ``_run_media_gate_grow``."""
     return _run_media_gate_grow(
         spark, sf_dir, lambda df: _audio_rank_media_mix(df, scale),
-        ["fp", "n_windows"], source, "media_audio_rank_grow_",
-        with_query, key_types={"fp": "string"},
+        ["fp", "n_windows"], source, with_query, key_types={"fp": "string"},
     )
 
 
@@ -1715,8 +1585,6 @@ def run_nb_gate_stream(
     This is deliberately a different PLAN from docs_nb_classify's
     explode+join+groupBy: same model, serving topology (model in
     memory, corpus never shuffled at all)."""
-    import uuid as _uuid
-
     from ..q_docs import _nb_model
 
     model_map = _nb_model(spark, sf_dir).agg(
@@ -1749,13 +1617,4 @@ def run_nb_gate_stream(
             (F.col("score_e6") > 0).cast("long").alias("keep"),
         )
     )
-    name = "docs_nb_gate_" + _uuid.uuid4().hex[:8]
-    q = (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(scored)[0]

@@ -3,10 +3,25 @@
 The reference is strictly batch (SURVEY §2.9); this is net-new,
 north-star surface. The same transformation runs in batch and
 streaming — ``tumbling_daily(df)`` is used by the batch query
-``events_tumbling_daily`` AND by ``run_stream_to_table`` under a
-file-source readStream, so the correctness oracle for the batch form
+``events_tumbling_daily`` AND by ``run_stream_to_table`` over the
+file-source stream, so the correctness oracle for the batch form
 certifies the streaming form (exactly-once file source + deterministic
 agg ⇒ identical results at availableNow completion).
+
+Every streaming query here and in ``docs.py`` runs on the same
+plumbing, defined once below:
+
+- ``file_stream`` is the one file source: a parquet table exposed as a
+  stream through a cached symlink directory (one link per part file,
+  optional duplicate copies and flush-sentinel rows), built once per
+  source fingerprint under ``cachefs`` — no per-process temp dirs;
+- ``drain`` is the one runner: one availableNow query into a memory
+  sink (or a parquet sink for the landed gates), awaited, its result
+  read back and the sink's temp view dropped at once, so no view keeps
+  sink rows alive for the rest of the session;
+- ``final_rows`` picks each key's last row off an update-mode sink,
+  and ``peak_state_rows`` reads a finished query's peak state-store
+  rows.
 
 Timestamps: the parquet source carries ``ts`` as TIMESTAMP(µs, NTZ);
 ``_ts_ns`` converts it to integer nanoseconds right after the scan
@@ -22,11 +37,11 @@ growing state forever.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -35,6 +50,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..cachefs import cached_dir, content_tag, source_salt
 
 EVENTS_SCHEMA = StructType(
     [
@@ -72,39 +89,150 @@ def _ts_ns(df: DataFrame) -> DataFrame:
     return df
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # The file source only accepts directories; sf_dir mixes all tables
-    # in one dir, so expose just the events file through a symlink dir
-    # (zero-copy; in production the source is a real directory/Kafka).
-    # A single-file table gets one symlink; a directory table
-    # (multi-part parquet, e.g. the scale replicas) gets one symlink
-    # PER PART FILE — the file stream source lists plain files and
-    # does not descend into a symlinked subdirectory, so linking the
-    # directory itself would stream zero rows (same fix as
-    # read_documents_stream; the cache key includes mtime because a
-    # rewritten directory table gets new part-file names).
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    # Per-process private dir (mkdtemp, mode 0700) rather than a
-    # predictable path under the shared tmp dir — no pre-creation
-    # hijack, no stale symlink if sf_dir moves between sessions.
-    key = (src, os.stat(src).st_mtime_ns)
-    cache = getattr(read_events_stream, "_dirs", None)
-    if cache is None:
-        cache = read_events_stream._dirs = {}
-    stream_dir = cache.get(key)
-    if stream_dir is None or not os.path.isdir(stream_dir):
-        stream_dir = tempfile.mkdtemp(prefix="sddt_events_stream_")
+def file_stream(
+    spark: SparkSession,
+    src: str,
+    schema: StructType | str,
+    *,
+    copies: int = 1,
+    sentinels: list[tuple] | None = None,
+) -> DataFrame:
+    """The parquet table ``src`` (a single file or a directory of part
+    files) as a file-source stream — the package's one stream
+    reader.
+
+    The file source reads a directory and lists the plain files in
+    it; sf_dir mixes every table in one directory, and the source does
+    not descend into a symlinked subdirectory. So the stream directory
+    holds one symlink per part file of a directory table (the layout
+    of every scale replica and of any Spark-written table), or one for
+    a single-file table — zero copy. ``copies`` links every file that
+    many times (each row then arrives ``copies`` times). ``sentinels``
+    are extra rows, in ``schema``'s field order (a ``StructType``
+    then), written into the same directory as one small parquet
+    file.
+
+    The directory is a ``cachefs.cached_dir``, keyed by the source's
+    path, mtime and size, ``copies``, the sentinel rows and this
+    function's source text: a rewritten table (new part-file names)
+    or an edited builder gets a new directory, and every later call,
+    in any process, reuses the finished one in the uid-private cache
+    base instead of making a temp dir of its own."""
+    src = os.path.abspath(src)
+
+    def build(staging: str) -> None:
         if os.path.isdir(src):
-            for f in sorted(os.listdir(src)):
-                if f.endswith(".parquet"):
-                    os.symlink(
-                        os.path.join(src, f), os.path.join(stream_dir, f)
-                    )
+            files = [
+                os.path.join(src, f)
+                for f in sorted(os.listdir(src))
+                if f.endswith(".parquet")
+            ]
         else:
-            os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-        cache[key] = stream_dir
-    return _ts_ns(spark.readStream.schema(EVENTS_SCHEMA).parquet(stream_dir))
+            files = [src]
+        for i in range(copies):
+            for f in files:
+                link = f"{i}_{os.path.basename(f)}"
+                os.symlink(f, os.path.join(staging, link))
+        if sentinels:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            arrow_schema = to_arrow_schema(schema)
+            rows = [dict(zip(arrow_schema.names, r)) for r in sentinels]
+            pq.write_table(
+                pa.Table.from_pylist(rows, schema=arrow_schema),
+                os.path.join(staging, "zz_sentinel.parquet"),
+            )
+
+    stream_dir = cached_dir(
+        "stream",
+        content_tag(
+            [src], extra=f"{copies}|{sentinels!r}|{source_salt(file_stream)}"
+        ),
+        build,
+    )
+    return spark.readStream.schema(schema).parquet(stream_dir)
+
+
+def drain(
+    df: DataFrame,
+    mode: str = "append",
+    *,
+    path: str | None = None,
+    checkpoint: str | None = None,
+) -> tuple[DataFrame, StreamingQuery]:
+    """Run the streaming ``df`` to completion as one availableNow query
+    and return ``(result, query)``; ``awaitTermination`` re-raises a
+    failed query's error.
+
+    The default sink is a memory table under a fresh query name:
+    ``result`` is read from its temp view, and the view is dropped
+    before returning. ``result`` keeps its analyzed plan, so it still
+    reads the sink's rows; once it and ``query`` are garbage, so are
+    the rows (an undropped view would pin them in driver memory for
+    the life of the session). With ``path`` the sink is parquet files
+    there, restartable from ``checkpoint``, and ``result`` reads them
+    back."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(mode).trigger(availableNow=True)
+    if path is not None:
+        q = writer.format("parquet").option(
+            "checkpointLocation", checkpoint
+        ).start(path)
+        q.awaitTermination()
+        return spark.read.parquet(path), q
+    name = "drain_" + uuid.uuid4().hex
+    q = writer.format("memory").queryName(name).start()
+    q.awaitTermination()
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result, q
+
+
+def final_rows(df: DataFrame, key: str) -> DataFrame:
+    """Each ``key``'s last row of an update-mode sink: the stateful
+    sketch streams emit one running row per key per micro-batch with
+    a monotone ``upd_seq``, and the highest one is the final state."""
+    w = Window.partitionBy(key).orderBy(F.col("upd_seq").desc())
+    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
+
+
+def peak_state_rows(q: StreamingQuery) -> int:
+    """Peak state-store rows of a finished query: the max of
+    ``stateOperators[].numRowsTotal`` over its micro-batch progresses.
+
+    ``recentProgress`` is a ring buffer of
+    ``spark.sql.streaming.numRecentProgressUpdates`` entries; a full
+    buffer may have dropped batches, so the peak could undercount, and
+    that raises instead."""
+    progress = q.recentProgress
+    cap = int(
+        SparkSession.active().conf.get(
+            "spark.sql.streaming.numRecentProgressUpdates"
+        )
+    )
+    if len(progress) >= cap:
+        raise RuntimeError(
+            f"{len(progress)} progress entries fill the {cap}-entry ring "
+            "buffer; raise spark.sql.streaming.numRecentProgressUpdates"
+        )
+    return max(
+        (
+            int(so.get("numRowsTotal") or 0)
+            for p in progress
+            for so in p.get("stateOperators") or []
+        ),
+        default=0,
+    )
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a file-source stream with integer-ns ``ts``
+    (see ``file_stream``)."""
+    return _ts_ns(
+        file_stream(spark, f"{sf_dir}/events.parquet", EVENTS_SCHEMA)
+    )
 
 
 def tumbling_daily(events: DataFrame, with_watermark: bool = False) -> DataFrame:
@@ -173,17 +301,7 @@ def run_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful sessionization to completion and return the
     final per-user table (update-mode memory sink; the single
     availableNow batch yields one row per user)."""
-    name = "events_sess_" + uuid.uuid4().hex[:8]
-    q = (
-        sessionize_stateful(spark, sf_dir)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(sessionize_stateful(spark, sf_dir), "update")[0]
 
 
 def sliding_weekly(events: DataFrame, with_watermark: bool = False) -> DataFrame:
@@ -233,24 +351,17 @@ def run_sliding_stream(
     ``source`` overrides the default single-file reader — the
     multi-batch replay test delivers one day per trigger, pinning that
     in-order replay under the 1-day watermark loses nothing."""
-    name = "events_slide_" + uuid.uuid4().hex[:8]
-    q = (
+    sink, _ = drain(
         sliding_weekly(
             source
             if source is not None
             else read_events_stream(spark, sf_dir),
             with_watermark=True,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "update",
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy("win_end_day", "event_type")
+        sink.groupBy("win_end_day", "event_type")
         .agg(
             F.max("n").alias("n"),
             F.max_by("value_c", "n").alias("value_c"),
@@ -305,29 +416,22 @@ def run_enriched_stream(
 
     ``source`` overrides the default single-file reader (multi-batch
     replay test, one day per trigger)."""
-    name = "events_enrich_" + uuid.uuid4().hex[:8]
     ev = (
         (source if source is not None else read_events_stream(spark, sf_dir))
         .withColumn("event_time", F.timestamp_micros(F.expr("ts div 1000")))
         .withWatermark("event_time", "1 day")
     )
-    q = (
+    sink, _ = drain(
         ev.join(F.broadcast(_category_dim(spark)), "event_type")
         .groupBy(F.window("event_time", "1 day").alias("w"), "category")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_c"),
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "update",
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy(
+        sink.groupBy(
             F.expr("unix_micros(w.start) div 86400000000").alias("day_num"),
             "category",
         )
@@ -376,7 +480,6 @@ def run_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream forever — the state-bounded production shape. availableNow
     + memory sink returns the completed result; inner-join output is
     deterministic regardless of micro-batching."""
-    name = "events_attr_" + uuid.uuid4().hex[:8]
     ev = read_events_stream(spark, sf_dir)
     clicks = (
         ev.where(F.col("event_type") == "click")
@@ -404,15 +507,7 @@ def run_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (clicks["c_time"] <= purchases["p_time"]),
         "inner",
     ).select("purchase_id", "click_id")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined)[0]
 
 
 def attribution_pairs_outer(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -440,54 +535,32 @@ def attribution_pairs_outer(clicks: DataFrame, purchases: DataFrame) -> DataFram
     ).select("click_id", "purchase_id")
 
 
-#: far-future flush sentinel (~2096) — past every driver-generated ts,
-#: still far inside int64 ns
-SENTINEL_TS_NS = 4_000_000_000_000_000_000
+#: Flush sentinels: a far-future (~2096, past every generated ts,
+#: still far inside int64 ns) click and purchase with negative ids, as
+#: on-disk rows (``ts`` in NTZ µs). Outer-join and session-window state
+#: only drains when the watermark passes it; a finite file stream ends
+#: with the watermark one delay behind its newest REAL row, so the
+#: newest unmatched rows / open sessions would stay buffered forever.
+#: The sentinels push every input watermark past every real event, so
+#: the availableNow no-data batch evicts and emits all real state —
+#: the streaming result then equals the batch twin. The sentinels'
+#: own rows match nothing and are filtered out by their id < 0.
+FLUSH_SENTINELS = [
+    (-1, 4_000_000_000_000_000, -1, "click", 0.0, None),
+    (-2, 4_000_000_000_000_000, -2, "purchase", 0.0, None),
+]
 
 
-def _stream_dir_with_flush_sentinels(spark: SparkSession, sf_dir: str) -> str:
-    """Stream dir = events.parquet symlink + one tiny parquet holding a
-    far-future click and purchase (negative ids). Outer-join state only
-    drains when the watermark passes it; a finite file stream ends with
-    the watermark one delay behind its newest REAL row, so the newest
-    unmatched rows would stay buffered forever. The sentinels push both
-    input watermarks past every real event, so the availableNow no-data
-    batch evicts and emits every real unmatched row — making the
-    streaming result equal the batch left join (the sentinels
-    themselves stay in state / match nothing and are filtered by id<0
-    on the result table)."""
-    import glob
-    import shutil
-
-    # the instant→NTZ cast below renders wall time in the session tz;
-    # pin UTC so the sentinel lands at the intended absolute position
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    cache = getattr(_stream_dir_with_flush_sentinels, "_dirs", None)
-    if cache is None:
-        cache = _stream_dir_with_flush_sentinels._dirs = {}
-    stream_dir = cache.get(src)
-    if stream_dir is not None and os.path.isdir(stream_dir):
-        return stream_dir
-    stream_dir = tempfile.mkdtemp(prefix="sddt_events_outer_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    sent = spark.createDataFrame(
-        [
-            (-1, SENTINEL_TS_NS, -1, "click", 0.0, None),
-            (-2, SENTINEL_TS_NS, -2, "purchase", 0.0, None),
-        ],
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn(
-        "ts",
-        F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+def _flushed_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream plus ``FLUSH_SENTINELS``."""
+    return _ts_ns(
+        file_stream(
+            spark,
+            f"{sf_dir}/events.parquet",
+            EVENTS_SCHEMA,
+            sentinels=FLUSH_SENTINELS,
+        )
     )
-    tmp_out = tempfile.mkdtemp(prefix="sddt_sentinel_")
-    sent.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-    part = glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
-    shutil.copy(part, os.path.join(stream_dir, "zz_sentinel.parquet"))
-    cache[src] = stream_dir
-    return stream_dir
 
 
 def run_attribution_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,18 +570,12 @@ def run_attribution_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched click emits its null row only when the global watermark
     proves no matching purchase can still arrive, and rows newer than
     (final watermark) would be withheld at query end. The flush
-    sentinels (see _stream_dir_with_flush_sentinels) advance both
-    watermarks past every real event so the no-data batch drains state
-    completely; the result then equals the batch twin and the same
-    oracle certifies both."""
-    name = "events_attro_" + uuid.uuid4().hex[:8]
-    stream_dir = _stream_dir_with_flush_sentinels(spark, sf_dir)
-
-    def _stream():
-        return _ts_ns(spark.readStream.schema(EVENTS_SCHEMA).parquet(stream_dir))
-
+    sentinels (``FLUSH_SENTINELS``) advance both watermarks past every
+    real event so the no-data batch drains state completely; the
+    result then equals the batch twin and the same oracle certifies
+    both."""
     clicks = (
-        _stream()
+        _flushed_events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
         .select(
             "user_id",
@@ -518,7 +585,7 @@ def run_attribution_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("c_time", "1 hour")
     )
     purchases = (
-        _stream()
+        _flushed_events_stream(spark, sf_dir)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("__p_user"),
@@ -534,41 +601,27 @@ def run_attribution_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (purchases["p_time"] <= clicks["c_time"] + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     ).select("click_id", "purchase_id")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # drop the sentinel click's own row if it ever drains (id < 0);
     # this filter runs on the completed memory table, not the stream
-    return spark.table(name).where(F.col("click_id") >= 0)
+    return drain(joined)[0].where(F.col("click_id") >= 0)
 
 
 def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup — the ingest-side exact-dedup twin a
     training-data pipeline runs on its event/document firehose. The
-    source dir carries the events file TWICE (two symlinks → every row
+    source dir links the events files TWICE (``copies=2`` → every row
     arrives duplicated); ``dropDuplicatesWithinWatermark`` on event_id
     keys the dedup state and the 1-day watermark EVICTS keys once no
     duplicate can still arrive — bounded state, unlike a plain
     dropDuplicates whose key set grows with the stream forever. The
     deduped output equals the single-copy batch table, so the batch
     oracle certifies the streaming run."""
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    cache = getattr(run_dedup_stream, "_dirs", None)
-    if cache is None:
-        cache = run_dedup_stream._dirs = {}
-    stream_dir = cache.get(src)
-    if stream_dir is None or not os.path.isdir(stream_dir):
-        stream_dir = tempfile.mkdtemp(prefix="sddt_events_dup_")
-        os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-        os.symlink(src, os.path.join(stream_dir, "events_copy.parquet"))
-        cache[src] = stream_dir
     ev = (
-        _ts_ns(spark.readStream.schema(EVENTS_SCHEMA).parquet(stream_dir))
+        _ts_ns(
+            file_stream(
+                spark, f"{sf_dir}/events.parquet", EVENTS_SCHEMA, copies=2
+            )
+        )
         .withColumn("event_time", F.timestamp_micros(F.expr("ts div 1000")))
         .withWatermark("event_time", "1 day")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -579,16 +632,7 @@ def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    name = "events_dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out)[0]
 
 
 def run_stream_to_table(
@@ -609,28 +653,21 @@ def run_stream_to_table(
     ``source`` overrides the default single-file reader with any
     ns-``ts`` events stream (the multi-batch replay test feeds a
     file-per-day source under maxFilesPerTrigger=1)."""
-    name = "events_stream_" + uuid.uuid4().hex[:8]
     ev = (
         (source if source is not None else read_events_stream(spark, sf_dir))
         .withColumn("event_time", F.timestamp_micros(F.expr("ts div 1000")))
         .withWatermark("event_time", "1 day")
     )
-    q = (
+    sink, _ = drain(
         ev.groupBy(F.window("event_time", "1 day").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_c"),
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "update",
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy(
+        sink.groupBy(
             F.expr("unix_micros(w.start) div 86400000000").alias("day_num"),
             "event_type",
         )
@@ -677,23 +714,15 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the sink. A finite file stream ends with the watermark one
     delay behind its newest row, which would withhold the last open
     sessions forever, so the source carries the far-future flush
-    sentinels (see _stream_dir_with_flush_sentinels); their own
-    sessions are dropped by the ``user_id >= 0`` filter."""
-    name = "events_sessw_" + uuid.uuid4().hex[:8]
-    stream_dir = _stream_dir_with_flush_sentinels(spark, sf_dir)
-    ev = _ts_ns(spark.readStream.schema(EVENTS_SCHEMA).parquet(stream_dir))
-    q = (
-        session_windows_builtin(ev, with_watermark=True)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    sentinels (``FLUSH_SENTINELS``); their own sessions are dropped by
+    the ``user_id >= 0`` filter."""
+    sink, _ = drain(
+        session_windows_builtin(
+            _flushed_events_stream(spark, sf_dir), with_watermark=True
+        )
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .where(F.col("user_id") >= 0)
+        sink.where(F.col("user_id") >= 0)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
@@ -760,17 +789,7 @@ def run_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful funnel to completion (availableNow + update
     memory sink -> one row per user), then collapse the tiny per-user
     stage table to the single funnel-counts row batch-side."""
-    name = "events_funnel_" + uuid.uuid4().hex[:8]
-    q = (
-        funnel_stateful(spark, sf_dir)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).agg(
+    return drain(funnel_stateful(spark, sf_dir), "update")[0].agg(
         F.count(F.lit(1)).alias("n_users"),
         F.count("t1").alias("n_view"),
         F.count("t2").alias("n_click"),
@@ -793,7 +812,6 @@ def run_volume_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-state posture the DAU/WAU streams moved to) — counts are
     monotone, so per-(type, day) MAX over the update sink is the
     final rollup."""
-    name = "events_vol_" + uuid.uuid4().hex[:8]
     daily = (
         read_events_stream(spark, sf_dir)
         .withColumn("event_time", F.timestamp_micros(F.expr("ts div 1000")))
@@ -801,20 +819,12 @@ def run_volume_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.window("event_time", "1 day").alias("w"))
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    q = (
-        daily.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink, _ = drain(daily, "update")
     # localCheckpoint: the completed rollup is day×type-sized (~150
     # rows); checkpointing gives the self-join fresh attribute ids
     # (MemorySink views share refs and fail analysis otherwise)
     rolled = (
-        spark.table(name)
-        .groupBy(
+        sink.groupBy(
             "event_type",
             F.expr("unix_micros(w.start) div 86400000000").alias("day_num"),
         )
@@ -862,7 +872,6 @@ def run_dau_stream(
     ``source`` overrides the default single-file reader with any
     ns-``ts`` events stream (the multi-batch test feeds a
     file-per-day source under maxFilesPerTrigger=1)."""
-    name = "events_dau_" + uuid.uuid4().hex[:8]
     ud = (
         (source if source is not None else read_events_stream(spark, sf_dir))
         .withColumn("day_num", F.expr("(ts div 1000) div 86400000000"))
@@ -870,19 +879,14 @@ def run_dau_stream(
         .withWatermark("event_time", "1 day")
         .dropDuplicatesWithinWatermark(["user_id", "day_num"])
     )
-    q = (
-        ud.groupBy(F.window("event_time", "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("dau"))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    sink, _ = drain(
+        ud.groupBy(F.window("event_time", "1 day").alias("w")).agg(
+            F.count(F.lit(1)).alias("dau")
+        ),
+        "update",
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy(
+        sink.groupBy(
             F.expr("unix_micros(w.start) div 86400000000").alias("day_num")
         )
         .agg(F.max("dau").alias("dau"))
@@ -909,7 +913,6 @@ def run_wau_stream(
     sink rows is the final count. Windows ending past the final real
     day are trimmed via a broadcast join against the streamed maximum
     (no driver collect)."""
-    name = "events_wau_" + uuid.uuid4().hex[:8]
     fanned = (
         (source if source is not None else read_events_stream(spark, sf_dir))
         .withColumn("day_num", F.expr("(ts div 1000) div 86400000000"))
@@ -922,19 +925,14 @@ def run_wau_stream(
         .select("win_day", "win_time", "user_id")
         .dropDuplicatesWithinWatermark(["user_id", "win_day"])
     )
-    q = (
-        fanned.groupBy(F.window("win_time", "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("wau"))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    sink, _ = drain(
+        fanned.groupBy(F.window("win_time", "1 day").alias("w")).agg(
+            F.count(F.lit(1)).alias("wau")
+        ),
+        "update",
     )
-    q.awaitTermination()
     rolled = (
-        spark.table(name)
-        .groupBy(
+        sink.groupBy(
             F.expr("unix_micros(w.start) div 86400000000").alias("win_day")
         )
         .agg(F.max("wau").alias("wau"))
@@ -1010,22 +1008,14 @@ def run_transition_stream(
     exactly like the batch query. Counts are monotone, so MAX per pair
     over the sink rows is the final count. Certified by the SAME
     oracle as ``events_transition_matrix``."""
-    name = "events_trans_" + uuid.uuid4().hex[:8]
-    q = (
+    sink, _ = drain(
         transition_stateful(spark, sf_dir, source)
         .groupBy("prev_type", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+        .agg(F.count(F.lit(1)).alias("n")),
+        "update",
     )
-    q.awaitTermination()
-    pairs = (
-        spark.table(name)
-        .groupBy("prev_type", "event_type")
-        .agg(F.max("n").alias("n"))
+    pairs = sink.groupBy("prev_type", "event_type").agg(
+        F.max("n").alias("n")
     )
     total = pairs.agg(F.sum("n").alias("total"))
     return pairs.crossJoin(F.broadcast(total)).select(
@@ -1109,19 +1099,9 @@ def run_scd2_stream(
     argbest struct aggregate, no window): the result hash-matches the
     batch ``events_scd2_history`` oracle exactly, including the
     ``is_current`` flag derived from the surviving open intervals."""
-    name = "events_scd2_" + uuid.uuid4().hex[:8]
-    q = (
-        scd2_stateful(spark, sf_dir, source)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink, _ = drain(scd2_stateful(spark, sf_dir, source), "update")
     return (
-        spark.table(name)
-        .groupBy("user_id", "version")
+        sink.groupBy("user_id", "version")
         .agg(
             F.max(
                 F.struct(
@@ -1243,27 +1223,12 @@ def run_quantile_sketch_stream(
 ) -> DataFrame:
     """Run the streaming quantile sketch to completion (availableNow
     + update-mode memory sink) and return each type's FINAL row."""
-    from pyspark.sql import Window
-
-    name = "events_qsk_" + uuid.uuid4().hex[:8]
-    q = (
-        quantile_sketch_stateful(spark, sf_dir, source=source)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    sink, _ = drain(
+        quantile_sketch_stateful(spark, sf_dir, source=source), "update"
     )
-    q.awaitTermination()
-    w = Window.partitionBy("event_type").orderBy(F.col("upd_seq").desc())
-    return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "event_type", "n_events", "n_buckets",
-            "p50_est", "p95_est", "p99_est",
-        )
+    return final_rows(sink, "event_type").select(
+        "event_type", "n_events", "n_buckets",
+        "p50_est", "p95_est", "p99_est",
     )
 
 
@@ -1336,17 +1301,9 @@ def run_geofence_stream(
     sink, append mode — the join is stateless) and return the result
     table. ``source`` overrides the default single-file reader
     (multi-batch replay test)."""
-    name = "events_geofence_" + uuid.uuid4().hex[:8]
-    q = (
+    return drain(
         geofence_pairs(
             source if source is not None else read_events_stream(spark, sf_dir),
             geofence_layer(spark, sf_dir),
         )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    )[0]

@@ -3,6 +3,7 @@ the batch form of the same transformation (exactly-once file source)."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_SMOKE
 
 from soil_data_development_tools___arcmap_spark.queries import (
@@ -16,13 +17,24 @@ from soil_data_development_tools___arcmap_spark.streaming.events import (
 
 
 def test_stream_equals_batch(spark):
+    """Also pins the sink lifecycle: the drained memory sink's temp
+    view is dropped before the runner returns (no view pins sink rows
+    for the rest of the session), and the returned frame still reads
+    every row."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
     batch = {
         (r["day_num"], r["event_type"]): (r["n"], r["value_c"])
         for r in events_tumbling_daily(spark, SF_SMOKE).collect()
     }
+    views = temp_views()
+    out = run_stream_to_table(spark, SF_SMOKE)
+    assert temp_views() == views
     stream = {
         (r["day_num"], r["event_type"]): (r["n"], r["value_c"])
-        for r in run_stream_to_table(spark, SF_SMOKE).collect()
+        for r in out.collect()
     }
     assert batch == stream and len(batch) > 0
 
@@ -724,21 +736,28 @@ def test_quantile_sketch_stream_matches_batch_and_replay(spark, tmp_path):
     assert all(r[2] <= 512 for r in multi)
 
 
-def test_events_stream_multipart_source_dir(spark, tmp_path):
+@pytest.mark.parametrize(
+    "runner",
+    [
+        "run_quantile_sketch_stream",
+        "run_dedup_stream",  # two copies of every part file
+        "run_attribution_outer_stream",  # part files + flush sentinels
+        "run_session_window_stream",
+    ],
+)
+def test_events_stream_multipart_source_dir(spark, tmp_path, runner):
     """An events.parquet that is a DIRECTORY of part files (the layout
     of every scale replica and of any real Spark-written table) must
-    stream the same rows as the single-file layout — same fix as the
-    docs source: the file stream source does not descend into a
-    symlinked subdirectory, so the reader links part files
-    individually."""
+    stream the same rows as the single-file layout, through every
+    shape of stream directory (plain, duplicated, with sentinels): the
+    file stream source does not descend into a symlinked
+    subdirectory, so ``file_stream`` links part files individually."""
+    import collections
     import os
 
-    from soil_data_development_tools___arcmap_spark.streaming.events import (
-        EVENTS_SCHEMA,
-        run_quantile_sketch_stream,
-    )
+    from soil_data_development_tools___arcmap_spark.streaming import events
 
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(
+    ev = spark.read.schema(events.EVENTS_SCHEMA).parquet(
         os.path.join(SF_SMOKE, "events.parquet")
     )
     d = str(tmp_path / "events_multipart")
@@ -746,16 +765,54 @@ def test_events_stream_multipart_source_dir(spark, tmp_path):
     ev.repartition(4).write.mode("overwrite").parquet(
         os.path.join(d, "events.parquet")
     )
-    cols = ("event_type", "n_events", "n_buckets", "p50_est", "p95_est", "p99_est")
-    single = {
-        tuple(r[c] for c in cols)
-        for r in run_quantile_sketch_stream(spark, SF_SMOKE).collect()
-    }
-    multi = {
-        tuple(r[c] for c in cols)
-        for r in run_quantile_sketch_stream(spark, d).collect()
-    }
+    run = getattr(events, runner)
+    single = collections.Counter(map(tuple, run(spark, SF_SMOKE).collect()))
+    multi = collections.Counter(map(tuple, run(spark, d).collect()))
     assert single == multi and len(multi) > 0
+
+
+def test_streams_leave_no_per_process_temp_dirs(
+    spark, tmp_path, monkeypatch
+):
+    """Stream directories live in the uid-private cachefs base: building
+    the events, documents and flush-sentinel streams twice from a new
+    sf dir adds no ``sddt_*`` entry directly under the temp dir except
+    ``sddt_cache_<uid>``, and the second pass reuses the first pass's
+    cache entries. The temp dir is redirected to ``tmp_path`` so the
+    snapshot sees only this test's files."""
+    import os
+    import tempfile
+
+    from soil_data_development_tools___arcmap_spark.streaming.docs import (
+        read_documents_stream,
+    )
+    from soil_data_development_tools___arcmap_spark.streaming.events import (
+        read_events_stream,
+        run_attribution_outer_stream,
+    )
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("events", "documents"):
+        os.symlink(os.path.join(SF_SMOKE, f"{t}.parquet"), sf / f"{t}.parquet")
+
+    def sddt():
+        tmpdir = tempfile.gettempdir()
+        return {e for e in os.listdir(tmpdir) if e.startswith("sddt_")}
+
+    before = sddt()
+    cache = f"sddt_cache_{os.getuid()}"
+    passes = []
+    for _ in range(2):
+        read_events_stream(spark, str(sf))
+        read_documents_stream(spark, str(sf))
+        assert run_attribution_outer_stream(spark, str(sf)).count() > 0
+        assert sddt() - before == {cache}
+        passes.append(sorted(os.listdir(tmp / cache)))
+    assert passes[0] == passes[1] and len(passes[0]) == 3
 
 
 def test_cms_grid_stream_matches_batch_and_replay(spark, tmp_path):
@@ -1457,6 +1514,9 @@ def test_image_gate_grow_state_equals_admit_count(spark, tmp_path):
     from soil_data_development_tools___arcmap_spark.streaming.docs import (
         run_media_phash_gate_grow,
     )
+    from soil_data_development_tools___arcmap_spark.streaming.events import (
+        peak_state_rows,
+    )
 
     src, _ = _range_split_odds(spark, tmp_path, "img_state", n_files=4)
     tbl, q = run_media_phash_gate_grow(
@@ -1466,10 +1526,7 @@ def test_image_gate_grow_state_equals_admit_count(spark, tmp_path):
     admits = sum(1 for r in rows if r["status"] == "admit")
     # dup_stream fingerprints also live in the store (one row per
     # novel fingerprint, admitted by its first arrival)
-    peak = 0
-    for pr in q.recentProgress:
-        for so in pr.get("stateOperators") or []:
-            peak = max(peak, int(so.get("numRowsTotal") or 0))
+    peak = peak_state_rows(q)
     assert admits > 0 and peak == admits
     corpus_dups = sum(1 for r in rows if r["status"] == "dup_corpus")
     assert corpus_dups > 0  # and none of them contributed state

@@ -47,7 +47,6 @@ import os
 import shutil
 import sys
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -192,32 +191,22 @@ def build_emb_replica(spark, factor: int) -> str:
 
 def _run(spark, sink_df, mode: str) -> dict:
     """Run a streaming DF to completion; return wall, rows, peak state."""
-    name = "scale_" + uuid.uuid4().hex[:8]
-    t0 = time.time()
-    q = (
-        sink_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    from soil_data_development_tools___arcmap_spark.streaming.events import (
+        drain,
+        peak_state_rows,
     )
-    q.awaitTermination()
+
+    t0 = time.time()
+    _, q = drain(sink_df, mode)
     wall = time.time() - t0
-    rows = 0
-    peak_state = 0
-    batches = 0
-    assert len(q.recentProgress) < 10000, "progress ring buffer overflow"
-    for p in q.recentProgress:
-        batches += 1
-        rows += int(p.get("numInputRows") or 0)
-        for so in p.get("stateOperators") or []:
-            peak_state = max(peak_state, int(so.get("numRowsTotal") or 0))
+    peak_state = peak_state_rows(q)  # raises on a full progress buffer
+    rows = sum(int(p.get("numInputRows") or 0) for p in q.recentProgress)
     return {
         "wall_sec": round(wall, 1),
         "input_rows": rows,
         "rows_per_sec": int(rows / wall) if wall > 0 else None,
         "peak_state_rows": peak_state,
-        "batches": batches,
+        "batches": len(q.recentProgress),
     }
 
 
@@ -228,6 +217,7 @@ def main() -> None:
     from soil_data_development_tools___arcmap_spark.streaming.events import (
         EVENTS_SCHEMA,
         _ts_ns,
+        peak_state_rows,
         session_windows_builtin,
         sessionize_stateful,
     )
@@ -247,8 +237,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # recentProgress is a ring buffer (default 100 entries); the
     # metrics below sum over it, so a replay with more micro-batches
-    # than the cap would silently undercount — raise it well past any
-    # day-per-trigger replay and assert per run (see _run)
+    # than the cap would undercount — raise it well past any
+    # day-per-trigger replay (peak_state_rows raises on a full buffer)
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
 
     for factor in factors:
@@ -496,7 +486,9 @@ def main() -> None:
             def _run_grow_gate(qname, runner, **kw):
                 """Shared exact-gate measurement: wall, engine-counted
                 peak state, decision mix — one code path so a metric
-                fix cannot skew one gate's published numbers."""
+                fix cannot skew one gate's published numbers. The
+                runner drains its query with ``drain`` and hands the
+                query back (``with_query``)."""
                 from pyspark.sql import functions as SF
 
                 t0 = time.time()
@@ -505,18 +497,11 @@ def main() -> None:
                     with_query=True, **kw,
                 )
                 wall = time.time() - t0
-                peak = 0
-                rows = 0
-                # same ring-buffer guard as _run (round-9 ADVICE): if
-                # recentProgress overflowed, input_rows / peak_state
-                # would silently undercount.
-                assert len(q.recentProgress) < 10000, (
-                    "progress ring buffer overflow"
+                peak = peak_state_rows(q)  # raises on a full buffer
+                rows = sum(
+                    int(pr.get("numInputRows") or 0)
+                    for pr in q.recentProgress
                 )
-                for pr in q.recentProgress:
-                    rows += int(pr.get("numInputRows") or 0)
-                    for so in pr.get("stateOperators") or []:
-                        peak = max(peak, int(so.get("numRowsTotal") or 0))
                 counts = {
                     r["status"]: r["n"]
                     for r in tbl.groupBy("status")
