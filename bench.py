@@ -50,7 +50,7 @@ steady-state (prime + forced GC + timed), and the parent reports the
 per-query MEDIAN + [min, max] spread — the same regression rule as
 the headline suite. ``nightly_gssurgo`` additionally reports an
 explicit ``nightly_gssurgo_cachecold`` row: the composed nightly's
-pipe-text export is content-keyed-cached in /tmp
+pipe-text export is content-keyed-cached on local disk
 (q_tools.nightly_gssurgo via cachefs.cached_dir), so a cache-cold
 environment repays the multi-GB export — the precise cause of the
 92-vs-35 s driver/self discrepancy. The worker primes (JIT + cache
@@ -114,73 +114,64 @@ SCALE10 = [
 
 
 def _build_scale10(spark, sf_dir: str) -> str:
-    """Materialize (once, cached in /tmp keyed by sf) a directory whose
-    orders/lineitem are the sf_dir tables replicated 10× with shifted
-    order/customer keys; every other table is symlinked unchanged."""
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out = f"/tmp/spark_graft_scale10_{sf_tag}"
-    done = os.path.join(out, "_BENCH_SCALE10_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    maxo = orders.selectExpr("max(o_orderkey)").collect()[0][0] + 1
-    maxc = orders.selectExpr("max(o_custkey)").collect()[0][0] + 1
-    reps = spark.range(10).selectExpr("id AS rep")
-    # repartition before writing: the crossJoin inherits the source's
-    # 1-2 input splits, which would leave the replica as one giant
-    # file — a layout no real 10× table has and a scan-parallelism
-    # bottleneck that distorts the measurements
-    (
-        orders.crossJoin(reps)
-        .selectExpr(
-            "o_orderkey + rep * {} AS o_orderkey".format(maxo),
-            "o_custkey + rep * {} AS o_custkey".format(maxc),
-            *[c for c in orders.columns if c not in ("o_orderkey", "o_custkey")],
+    """A directory whose orders/lineitem are the sf_dir tables
+    replicated 10× with shifted order/customer keys; every other table
+    is symlinked unchanged. A ``cachefs.cached_dir`` keyed on the two
+    source tables and this builder's code, so it is built once."""
+    from soil_data_development_tools___arcmap_spark.cachefs import cached_dir
+
+    sf_dir = os.path.abspath(sf_dir)
+
+    def build(out: str) -> None:
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        maxo = orders.selectExpr("max(o_orderkey)").collect()[0][0] + 1
+        maxc = orders.selectExpr("max(o_custkey)").collect()[0][0] + 1
+        reps = spark.range(10).selectExpr("id AS rep")
+        # repartition before writing: the crossJoin inherits the
+        # source's 1-2 input splits, which would leave the replica as
+        # one giant file — a layout no real 10× table has and a
+        # scan-parallelism bottleneck that distorts the measurements
+        (
+            orders.crossJoin(reps)
+            .selectExpr(
+                "o_orderkey + rep * {} AS o_orderkey".format(maxo),
+                "o_custkey + rep * {} AS o_custkey".format(maxc),
+                *[c for c in orders.columns if c not in ("o_orderkey", "o_custkey")],
+            )
+            .repartition(32)
+            .write.mode("overwrite")
+            .parquet(f"{out}/orders.parquet")
         )
-        .repartition(32)
-        .write.mode("overwrite")
-        .parquet(f"{out}/orders.parquet")
-    )
-    (
-        li.crossJoin(reps)
-        .selectExpr(
-            "l_orderkey + rep * {} AS l_orderkey".format(maxo),
-            *[c for c in li.columns if c != "l_orderkey"],
+        (
+            li.crossJoin(reps)
+            .selectExpr(
+                "l_orderkey + rep * {} AS l_orderkey".format(maxo),
+                *[c for c in li.columns if c != "l_orderkey"],
+            )
+            .repartition(32)
+            .write.mode("overwrite")
+            .parquet(f"{out}/lineitem.parquet")
         )
-        .repartition(32)
-        .write.mode("overwrite")
-        .parquet(f"{out}/lineitem.parquet")
+        for f in os.listdir(sf_dir):
+            dst = os.path.join(out, f)
+            if f.endswith(".parquet") and not os.path.exists(dst):
+                os.symlink(os.path.join(sf_dir, f), dst)
+
+    return cached_dir(
+        "scale10",
+        [f"{sf_dir}/orders.parquet", f"{sf_dir}/lineitem.parquet"],
+        build,
+        code=(_build_scale10,),
     )
-    for f in os.listdir(sf_dir):
-        dst = os.path.join(out, f)
-        if f.endswith(".parquet") and not os.path.exists(dst):
-            os.symlink(os.path.join(sf_dir, f), dst)
-    open(done, "w").close()
-    return out
-
-
-def _purge_nightly_cache() -> None:
-    """Remove the nightly pipe-text export's content-keyed cache dirs
-    (cachefs base: /tmp/sddt_cache_<uid>/nightly_*) so the next
-    nightly_gssurgo construction repays the full export — the
-    explicit cache-COLD measurement."""
-    import glob
-    import shutil
-    import tempfile
-
-    base = os.path.join(
-        tempfile.gettempdir(), f"sddt_cache_{os.getuid()}"
-    )
-    for d in glob.glob(os.path.join(base, "nightly_*")):
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _scale10_block(spark, qs, s10_dir: str) -> dict[str, float]:
     """Steady-state scale10 timings in THIS JVM: prime + forced GC +
     one timed run per query; nightly additionally yields an explicit
     cache-cold row (see module docstring)."""
+    from soil_data_development_tools___arcmap_spark.cachefs import evict
+
     out: dict[str, float] = {}
     for name in SCALE10:
         fn = qs.get(name)
@@ -191,7 +182,7 @@ def _scale10_block(spark, qs, s10_dir: str) -> dict[str, float]:
         if name == "nightly_gssurgo":
             # cache-cold: JIT warm, export cache purged — the number a
             # fresh environment (the driver's round box) pays
-            _purge_nightly_cache()
+            evict("nightly")
             spark._jvm.System.gc()
             t0 = time.time()
             fn(spark, s10_dir).write.mode("overwrite").format(

@@ -319,9 +319,10 @@ def snap_extent_nlcd_cols(
 # GeoTIFF sink (round 5): the actual raster FILE the reference's
 # ExportMuRaster/ExportRasters tools leave to ArcGIS is a plain TIFF
 # with three GeoTIFF tags — small enough to emit dependency-free.
-# encode/decode below implement uncompressed single-band uint32
+# encode_geotiff below writes uncompressed single-band uint32
 # GeoTIFF 1.1 (little-endian, one strip), enough for a mapunit or
-# rating raster tile; write_raster_tiles turns a distributed cell
+# rating raster tile (the tests' reader is tests/geotiff.py);
+# write_raster_tiles turns a distributed cell
 # table into per-tile files on the executors (foreachPartition-style
 # via applyInPandas), which is how a 100 TB rasterization actually
 # lands — one file per tile, no driver collect of pixels.
@@ -413,49 +414,6 @@ def encode_geotiff(
     ifd = _struct.pack("<H", len(entries)) + b"".join(entries) + b"\x00" * 4
     header = _struct.pack("<2sHI", b"II", 42, ifd_off)
     return header + pix + scale + tiepoint + geokeys + nod + ifd
-
-
-def decode_geotiff(buf: bytes) -> dict:
-    """Parse what encode_geotiff writes (and any uncompressed
-    single-strip uint32 little-endian GeoTIFF): returns width, height,
-    values, cell_size, origin, epsg, nodata. The read half of the
-    raster seam — a rating raster round-trips through bytes."""
-    order, magic, ifd_off = _struct.unpack_from("<2sHI", buf, 0)
-    if order != b"II" or magic != 42:
-        raise ValueError("not a little-endian TIFF")
-    (n_entries,) = _struct.unpack_from("<H", buf, ifd_off)
-    tags = {}
-    for i in range(n_entries):
-        tag, typ, count, value = _struct.unpack_from(
-            "<HHII", buf, ifd_off + 2 + 12 * i
-        )
-        tags[tag] = (typ, count, value)
-    T = _TIFF_TAGS
-    width = tags[T["ImageWidth"]][2]
-    height = tags[T["ImageLength"]][2]
-    off = tags[T["StripOffsets"]][2]
-    nbytes = tags[T["StripByteCounts"]][2]
-    values = list(_struct.unpack_from(f"<{nbytes // 4}I", buf, off))
-    sx, sy, _ = _struct.unpack_from("<3d", buf, tags[T["ModelPixelScale"]][2])
-    tie = _struct.unpack_from("<6d", buf, tags[T["ModelTiepoint"]][2])
-    geo = _struct.unpack_from(
-        f"<{tags[T['GeoKeyDirectory']][1]}H", buf, tags[T["GeoKeyDirectory"]][2]
-    )
-    epsg = next(
-        (geo[j + 3] for j in range(4, len(geo), 4) if geo[j] == 3072), 0
-    )
-    t, c, v = tags[T["GdalNodata"]]
-    nod = buf[v : v + c].split(b"\x00")[0].decode("ascii")
-    return {
-        "width": width,
-        "height": height,
-        "values": values,
-        "cell_size": sx,
-        "origin_x": tie[3],
-        "origin_y": tie[4],
-        "epsg": epsg,
-        "nodata": int(nod),
-    }
 
 
 def write_raster_tiles(

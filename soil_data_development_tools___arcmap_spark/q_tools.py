@@ -21,6 +21,7 @@ from .operators import (
 )
 from .operators.horizon_agg import _member_sums, clipped_thickness
 
+from .cachefs import cached_dir, scratch_dir
 from ._qcore import (
     VALU1_RANGES,
     _even_grid_rects,
@@ -1646,8 +1647,6 @@ def raster_tile_export_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output the manifest facts derivable from the cell table (per-tile
     pixel/nodata counts); byte exactness of the TIFFs is pinned by the
     round-trip decoder tests."""
-    import tempfile
-
     from .functions.raster import polygon_cell_inventory, write_raster_tiles
 
     k = F.col("c_custkey")
@@ -1668,7 +1667,7 @@ def raster_tile_export_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("col") - F.col("tile_x") * 16).alias("col"),
         "cellvalue",
     )
-    out = write_raster_tiles(tiled, tempfile.mkdtemp(prefix="sddt_geotiles_"))
+    out = write_raster_tiles(tiled, scratch_dir("geotiles"))
     return out.select("tile_id", "n_pixels", "n_nodata")
 
 
@@ -1858,12 +1857,11 @@ def ingest_full_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cotaxmoistcl, legendtext) — the extended catalog is the load
     path, not a declaration."""
     import csv as _csv
-    import tempfile
 
     from .catalog import catalog_from_export, embedded_catalog, load_full_export
 
     emb = embedded_catalog()
-    tmp = tempfile.mkdtemp(prefix="sddt_full_catalog_")
+    tmp = scratch_dir("full_catalog")
 
     def _write(table: str, rows: list[tuple]) -> None:
         cols = [f.name for f in emb.schemas[table].fields]
@@ -2036,10 +2034,10 @@ def nightly_gssurgo(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cachefs.cached_dir: fingerprint of the orders.parquet the
     synthetic component derives from, salted with the source text of
     the synthesis + export functions so code edits invalidate; built
-    in staging + atomic rename under a uid-private base) — repeat runs
+    in staging + atomic rename under a uid-private base, removed once
+    orders.parquet is deleted) — repeat runs
     (steady bench passes, the 100x SCALING row) measure compute, not
     multi-GB /tmp file churn, and concurrent runs race safely."""
-    from .cachefs import cached_dir, content_tag, source_salt
     from .catalog import embedded_catalog, load_full_export
     from .plans.planner import create_soil_map, hydrate
     from .tools_merge import merge_rating_tables
@@ -2049,11 +2047,9 @@ def nightly_gssurgo(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = embedded_catalog()
     tmp = cached_dir(
         "nightly",
-        content_tag(
-            [os.path.join(os.path.abspath(sf_dir), "orders.parquet")],
-            extra=source_salt(synth_component, _pipe_text_export),
-        ),
+        [os.path.join(sf_dir, "orders.parquet")],
         lambda d: _pipe_text_export(t["component"], "component", emb, d),
+        code=(synth_component, _pipe_text_export),
     )
     rt = load_full_export(spark, tmp, catalog=emb, tables=["component"])[
         "component"
@@ -2339,12 +2335,10 @@ def raster_tile_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed raster export end-to-end (SSURGO_ExportMuRaster →
     TIFF; the GeoTIFF bytes are encoded and written per tile ON THE
     EXECUTORS by write_raster_tiles): mapunit cell values synthesized
-    from customer onto 16×16 tiles, files land in a temp dir, and the
+    from customer onto 16×16 tiles, files land in a scratch dir, and the
     oracle checks the manifest facts derivable from the cell table
     (pixel/nodata counts per tile). The byte-exactness of the TIFF
     itself is pinned by the round-trip decoder tests."""
-    import tempfile
-
     from .functions.raster import write_raster_tiles
 
     k = F.col("c_custkey")
@@ -2356,7 +2350,7 @@ def raster_tile_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).groupBy("tile_id", "row", "col").agg(
         F.max("cellvalue").alias("cellvalue")
     )
-    out = write_raster_tiles(cells, tempfile.mkdtemp(prefix="sddt_tiles_"))
+    out = write_raster_tiles(cells, scratch_dir("tiles"))
     return out.select("tile_id", "n_pixels", "n_nodata")
 
 
@@ -2374,10 +2368,8 @@ def shapefile_merge_acres(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.geometry import shoelace_area2x
     from .sources.shapefile import write_shapefile
 
-    import tempfile
-
     nations = _t(spark, sf_dir, "nation").collect()
-    tmp = tempfile.mkdtemp(prefix="sddt_shp_")
+    tmp = scratch_dir("shp")
     fields = [("AREASYMBOL", 20), ("MUSYM", 6), ("MUKEY", 30)]
     by_region: dict[int, list] = {}
     for n in nations:
@@ -2505,7 +2497,6 @@ def sda_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Spark task retry, instead of the reference's serial driver
     loop."""
     import json as _json
-    import tempfile
 
     from .sources.sda import batch_areasymbols
     from .sources.sda_datasource import register
@@ -2520,7 +2511,7 @@ def sda_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
     syms = sorted(counts)
-    d = tempfile.mkdtemp(prefix="sda_fixture_")
+    d = scratch_dir("sda_fixture")
     for i, batch in enumerate(batch_areasymbols(syms)):
         doc = {
             "Table": [["areasymbol", "n"]]
@@ -2555,7 +2546,6 @@ def wss_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit — the oracle recomputes every field from the region-key
     formulas without ever seeing a zip."""
     import io
-    import tempfile
     import zipfile as _zf
 
     from .sources.wss import wss_zip_name
@@ -2565,8 +2555,8 @@ def wss_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.r_regionkey
         for r in _t(spark, sf_dir, "region").select("r_regionkey").collect()
     )
-    fixture = tempfile.mkdtemp(prefix="wss_fixture_")
-    out_dir = tempfile.mkdtemp(prefix="wss_out_")
+    fixture = scratch_dir("wss_fixture")
+    out_dir = scratch_dir("wss_out")
     syms, dates = [], []
     for k in regions:
         sym = f"NE{100 + k}"
@@ -2647,28 +2637,15 @@ def partitioned_sink_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a one-week scan. Returned: per-(day, type) counts + exact
     cent sums for the first 7 days.
 
-    The write is idempotent per SOURCE CONTENT: the lake directory is
-    keyed on the events file's (path, mtime, size) fingerprint — a
-    regenerated fixture gets a fresh lake instead of silently serving
-    stale partitions — and it is built in a private staging dir then
-    atomically renamed into place, so two concurrent runs (bench +
-    gate) each build their own staging copy and the loser discards
-    without ever exposing a half-written lake."""
-    import hashlib
-    import shutil
-    import tempfile
+    The lake is written once per SOURCE CONTENT and builder code: it is
+    a ``cachefs.cached_dir`` keyed on the events file's (path, mtime,
+    size) fingerprint and this function's source text — a regenerated
+    fixture or an edited builder gets a fresh lake instead of silently
+    serving stale partitions — in the uid-private cache base, built in
+    staging and renamed into place, so concurrent runs (bench + gate)
+    never see a half-written lake."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(
-        tempfile.gettempdir(), f"sddt_daylake_{tag}", "events"
-    )
-    if not os.path.exists(out):
-        staging = tempfile.mkdtemp(prefix="sddt_daylake_stage_")
-        stage_out = os.path.join(staging, "events")
+    def build(d: str) -> None:
         (
             read_events(spark, sf_dir)
             .withColumn(
@@ -2676,16 +2653,17 @@ def partitioned_sink_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .write.mode("overwrite")
             .partitionBy("day_num")
-            .parquet(stage_out)
+            .parquet(d)
         )
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        try:
-            os.rename(stage_out, out)  # atomic: complete iff present
-        except OSError:
-            if not os.path.exists(out):  # lost the race -> reuse winner
-                raise
-        shutil.rmtree(staging, ignore_errors=True)
-    lake = spark.read.parquet(out)
+
+    lake = spark.read.parquet(
+        cached_dir(
+            "daylake",
+            [os.path.join(sf_dir, "events.parquet")],
+            build,
+            code=(partitioned_sink_prune, read_events),
+        )
+    )
     first_day = (
         read_events(spark, sf_dir)
         .agg(F.expr("min((ts div 1000) div 86400000000)"))
@@ -2731,15 +2709,11 @@ def gssurgo_lake(spark: SparkSession, sf_dir: str) -> str:
     PartitionCount=1, plan-asserted in tests) and the incremental
     nightly reads ONLY changed partitions.
 
-    Content-keyed + atomically renamed like the event day-lake
-    (``partitioned_sink_prune``): regenerated inputs get a fresh lake,
-    concurrent builders race safely."""
-    from .cachefs import cached_dir, content_tag, source_salt
-
-    srcs = [
-        os.path.join(os.path.abspath(sf_dir), "orders.parquet"),
-        os.path.join(os.path.abspath(sf_dir), "lineitem.parquet"),
-    ]
+    A ``cachefs.cached_dir`` like the event day-lake
+    (``partitioned_sink_prune``), keyed on orders/lineitem, the
+    synthesis and partition-rule code: regenerated inputs get a fresh
+    lake, concurrent builders race safely, and the lake is removed
+    once its sources are deleted."""
 
     def build(staging: str) -> None:
         t = ssurgo_synth(spark, sf_dir)
@@ -2766,17 +2740,13 @@ def gssurgo_lake(spark: SparkSession, sf_dir: str) -> str:
 
     return cached_dir(
         "gssurgo_lake",
+        [os.path.join(sf_dir, f"{t}.parquet") for t in ("orders", "lineitem")],
+        build,
         # salt with the partition rule too (_lake_asym + its modulus):
         # editing the survey mapping must invalidate the cached lake,
         # not silently serve the old layout
-        content_tag(
-            srcs,
-            extra=f"{_LAKE_SURVEY_MOD}|"
-            + source_salt(
-                gssurgo_lake, ssurgo_synth, synth_component, _lake_asym
-            ),
-        ),
-        build,
+        code=(gssurgo_lake, ssurgo_synth, synth_component, _lake_asym),
+        extra=str(_LAKE_SURVEY_MOD),
     )
 
 
@@ -2840,7 +2810,8 @@ def nightly_gssurgo_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. STALE lake — last night's output: the full nightly computed
        with the changed surveys' (AS3, AS11) component data PERTURBED
        (a different comppct modulus), written partitioned by
-       areasymbol into a fresh run-private directory;
+       areasymbol into a fresh ``cachefs.scratch_dir`` (removed when
+       the process exits);
     2. REFRESH — recompute ratings + Valu1 for ONLY the changed
        surveys, reading ONLY their partitions of the §3.3 gSSURGO lake
        (directory prune: 2 of 20 partitions per table, plan-asserted
@@ -2854,8 +2825,6 @@ def nightly_gssurgo_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     independence the refresh relies on holds — cost scales with
     changed surveys (SCALING.md row), correctness with the full
     corpus."""
-    import tempfile
-
     changed = ("AS3", "AS11")
     t = ssurgo_synth(spark, sf_dir)
     asym = _lake_asym("mukey")
@@ -2866,9 +2835,7 @@ def nightly_gssurgo_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("comppct_r")),
     )
     stale = _nightly_rate_and_widen(stale_comp, t)
-    result_dir = os.path.join(
-        tempfile.mkdtemp(prefix="sddt_nightly_inc_"), "nightly"
-    )
+    result_dir = os.path.join(scratch_dir("nightly_inc"), "nightly")
     (
         stale.withColumn("areasymbol", _lake_asym("mukey"))
         .write.partitionBy("areasymbol")
@@ -3201,45 +3168,36 @@ def spatial_lake_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters in the scan, plan-asserted in tests) — a 100 TB
     polygon lake answers a county-sized AOI with a county-sized scan.
     The refine runs the Sutherland–Hodgman clip for the exact overlap
-    area. Same content-keyed + staging/atomic-rename write discipline
-    as partitioned_sink_prune."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    area. The lake is a ``cachefs.cached_dir`` like
+    partitioned_sink_prune's: keyed on the customer file's fingerprint
+    and the builder code (this function, ``_even_grid_rects``,
+    ``cell_index``), built in staging and renamed into place in the
+    uid-private cache base."""
     from .functions.spatial import cell_index
 
     pcell = 64
-    src = os.path.join(os.path.abspath(sf_dir), "customer.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(
-        tempfile.gettempdir(), f"sddt_spatlake_{tag}", "polys"
-    )
-    if not os.path.exists(out):
-        staging = tempfile.mkdtemp(prefix="sddt_spatlake_stage_")
-        stage_out = os.path.join(staging, "polys")
+
+    def build(d: str) -> None:
         (
             _even_grid_rects(_t(spark, sf_dir, "customer"), "c_custkey")
             .withColumn("pcx", cell_index(F.col("x0"), pcell))
             .withColumn("pcy", cell_index(F.col("y0"), pcell))
             .write.mode("overwrite")
             .partitionBy("pcx", "pcy")
-            .parquet(stage_out)
+            .parquet(d)
         )
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        try:
-            os.rename(stage_out, out)  # atomic: complete iff present
-        except OSError:
-            if not os.path.exists(out):  # lost the race -> reuse winner
-                raise
-        shutil.rmtree(staging, ignore_errors=True)
+
     # AOI window; max feature extent is (13+1)*2 x (7+1)*2 = 26 x 14
     ax0, ay0, ax1, ay1 = 60, 30, 140, 90
     max_w, max_h = 26, 14
-    lake = spark.read.parquet(out)
+    lake = spark.read.parquet(
+        cached_dir(
+            "spatlake",
+            [os.path.join(sf_dir, "customer.parquet")],
+            build,
+            code=(spatial_lake_prune, _even_grid_rects, cell_index),
+        )
+    )
     pruned = lake.where(
         (F.col("pcx") >= (ax0 - max_w) // pcell)
         & (F.col("pcx") <= ax1 // pcell)

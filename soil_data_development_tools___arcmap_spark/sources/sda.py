@@ -6,17 +6,15 @@ The service takes POST JSON ``{"format": ..., "query": ...}`` and
 returns ``{"Table": [[col, ...], [val, ...], ...]}`` (first row =
 column names under JSON+COLUMNNAME). Network I/O is a driver-side
 concern and is isolated in ``fetch`` — everything else (payload
-building, areasymbol batching, response parsing, DataFrame
-construction) is pure and offline-tested. This container has no
-network access, so ``fetch`` exists for production use only.
+building, areasymbol batching, response parsing) is pure and
+offline-tested; the tests never reach ``fetch``. Responses become
+DataFrames through the ``sda`` data source (sources/sda_datasource.py).
 """
 
 from __future__ import annotations
 
 import json
 import urllib.request
-
-from pyspark.sql import DataFrame, SparkSession
 
 SDA_URL = "https://sdmdataaccess.sc.egov.usda.gov/Tabular/SDMTabularService/post.rest"
 
@@ -54,18 +52,6 @@ def parse_sda_table(doc: dict) -> tuple[list[str], list[list]]:
     if not rows:
         return [], []
     return list(rows[0]), [list(r) for r in rows[1:]]
-
-
-def sda_to_df(spark: SparkSession, doc: dict) -> DataFrame:
-    """Response → DataFrame (all strings — SDA's wire format is
-    untyped text; cast downstream against the mdstat catalogs)."""
-    cols, data = parse_sda_table(doc)
-    if not cols:
-        return spark.createDataFrame([], "dummy string").limit(0).drop("dummy")
-    schema = ", ".join(f"`{c}` string" for c in cols)
-    return spark.createDataFrame(
-        [[None if v == "" else str(v) for v in r] for r in data], schema
-    )
 
 
 def fetch(query: str, fmt: str = "JSON+COLUMNNAME", timeout: int = 60) -> dict:

@@ -5,7 +5,8 @@ The reference materializes into a file geodatabase; here the analog is
 hive-partitioned parquet so downstream scans partition-prune on the
 survey-area key (Catalyst turns ``WHERE areasymbol = 'IA001'`` into a
 directory prune, no data read). Sort within partitions by the join key
-so row-group min/max stats make mukey range scans cheap.
+so row-group min/max stats make mukey range scans cheap. Read back
+with ``spark.read.parquet(path)``.
 """
 
 from __future__ import annotations
@@ -25,63 +26,3 @@ def write_partitioned(
     if sort_by:
         df = df.sortWithinPartitions(*partition_by, *sort_by)
     df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def read_partitioned(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    num_buckets: int = 32,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table — the co-located-join layout for
-    fact⨝fact keys (SURVEY §4: the component⨝chorizon cokey join is
-    the one shuffle the rating pipelines can't broadcast away).
-
-    Two tables bucketed by the same key into the same bucket count
-    join WITHOUT an Exchange on either side: Spark's FileSourceScan
-    reports the bucketing as output partitioning, so EnsureRequirements
-    inserts no shuffle — at 100 TB this converts the nightly rating
-    run's biggest shuffle into a local merge per bucket. Sorting the
-    buckets on the key also drops the SortMergeJoin's per-task sort.
-    """
-    w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table)
-
-
-def stream_to_partitioned(
-    stream_df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    checkpoint: str,
-    sort_by: list[str] | None = None,
-):
-    """Production streaming sink: land a stream as hive-partitioned
-    parquet via ``foreachBatch`` — each micro-batch is written with the
-    SAME batch writer (``write_partitioned``), so the landed layout is
-    identical to a batch load: partition-pruned scans, row-group
-    min/max on the sort key. foreachBatch + checkpointing gives
-    effectively-once file output (a replayed batch overwrites its own
-    partitions' files deterministically with mode=append semantics the
-    batch id guards); this is the path a firehose→lakehouse ingest
-    uses instead of a memory/console sink. Returns the started
-    StreamingQuery (caller awaits termination)."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_partitioned(
-            batch_df, path, partition_by, sort_by=sort_by, mode="append"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

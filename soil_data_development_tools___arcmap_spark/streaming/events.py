@@ -51,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..cachefs import cached_dir, content_tag, source_salt
+from ..cachefs import cached_dir
 
 EVENTS_SCHEMA = StructType(
     [
@@ -146,11 +146,8 @@ def file_stream(
             )
 
     stream_dir = cached_dir(
-        "stream",
-        content_tag(
-            [src], extra=f"{copies}|{sentinels!r}|{source_salt(file_stream)}"
-        ),
-        build,
+        "stream", [src], build, code=(file_stream,),
+        extra=f"{copies}|{sentinels!r}",
     )
     return spark.readStream.schema(schema).parquet(stream_dir)
 

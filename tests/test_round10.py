@@ -403,8 +403,9 @@ def test_write_raster_tiles_snap_region(spark, tmp_path):
     """GeoTIFF tiles written with snap_region decode to origins ON the
     NLCD lattice (the byte-level 'done' criterion), while the default
     un-snapped path stays byte-identical to before."""
+    from geotiff import decode_geotiff
+
     from soil_data_development_tools___arcmap_spark.functions.raster import (
-        decode_geotiff,
         write_raster_tiles,
     )
 

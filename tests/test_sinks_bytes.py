@@ -6,8 +6,9 @@ from __future__ import annotations
 
 import struct
 
+from geotiff import decode_geotiff
+
 from soil_data_development_tools___arcmap_spark.functions.raster import (
-    decode_geotiff,
     encode_geotiff,
     write_raster_tiles,
 )

@@ -201,37 +201,6 @@ def test_stream_static_and_stream_stream_joins(spark, tmp_path):
     assert pairs == {(3, 1), (3, 2)}
 
 
-def test_stream_to_partitioned_sink(spark, tmp_path):
-    """foreachBatch partitioned-parquet sink: the landed table equals
-    the batch table, and the layout partition-prunes."""
-    from pyspark.sql import functions as F
-
-    from soil_data_development_tools___arcmap_spark.queries import read_events
-    from soil_data_development_tools___arcmap_spark.sources.sinks import (
-        stream_to_partitioned,
-    )
-    from soil_data_development_tools___arcmap_spark.streaming.events import (
-        EVENTS_SCHEMA, read_events_stream,
-    )
-
-    out = str(tmp_path / "landed")
-    ck = str(tmp_path / "ck")
-    stream = read_events_stream(spark, SF_SMOKE).select(
-        "event_id", "event_type", F.expr("ts div 1000").alias("ts_us")
-    )
-    q = stream_to_partitioned(
-        stream, out, ["event_type"], ck, sort_by=["event_id"]
-    )
-    q.awaitTermination()
-    landed = spark.read.parquet(out)
-    want = read_events(spark, SF_SMOKE).count()
-    assert landed.count() == want
-    pruned = landed.where(F.col("event_type") == "click")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert pruned.count() > 0
-
-
 def test_stateful_funnel_equals_batch(spark):
     """The applyInPandasWithState funnel must reproduce the batch
     chained-window funnel counts exactly."""

@@ -1,22 +1,14 @@
-"""SDA wire-format parsing, batching, scalar utilities, merge tool."""
+"""SDA wire-format parsing, batching, merge tool."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from soil_data_development_tools___arcmap_spark.functions.scalars import (
-    MONTH_TO_SEQ,
-    acres_expr,
-    assert_nonempty,
-    month_seq_expr,
-)
 from soil_data_development_tools___arcmap_spark.sources.sda import (
     batch_areasymbols,
     count_query,
     parse_sda_table,
     sda_payload,
-    sda_to_df,
 )
 from soil_data_development_tools___arcmap_spark.tools_merge import (
     merge_rating_tables,
@@ -36,7 +28,7 @@ def test_sda_payload_and_batching():
     assert q.startswith("SELECT l.areasymbol, COUNT(*)")
 
 
-def test_sda_parse_and_df(spark):
+def test_sda_parse_and_df():
     doc = {
         "Table": [
             ["mukey", "muname"],
@@ -46,29 +38,7 @@ def test_sda_parse_and_df(spark):
     }
     cols, rows = parse_sda_table(doc)
     assert cols == ["mukey", "muname"] and len(rows) == 2
-    df = sda_to_df(spark, doc)
-    got = {r["mukey"]: r["muname"] for r in df.collect()}
-    assert got == {"1": "Alpha", "2": None}
     assert parse_sda_table({}) == ([], [])
-    assert sda_to_df(spark, {}).count() == 0
-
-
-def test_month_map_and_acres(spark):
-    df = spark.createDataFrame(
-        [("January",), ("December",), ("Nope",)], "mon string"
-    )
-    got = [r[0] for r in df.select(month_seq_expr("mon")).collect()]
-    assert got == [1, 12, None]
-    assert MONTH_TO_SEQ["June"] == 6
-    area = spark.createDataFrame([(4046.8564224,)], "a double")
-    assert area.select(acres_expr("a")).first()[0] == pytest.approx(1.0)
-
-
-def test_assert_nonempty(spark):
-    df = spark.range(3)
-    assert assert_nonempty(df, "ok") is df
-    with pytest.raises(ValueError, match="empty_case"):
-        assert_nonempty(df.where(F.col("id") > 99), "empty_case")
 
 
 def test_merge_rating_tables(spark):
@@ -106,7 +76,6 @@ def test_salted_agg_equivalence(spark):
 
 def test_partitioned_sink_prunes(spark, tmp_path):
     from soil_data_development_tools___arcmap_spark.sources.sinks import (
-        read_partitioned,
         write_partitioned,
     )
 
@@ -122,7 +91,7 @@ def test_partitioned_sink_prunes(spark, tmp_path):
     assert sorted(
         d for d in os.listdir(out) if d.startswith("areasymbol=")
     ) == ["areasymbol=IA001", "areasymbol=IA002"]
-    back = read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == 20
     pruned = back.where(F.col("areasymbol") == "IA001")
     assert pruned.count() == 10
@@ -165,50 +134,6 @@ def test_check_structure_driver_side(spark):
     r = count_cross_check(left, right).collect()[0]
     assert (r["n_left"], r["n_right"], r["status"], r["diff"]) == (
         2, 3, "mismatch", 1)
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key must join with ZERO
-    Exchange operators (the co-located layout write_bucketed exists
-    for). The unbucketed control join DOES shuffle."""
-    import pyspark.sql.functions as F
-
-    from soil_data_development_tools___arcmap_spark.sources.sinks import (
-        write_bucketed,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS co_b")
-    spark.sql("DROP TABLE IF EXISTS hz_b")
-    co = spark.range(2000).select(
-        F.col("id").alias("cokey"), (F.col("id") % 97).alias("comppct_r")
-    )
-    hz = spark.range(6000).select(
-        (F.col("id") % 2000).alias("cokey"), F.col("id").alias("chkey")
-    )
-    write_bucketed(co, "co_b", "cokey", num_buckets=8, sort_by="cokey")
-    write_bucketed(hz, "hz_b", "cokey", num_buckets=8, sort_by="cokey")
-
-    # disable auto-broadcast so the join strategy is the bucket-aware
-    # sort-merge, then check the plan carries no shuffle at all
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("co_b").join(spark.table("hz_b"), "cokey")
-        plan = j._sc._jvm.PythonSQLUtils.explainString(
-            j._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan, plan
-        assert j.count() == 6000
-
-        ub = co.join(hz, "cokey")
-        plan_ub = ub._sc._jvm.PythonSQLUtils.explainString(
-            ub._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" in plan_ub  # the control DOES shuffle
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS co_b")
-        spark.sql("DROP TABLE IF EXISTS hz_b")
 
 
 def test_shoelace_area_from_wkt(spark):
@@ -283,20 +208,23 @@ def test_report_template_dispatch(spark):
     assert got["field_map"] is None
 
 
-def test_cachefs_content_and_code_keyed(tmp_path):
-    """cached_dir builds once per (content, builder-code) tag: same
+def test_cachefs_content_and_code_keyed(tmp_path, monkeypatch):
+    """cached_dir builds once per (content, builder-code) key: same
     inputs reuse the build; touching the source file OR changing the
-    builder code yields a new tag (stale caches cannot serve old-code
+    builder code yields a new entry (stale caches cannot serve old-code
     output); the base dir is uid-private and the build is atomic
-    (staging leftovers never surface as a cache)."""
+    (staging leftovers never surface as a cache). The temp dir is
+    redirected to ``tmp_path`` so the entries die with the test."""
     import os
+    import tempfile
 
     from soil_data_development_tools___arcmap_spark.cachefs import (
         cached_dir,
-        content_tag,
-        source_salt,
     )
 
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
     src = tmp_path / "input.txt"
     src.write_text("v1")
     calls = []
@@ -306,22 +234,21 @@ def test_cachefs_content_and_code_keyed(tmp_path):
         with open(os.path.join(d, "out.txt"), "w") as fh:
             fh.write("built")
 
-    t1 = content_tag([str(src)], extra=source_salt(build))
-    d1 = cached_dir("cachefs_test", t1, build)
-    d2 = cached_dir("cachefs_test", t1, build)
+    d1 = cached_dir("cachefs_test", [str(src)], build, code=(build,))
+    d2 = cached_dir("cachefs_test", [str(src)], build, code=(build,))
     assert d1 == d2 and len(calls) == 1  # second call reused
     assert open(os.path.join(d1, "out.txt")).read() == "built"
     st = os.stat(os.path.dirname(d1))
     assert st.st_uid == os.getuid() and (st.st_mode & 0o077) == 0
 
-    src.write_text("v2-longer")  # content change -> new tag
-    t2 = content_tag([str(src)], extra=source_salt(build))
-    assert t2 != t1
-    cached_dir("cachefs_test", t2, build)
+    src.write_text("v2-longer")  # content change -> new key
+    d3 = cached_dir("cachefs_test", [str(src)], build, code=(build,))
+    assert d3 != d1
     assert len(calls) == 2
 
-    def build2(d):  # different builder source -> different salt
+    def build2(d):  # different builder source -> different key
         with open(os.path.join(d, "out.txt"), "w") as fh:
             fh.write("other")
 
-    assert source_salt(build2) != source_salt(build)
+    d4 = cached_dir("cachefs_test", [str(src)], build2, code=(build2,))
+    assert d4 != d3 and open(os.path.join(d4, "out.txt")).read() == "other"

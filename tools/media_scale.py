@@ -42,11 +42,7 @@ def build_salted_docs_replica(spark, factor: int) -> str:
     doc_ids shifted AND every token suffixed with the replica id, so
     replicas share no shingles and near-dup density per doc stays at
     the sf0.1 level while the corpus grows factor-x."""
-    from soil_data_development_tools___arcmap_spark.cachefs import (
-        cached_dir,
-        content_tag,
-        source_salt,
-    )
+    from soil_data_development_tools___arcmap_spark.cachefs import cached_dir
 
     src = os.path.join(os.path.abspath(SF_DIR), "documents.parquet")
 
@@ -70,11 +66,8 @@ def build_salted_docs_replica(spark, factor: int) -> str:
         )
 
     return cached_dir(
-        "docsalt",
-        content_tag(
-            [src], extra=f"{factor}|{source_salt(build_salted_docs_replica)}"
-        ),
-        build,
+        "docsalt", [src], build, code=(build_salted_docs_replica,),
+        extra=str(factor),
     )
 
 
@@ -82,11 +75,10 @@ def _sf_wrap(parquet_dir: str) -> str:
     """Wrap a replica parquet directory as an sf_dir with a
     documents.parquet entry (symlink), so queries(spark, sf_dir) run
     on it unchanged."""
-    wrap = parquet_dir + "_sfdir"
-    os.makedirs(wrap, exist_ok=True)
-    link = os.path.join(wrap, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(parquet_dir, link)
+    from soil_data_development_tools___arcmap_spark.cachefs import scratch_dir
+
+    wrap = scratch_dir("sfdir")
+    os.symlink(parquet_dir, os.path.join(wrap, "documents.parquet"))
     return wrap
 
 

@@ -58,11 +58,7 @@ def build_replica(spark, factor: int) -> str:
     mtimes increasing in day order; cached via cachefs (content +
     builder-code keyed, uid-private, atomic). Returns the flat
     directory of day files."""
-    from soil_data_development_tools___arcmap_spark.cachefs import (
-        cached_dir,
-        content_tag,
-        source_salt,
-    )
+    from soil_data_development_tools___arcmap_spark.cachefs import cached_dir
 
     src = os.path.join(os.path.abspath(SF_DIR), "events.parquet")
 
@@ -106,9 +102,7 @@ def build_replica(spark, factor: int) -> str:
         shutil.rmtree(part_dir, ignore_errors=True)
 
     return cached_dir(
-        "evscale",
-        content_tag([src], extra=f"{factor}|{source_salt(build_replica)}"),
-        build,
+        "evscale", [src], build, code=(build_replica,), extra=str(factor)
     )
 
 
@@ -117,11 +111,7 @@ def build_docs_replica(spark, factor: int) -> str:
     replica so id-keyed hashing/salting sees distinct rows), written
     as 16 part files so a one-file-per-trigger replay exercises 16
     genuine state merges; cached via cachefs like the events replica."""
-    from soil_data_development_tools___arcmap_spark.cachefs import (
-        cached_dir,
-        content_tag,
-        source_salt,
-    )
+    from soil_data_development_tools___arcmap_spark.cachefs import cached_dir
 
     src = os.path.join(os.path.abspath(SF_DIR), "documents.parquet")
 
@@ -144,9 +134,7 @@ def build_docs_replica(spark, factor: int) -> str:
                 os.remove(os.path.join(staging, f))
 
     return cached_dir(
-        "docscale",
-        content_tag([src], extra=f"{factor}|{source_salt(build_docs_replica)}"),
-        build,
+        "docscale", [src], build, code=(build_docs_replica,), extra=str(factor)
     )
 
 
@@ -155,11 +143,7 @@ def build_emb_replica(spark, factor: int) -> str:
     replica, parity preserved — the drift monitor's old/new split is
     vec_id % 2, so the shift must be even), written as 16 part files
     for the one-file-per-trigger replay; cachefs-cached."""
-    from soil_data_development_tools___arcmap_spark.cachefs import (
-        cached_dir,
-        content_tag,
-        source_salt,
-    )
+    from soil_data_development_tools___arcmap_spark.cachefs import cached_dir
 
     src = os.path.join(os.path.abspath(SF_DIR), "embeddings.parquet")
 
@@ -183,9 +167,7 @@ def build_emb_replica(spark, factor: int) -> str:
                 os.remove(os.path.join(staging, f))
 
     return cached_dir(
-        "embscale",
-        content_tag([src], extra=f"{factor}|{source_salt(build_emb_replica)}"),
-        build,
+        "embscale", [src], build, code=(build_emb_replica,), extra=str(factor)
     )
 
 
@@ -464,8 +446,9 @@ def main() -> None:
                       "text_gate_grow", "text_gate_grow_salted",
                       "video_gate_grow"}
         if only is None or (only & grow_gates):
-            import tempfile
-
+            from soil_data_development_tools___arcmap_spark.cachefs import (
+                scratch_dir,
+            )
             from soil_data_development_tools___arcmap_spark.streaming.docs import (
                 DOCS_SCHEMA,
             )
@@ -473,7 +456,7 @@ def main() -> None:
             docs_dir = build_docs_replica(spark, factor)
             # the gate runners read the corpus from
             # <sf_dir>/documents.parquet; present the replica that way
-            wrap = tempfile.mkdtemp(prefix="growgate_sf_")
+            wrap = scratch_dir("growgate_sf")
             os.symlink(docs_dir, os.path.join(wrap, "documents.parquet"))
 
             def gsrc():
@@ -580,7 +563,7 @@ def main() -> None:
                 )
 
                 sdir = build_salted_docs_replica(spark, factor)
-                swrap = tempfile.mkdtemp(prefix="growgate_salted_sf_")
+                swrap = scratch_dir("growgate_salted_sf")
                 os.symlink(sdir, os.path.join(swrap, "documents.parquet"))
                 ssrc = (
                     spark.readStream.schema(DOCS_SCHEMA)
